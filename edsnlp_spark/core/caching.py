@@ -1,213 +1,155 @@
-"""Tracked persists: bounded cache lifetime for lazily-returned plans.
+"""One cache-lifetime rule: a persisted plane is leased to a call's owner.
 
-Several operators persist derived planes (cue tables, section tables,
-date-mention planes, SemDeDup cell assignments) that the RETURNED lazy
-DataFrame still references — unpersisting before the caller
-materializes would silently re-execute the subtree (the round-1 100x
-lazy-blowup), and eagerly materializing inside the operator hits the
-round-3 measured cliff (persisting history's evidence plane: 8x slower
-+ codegen fallback).  So the planes must stay cached until the caller
-is done.
+Operators persist derived planes (cue tables, section tables, signature
+tables, ...) that the lazy DataFrame they RETURN still reads.  The
+lease cannot end inside the operator: unpersisting before the caller
+materializes the result makes Spark silently re-execute the plane's
+whole subtree on every reference (the lazy-recompute blowup, measured
+at 100x on a 500-note qualifier), and materializing eagerly inside the
+operator costs an extra pass per plane (8x slower on history's
+evidence plane).  So the planes outlive the operator call, and this
+module says when they end.
 
-This module makes that lifetime explicit instead of leaky (ADVICE r3):
-operators register their internal persists under a scope name, and a
-long-lived session calls :func:`release` after materializing the
-output (or ``spark.catalog.clearCache()``, which Spark itself provides
-for the blunt version).  The registry holds the Python wrapper (a few
-hundred bytes) — the JVM-side cache it controls is the real memory,
-and the wrapper is the only handle through which it can be dropped
-(the cache outlives the wrapper's Python scope).
+The rule.  Every persist goes through :func:`persist`, which leases the
+plane to the owner of the outermost active call (:func:`lease`, or the
+:func:`leased` decorator).  The owner is the engine instance for a
+method, the function itself for a module function, and the ``SparkNLP``
+object for ``pipe``/``__call__``.  Nested calls end nothing; their
+planes join the outermost call's lease.  A lease ends when either:
+
+- the same owner's next top-level call begins, or
+- ``release(owner)`` is called (``release()`` ends every lease).
+
+Eager entry points end their own lease once their action has consumed
+the result: ``SparkNLP.__call__`` after its collect, each streaming
+micro-batch after its writes, ``SharedEmbedding.release()``.  A plane
+released while a result still reads it stays correct: Spark recomputes
+it.  Equal plans share one Spark cache, so ending one lease also drops
+an equal plane persisted under another owner.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
+import inspect
+import threading
 
+from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-_TRACKED: dict[str, list[DataFrame]] = {}
-# (scope, id(owner)) -> planes registered during that owner's LAST
-# top-level scope_call — released when the same owner re-enters.
-_OWNED: dict[tuple[str, int], list[DataFrame]] = {}
-_OWNER_STACK: list[tuple[str, int]] = []
+# id(owner) -> (owner, planes leased to it).  Holding the owner keeps
+# its id from being reused by another object while the lease lives.
+# Streaming micro-batches lease from their own thread, hence the lock.
+_LEASES: dict[int, tuple[object, list[DataFrame]]] = {}
+_LOCK = threading.Lock()
 
 
-def tracked_persist(df: DataFrame, scope: str,
-                    storage_level: StorageLevel | None = None) -> DataFrame:
-    """persist() + register under ``scope`` for later :func:`release`.
+class _Active(threading.local):
+    """Owners of this thread's active calls, outermost first (a
+    streaming micro-batch runs on its own thread)."""
+
+    def __init__(self):
+        self.owners: list = []
+
+
+_ACTIVE = _Active()
+
+
+def persist(df: DataFrame,
+            storage_level: StorageLevel | None = None) -> DataFrame:
+    """``df.persist()``, leased to the outermost active call's owner.
 
     ``storage_level``: pass ``StorageLevel.DISK_ONLY`` for corpus-sized
     planes that exist only as a codegen barrier (e.g. the sentences
-    array before ``explode``) — at 100 TB a memory cache of the whole
-    corpus would evict everything else, while a disk cache is a
-    sequential spill the size of one derived column.
-    """
+    array before ``explode``): a memory cache of the whole corpus would
+    evict everything else.  A call-local plane may be unpersisted
+    before the lease ends; the lease then forgets it."""
+    if not _ACTIVE.owners:
+        raise RuntimeError(
+            "caching.persist outside a leased call: run the caller "
+            "under caching.lease(owner) or decorate it with "
+            "@caching.leased")
     df = df.persist(storage_level) if storage_level is not None \
         else df.persist()
-    _TRACKED.setdefault(scope, []).append(df)
-    for key in reversed(_OWNER_STACK):
-        if key[0] == scope:
-            _OWNED.setdefault(key, []).append(df)
-            break
+    owner = _ACTIVE.owners[0]
+    with _LOCK:
+        planes = _LEASES.setdefault(id(owner), (owner, []))[1]
+        planes[:] = [p for p in planes if p.is_cached]
+        planes.append(df)
     return df
 
 
 @contextlib.contextmanager
-def scope_call(scope: str, owner: object = None):
-    """Top-level operator-call boundary for ``scope`` (ADVICE r4 /
-    VERDICT r5 #7): on (re-)entry, the planes registered by the SAME
-    owner's PREVIOUS call are released, so repeated
-    ``qualify()``/``date_table()`` calls without an explicit
-    :func:`release` hold a bounded number of cached planes.
-
-    - Nested calls by the same owner (``qualify`` -> ``date_table``)
-      are reentrant no-ops: only the outermost entry releases.
-    - DIFFERENT owners sharing a scope (a facade pipeline chaining
-      several qualifier engines before materializing) never release
-      each other's planes — the hazard would be unpersisting a plane a
-      still-lazy downstream plan references (the round-1 100x blowup).
-    - A released plane stays CORRECT if its DataFrame is materialized
-      later — Spark just recomputes the subtree; boundedness trades
-      that recompute for not leaking one cache per call.
-    """
-    key = (scope, id(owner))
-    if key not in _OWNER_STACK:
-        for df in _OWNED.pop(key, ()):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-            try:
-                _TRACKED.get(scope, []).remove(df)
-            except ValueError:
-                pass
-    _OWNER_STACK.append(key)
+def lease(owner: object):
+    """Run the block as a call by ``owner``.  When no call is active on
+    this thread this is a top-level call: it first ends ``owner``'s
+    previous lease, and every plane persisted inside it, by any nested
+    call, is leased to ``owner``."""
+    owners = _ACTIVE.owners
+    if not owners:
+        _end([id(owner)])
+    owners.append(owner)
     try:
         yield
     finally:
-        _OWNER_STACK.remove(key)
+        owners.pop()
 
 
-def scoped(scope: str, *, method: bool = False):
-    """Decorator form of :func:`scope_call` for operator entry points.
+def leased(fn):
+    """Decorator form of :func:`lease`.  The owner is the instance for
+    a method (first parameter ``self``) and the decorated function
+    itself otherwise, so ``release(module.fn)`` ends its lease."""
+    method = next(iter(inspect.signature(fn).parameters), None) == "self"
 
-    ``method=True`` uses the bound instance (``args[0]``) as the owner,
-    so each engine instance only ever releases its OWN previous call's
-    planes; module-level functions share one ``None`` owner."""
-    import functools
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            owner = args[0] if method and args else None
-            with scope_call(scope, owner):
-                return fn(*args, **kwargs)
-        return wrapper
-    return deco
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        with lease(args[0] if method else call):
+            return fn(*args, **kwargs)
+    return call
 
 
-def release(scope: str | None = None) -> int:
-    """Unpersist every tracked plane (one scope, or all).
+def release(owner: object = None) -> int:
+    """End ``owner``'s lease, or every lease when no owner is given;
+    returns the number of planes unpersisted.  Call it after the result
+    has been materialized.  The full release also clears the
+    expression-template memo cache, whose py4j handles are tied to the
+    session being cleaned up after."""
+    if owner is not None:
+        return _end([id(owner)])
+    from ..functions.memo import memo_clear
+    memo_clear()
+    with _LOCK:
+        keys = list(_LEASES)
+    return _end(keys)
 
-    Call AFTER materializing the operator's output; the next call to
-    the operator re-persists fresh planes.  Returns the number of
-    planes released."""
-    if scope is None:
-        # full release (long-lived session housekeeping) also drops the
-        # expression-template memo cache — its py4j handles are tied to
-        # the session the caller is cleaning up after (VERDICT r5 #4).
-        from ..functions.memo import memo_clear
-        memo_clear()
-    scopes = [scope] if scope is not None else list(_TRACKED)
+
+def _end(keys) -> int:
+    with _LOCK:
+        ended = [_LEASES.pop(key, (None, ()))[1] for key in keys]
     n = 0
-    for s in scopes:
-        for df in _TRACKED.pop(s, []):
+    for planes in ended:
+        for df in planes:
+            if not df.is_cached:
+                continue
             try:
                 df.unpersist()
                 n += 1
-            except Exception:
-                pass
-        for key in [k for k in _OWNED if k[0] == s]:
-            del _OWNED[key]
+            except Py4JError:
+                pass  # its session has stopped, and its cache with it
     return n
-
-
-def release_plane(df: DataFrame, scope: str) -> None:
-    """Unpersist ONE tracked plane mid-operator (ADVICE r7 #1: iterative
-    operators like bpe_train otherwise hold every iteration's plane
-    until the scope's next top-level entry).  Only safe once the plane's
-    SUCCESSOR is materialized — unpersisting earlier silently recomputes
-    the subtree (the round-1 100x lazy blowup)."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
-    try:
-        _TRACKED.get(scope, []).remove(df)
-    except ValueError:
-        pass
-    for key in [k for k in _OWNED if k[0] == scope]:
-        try:
-            _OWNED[key].remove(df)
-        except ValueError:
-            pass
 
 
 def tracked_scopes() -> dict[str, int]:
-    """scope -> number of tracked planes (for tests/debugging)."""
-    return {s: len(refs) for s, refs in _TRACKED.items()}
-
-
-def snapshot() -> dict[str, list[DataFrame]]:
-    """Marker for :func:`release_since`: the IDENTITY of every tracked
-    plane right now (strong refs — the same wrappers ``_TRACKED``
-    already holds, so no extra JVM state is pinned).
-
-    Identities, not per-scope COUNTS (ADVICE r7 #2): with counts, a
-    pre-snapshot plane removed mid-batch (e.g. a same-owner
-    ``scope_call`` re-entry inside the batch shrinking the list) slid
-    newly registered planes below the saved index and silently kept
-    them — leaking cache across micro-batches."""
-    return {s: list(refs) for s, refs in _TRACKED.items()}
-
-
-def release_since(snap: dict[str, list[DataFrame]]) -> int:
-    """Unpersist every tracked plane NOT present in ``snap`` (from
-    :func:`snapshot`); planes that existed at snapshot time are
-    untouched wherever they now sit in the registry.
-
-    This is the bounded-lifetime primitive for long-running streaming
-    queries (ADVICE r6 #1): a ``foreachBatch`` body that builds fresh
-    engines each micro-batch registers fresh planes under fresh owners,
-    and ``scope_call``'s per-owner release never fires for them — so
-    the stream wrapper snapshots before the batch and releases the
-    delta after the batch output is WRITTEN (safe: micro-batches are
-    sequential, nothing lazy still references the batch's planes).
-    Returns the number of planes released."""
-    n = 0
-    for s in list(_TRACKED):
-        keep_ids = {id(df) for df in snap.get(s, [])}
-        kept: list[DataFrame] = []
-        new: list[DataFrame] = []
-        for df in _TRACKED[s]:
-            (kept if id(df) in keep_ids else new).append(df)
-        if kept:
-            _TRACKED[s] = kept
-        else:
-            del _TRACKED[s]
-        for df in new:
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass
-            for owned in _OWNED.values():
-                try:
-                    owned.remove(df)
-                except ValueError:
-                    pass
-    # drop empty owner buckets so long streams don't grow the dict
-    for key in [k for k, v in _OWNED.items() if not v]:
-        del _OWNED[key]
-    return n
+    """owner name -> number of planes its lease keeps cached (the name
+    is the function's or the owner class's qualified name)."""
+    with _LOCK:
+        leases = [(owner, list(planes)) for owner, planes in _LEASES.values()]
+    out: dict[str, int] = {}
+    for owner, planes in leases:
+        n = sum(p.is_cached for p in planes)
+        if n:
+            name = getattr(owner, "__qualname__", type(owner).__qualname__)
+            out[name] = out.get(name, 0) + n
+    return out

@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import registry
+from . import caching
 from .base import Pipeline
 from ..operators.tokenizer import Normalizer, Tokenizer
 from ..operators.sentences import SentenceSegmenter
@@ -83,13 +84,17 @@ class SparkNLP:
         with open(os.path.join(path, "config.json"), "w") as f:
             f.write(blob)
 
+    @caching.leased
     def prepare(self, notes: DataFrame) -> DataFrame:
         """notes plane with tokens/norm/sentences (persisted: several
         downstream pipes re-read it)."""
-        return self._prep(notes).persist()
+        return caching.persist(self._prep(notes))
 
+    @caching.leased
     def pipe(self, notes: DataFrame) -> DataFrame:
-        """Distributed corpus annotation -> entities plane."""
+        """Distributed corpus annotation -> entities plane.  The planes
+        it persists are leased to this object: they live until its next
+        ``pipe``/``__call__`` or ``caching.release(nlp)``."""
         from ..functions.span_getters import union_span_groups
 
         prepared = self.prepare(notes)
@@ -106,7 +111,10 @@ class SparkNLP:
         list of entity Rows for one text."""
         spark = spark or SparkSession.active()
         df = spark.createDataFrame([(0, text)], "note_id long, note_text string")
-        return self.pipe(df).collect()
+        try:
+            return self.pipe(df).collect()
+        finally:
+            caching.release(self)
 
 
 def blank() -> SparkNLP:

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.caching import release_plane, scoped, tracked_persist
+from ..core import caching
 
 
 def _apply_merge(symbols, left: str, right: str):
@@ -60,7 +60,7 @@ def _apply_merge(symbols, left: str, right: str):
     return F.aggregate(symbols, F.array().cast("array<string>"), step)
 
 
-@scoped("bpe")
+@caching.leased
 def bpe_train(docs: DataFrame, n_merges: int = 50,
               id_col: str = "doc_id", text_col: str = "text",
               end_of_word: str = "</w>") -> list[tuple[str, str]]:
@@ -85,7 +85,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
             F.array(F.lit(end_of_word)),
         ).alias("sym"),
     )
-    vocab = tracked_persist(vocab, "bpe")
+    vocab = caching.persist(vocab)
     merges: list[tuple[str, str]] = []
     # ADVICE r7 #1: at most ~2 vocab planes stay cached.  ``retired``
     # is the previous round's plane, dropped as soon as its successor
@@ -95,40 +95,45 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
     # checkpoint RDD blocks are freed by the ContextCleaner when the
     # Python handle is rebound.
     retired: DataFrame | None = None
-    for i in range(n_merges):
-        pairs = (
-            vocab.select(
-                "freq",
-                F.explode(F.zip_with(
-                    F.slice(F.col("sym"), 1, F.size("sym") - 1),
-                    F.slice(F.col("sym"), 2, F.size("sym") - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )).alias("p"),
+    try:
+        for i in range(n_merges):
+            pairs = (
+                vocab.select(
+                    "freq",
+                    F.explode(F.zip_with(
+                        F.slice(F.col("sym"), 1, F.size("sym") - 1),
+                        F.slice(F.col("sym"), 2, F.size("sym") - 1),
+                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+                    )).alias("p"),
+                )
+                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                .agg(F.sum("freq").alias("c"))
             )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("c"))
-        )
-        top = pairs.orderBy(F.col("c").desc(), "l", "r").limit(1).collect()
-        # the collect materialized ``vocab``; its predecessor is free
+            top = pairs.orderBy(F.col("c").desc(), "l", "r").limit(1).collect()
+            # the collect materialized ``vocab``; its predecessor is free
+            if retired is not None:
+                retired.unpersist()
+                retired = None
+            if not top or top[0]["c"] < 2:
+                break
+            left, right = top[0]["l"], top[0]["r"]
+            merges.append((left, right))
+            new_vocab = vocab.select(
+                "freq", _apply_merge(F.col("sym"), left, right).alias("sym"))
+            # cut lineage: each round adds a projection + fold on top of the
+            # last; checkpoint keeps the logical plan O(1) across rounds
+            if (i + 1) % 8 == 0:
+                new_vocab = new_vocab.localCheckpoint(eager=True)
+                # eager checkpoint already materialized the successor
+                vocab.unpersist()
+            else:
+                new_vocab = caching.persist(new_vocab)
+                retired = vocab
+            vocab = new_vocab
+    finally:
+        vocab.unpersist()
         if retired is not None:
-            release_plane(retired, "bpe")
-            retired = None
-        if not top or top[0]["c"] < 2:
-            break
-        left, right = top[0]["l"], top[0]["r"]
-        merges.append((left, right))
-        new_vocab = vocab.select(
-            "freq", _apply_merge(F.col("sym"), left, right).alias("sym"))
-        # cut lineage: each round adds a projection + fold on top of the
-        # last; checkpoint keeps the logical plan O(1) across rounds
-        if (i + 1) % 8 == 0:
-            new_vocab = new_vocab.localCheckpoint(eager=True)
-            # eager checkpoint already materialized the successor
-            release_plane(vocab, "bpe")
-        else:
-            new_vocab = tracked_persist(new_vocab, "bpe")
-            retired = vocab
-        vocab = new_vocab
+            retired.unpersist()
     return merges
 
 
@@ -191,7 +196,7 @@ def _adopt_disjoint(candidates: list[tuple[str, str]],
     return adopted
 
 
-@scoped("bpe")
+@caching.leased
 def bpe_train_batched(docs: DataFrame, n_merges: int = 50,
                       batch: int = 64,
                       id_col: str = "doc_id", text_col: str = "text",
@@ -271,57 +276,62 @@ def bpe_train_batched(docs: DataFrame, n_merges: int = 50,
             F.array(F.lit(end_of_word)),
         ).alias("sym"),
     )
-    vocab = tracked_persist(vocab, "bpe")
+    vocab = caching.persist(vocab)
     merges: list[tuple[str, str]] = []
     retired: DataFrame | None = None
-    while len(merges) < n_merges:
-        pairs = (
-            vocab.select(
-                "freq",
-                F.explode(F.zip_with(
-                    F.slice(F.col("sym"), 1, F.size("sym") - 1),
-                    F.slice(F.col("sym"), 2, F.size("sym") - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )).alias("p"),
+    try:
+        while len(merges) < n_merges:
+            pairs = (
+                vocab.select(
+                    "freq",
+                    F.explode(F.zip_with(
+                        F.slice(F.col("sym"), 1, F.size("sym") - 1),
+                        F.slice(F.col("sym"), 2, F.size("sym") - 1),
+                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+                    )).alias("p"),
+                )
+                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                .agg(F.sum("freq").alias("c"))
             )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("c"))
-        )
-        want = min(batch, n_merges - len(merges))
-        # top-M collect, M bounded by config: enough headroom to find
-        # `want` disjoint pairs even when the head of the count table
-        # chains through shared symbols
-        top = (pairs.filter(F.col("c") >= 2)
-               .orderBy(F.col("c").desc(), "l", "r")
-               .limit(4 * want + 8).collect())
+            want = min(batch, n_merges - len(merges))
+            # top-M collect, M bounded by config: enough headroom to find
+            # `want` disjoint pairs even when the head of the count table
+            # chains through shared symbols
+            top = (pairs.filter(F.col("c") >= 2)
+                   .orderBy(F.col("c").desc(), "l", "r")
+                   .limit(4 * want + 8).collect())
+            if retired is not None:
+                # this round's collect materialized the lazy checkpoint of
+                # the current vocab, so its predecessor is now free —
+                # never sooner, or the fold would recompute from scratch
+                retired.unpersist()
+                retired = None
+            adopted = _adopt_disjoint(
+                [(row["l"], row["r"]) for row in top], want)
+            if not adopted:
+                break
+            merges.extend(adopted)
+            if len(merges) >= n_merges:
+                # the final round's successor vocab is never read (the
+                # trainer returns merges only) — building and eagerly
+                # checkpointing it was a pure wasted materialization
+                # (r15, guide §1.2 "don't compute things you throw away")
+                break
+            # one fold applies the whole round; a LAZY checkpoint still
+            # cuts lineage at materialization time (old checkpoint blocks
+            # are freed by the ContextCleaner when the Python handle
+            # rebinds) but folds the checkpoint write into the NEXT
+            # round's top-M collect job instead of paying a dedicated job
+            # per round (r15; mirrors the wordpiece trainer)
+            retired = vocab
+            vocab = vocab.select(
+                "freq",
+                _apply_merge_batch(F.col("sym"), adopted).alias("sym"),
+            ).localCheckpoint(eager=False)
+    finally:
+        vocab.unpersist()
         if retired is not None:
-            # this round's collect materialized the lazy checkpoint of
-            # the current vocab, so its predecessor is now free —
-            # never sooner, or the fold would recompute from scratch
-            release_plane(retired, "bpe")
-            retired = None
-        adopted = _adopt_disjoint(
-            [(row["l"], row["r"]) for row in top], want)
-        if not adopted:
-            break
-        merges.extend(adopted)
-        if len(merges) >= n_merges:
-            # the final round's successor vocab is never read (the
-            # trainer returns merges only) — building and eagerly
-            # checkpointing it was a pure wasted materialization
-            # (r15, guide §1.2 "don't compute things you throw away")
-            break
-        # one fold applies the whole round; a LAZY checkpoint still
-        # cuts lineage at materialization time (old checkpoint blocks
-        # are freed by the ContextCleaner when the Python handle
-        # rebinds) but folds the checkpoint write into the NEXT
-        # round's top-M collect job instead of paying a dedicated job
-        # per round (r15; mirrors the wordpiece trainer)
-        retired = vocab
-        vocab = vocab.select(
-            "freq",
-            _apply_merge_batch(F.col("sym"), adopted).alias("sym"),
-        ).localCheckpoint(eager=False)
+            retired.unpersist()
     return merges
 
 

@@ -25,6 +25,7 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..core import caching
 from ..core.base import Transformer
 from .matcher import PhraseMatcher
 from .. import registry
@@ -73,17 +74,18 @@ class ContextualMatcher(Transformer):
             cue_groups[f"assign:{a.name}"] = a.terms
         self._cue_m = PhraseMatcher(cue_groups, attr=attr) if cue_groups else None
 
+    @caching.leased
     def entities(self, notes: DataFrame) -> DataFrame:
         anchors = self._anchor_m.entities(notes)
         if self._cue_m is None:
             return anchors
-        cues = self._cue_m.entities(notes).select(
+        cues = caching.persist(self._cue_m.entities(notes).select(
             F.col("note_id").alias("c_note"),
             F.col("label").alias("c_label"),
             F.col("tok_start").alias("c_s"),
             F.col("tok_end").alias("c_e"),
             F.col("lexical_variant").alias("c_text"),
-        ).persist()
+        ))
         rule = self.rule
 
         def cue_sel(kind_label, prefix):

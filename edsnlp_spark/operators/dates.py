@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..core.base import Transformer
 from ..functions.text import let_bound, norm_text
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 from ..functions.memo import memo_column as _memo_column
 from .. import registry
 
@@ -457,7 +457,7 @@ def _str_timedelta(total_secs: Column) -> Column:
     )
 
 
-@scoped("dates")
+@caching.leased
 def temporal_mentions(notes: DataFrame, text_col: str = "note_text") -> DataFrame:
     """ALL temporal mentions (absolute / relative / duration / current)
     as one flat table:
@@ -547,7 +547,7 @@ def temporal_mentions(notes: DataFrame, text_col: str = "note_text") -> DataFram
         F.col("s.label").alias("label"),
         "__text", norm_text(F.col("s.lexical_variant")).alias("__v"),
     )
-    m = tracked_persist(m, "dates")
+    m = caching.persist(m)
     stages = _memo_column(("temporal_classification",),
                           _temporal_classification_stages)
     out = m

@@ -15,7 +15,7 @@ import logging
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 _LOG = logging.getLogger(__name__)
 
@@ -92,6 +92,7 @@ def band_keys(signature: Column, bands: int, rows: int) -> Column:
     ])
 
 
+@caching.leased
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
                       num_hashes: int = 12, bands: int = 6) -> DataFrame:
@@ -110,9 +111,8 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     # Signatures are reused on both sides of the candidate join and for
     # the final estimate: persist once, and keep the candidate join
     # ids-only so the shuffle rows are two longs, not md5 arrays.
-    sig_tbl = sh.select(
-        "id", minhash_signature(F.col("sh"), num_hashes).alias("sig")
-    ).persist()
+    sig_tbl = caching.persist(sh.select(
+        "id", minhash_signature(F.col("sh"), num_hashes).alias("sig")))
     banded = sig_tbl.select(
         "id", F.explode(band_keys(F.col("sig"), bands, rows)).alias("bk")
     )
@@ -141,6 +141,7 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+@caching.leased
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         threshold: float = 0.2,
@@ -179,7 +180,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
             .filter(F.col("jaccard") >= threshold)
         )
     # Stop-shingle path: df-capped candidate join, exact verify join-back.
-    sh = sh.persist()  # referenced 3x (explode + both verify legs)
+    sh = caching.persist(sh)  # referenced 3x (explode + both verify legs)
     ex = sh.select("id", F.explode("sh").alias("s"))
     rare = (
         ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -272,6 +273,7 @@ def simhash64(text: Column) -> Column:
         votes, lambda v: F.when(v > 0, F.lit("1")).otherwise(F.lit("0"))))
 
 
+@caching.leased
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b",
                          max_iter: int = 25,
@@ -318,10 +320,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     the RuntimeError ever fires in practice.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
+    edges = caching.persist(
         e.union(e.select(F.col("dst").alias("src"),
                          F.col("src").alias("dst")))
-        .distinct().persist()
+        .distinct()
     )
     # Lineage MUST be cut every round (eager localCheckpoint), not just
     # cached: each round's plan references the previous labels TWICE
@@ -562,7 +564,7 @@ def _window_hash_rows(docs: DataFrame, n: int, id_col: str,
     )
 
 
-@scoped("dedup")
+@caching.leased
 def duplicated_windows(docs: DataFrame, n: int = 13,
                        id_col: str = "doc_id",
                        text_col: str = "text",
@@ -608,10 +610,9 @@ def duplicated_windows(docs: DataFrame, n: int = 13,
     """
     # wins feeds BOTH the count and the join-back; unpersisted, the
     # text scan + lookahead regexp would run twice.  The plane is three
-    # ints per token (far smaller than the text it derives from);
-    # tracked under the 'dedup' scope like the other candidate planes.
-    wins = tracked_persist(
-        _window_hash_rows(docs, n, id_col, text_col), "dedup")
+    # ints per token (far smaller than the text it derives from).
+    wins = caching.persist(
+        _window_hash_rows(docs, n, id_col, text_col))
     counts = wins.groupBy("h").agg(
         F.count(F.lit(1)).alias("occurrences"))
     counts = counts.filter(F.col("occurrences") >= 2)
@@ -624,7 +625,7 @@ def duplicated_windows(docs: DataFrame, n: int = 13,
     )
 
 
-@scoped("dedup")
+@caching.leased
 def strip_duplicated_spans(docs: DataFrame, n: int = 13,
                            id_col: str = "doc_id",
                            text_col: str = "text") -> DataFrame:
@@ -648,8 +649,8 @@ def strip_duplicated_spans(docs: DataFrame, n: int = 13,
     it overlaps another removed occurrence (e.g. a self-repeating
     doc) — inherent to span-union semantics and matched by the oracle.
     """
-    wins = tracked_persist(
-        _window_hash_rows(docs, n, id_col, text_col), "dedup")
+    wins = caching.persist(
+        _window_hash_rows(docs, n, id_col, text_col))
     keep = wins.groupBy("h").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min(F.struct(id_col, "pos")).alias("keeper"),
@@ -742,7 +743,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5, w: int = 4,
     )
 
 
-@scoped("dedup")
+@caching.leased
 def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3,
                           bands: int = 4, id_col: str = "doc_id",
                           text_col: str = "text",
@@ -810,7 +811,7 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3,
         .cast("long")
         for b in range(bands)
     ]).alias("bv"))
-    base = tracked_persist(base, "dedup")
+    base = caching.persist(base)
     banded = base.select("id", F.posexplode("bv").alias("bi", "v"))
     if max_df is not None:
         hot = (
@@ -849,7 +850,6 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3,
     )
 
 
-@scoped("dedup")
 def cross_duplicated_windows(new_docs: DataFrame, ref_docs: DataFrame,
                              n: int = 13, id_col: str = "doc_id",
                              text_col: str = "text") -> DataFrame:
@@ -989,6 +989,7 @@ def minhash_postings_index(docs: DataFrame, path: str,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
+@caching.leased
 def minhash_index_candidates(spark, path: str, new_docs: DataFrame,
                              id_col: str = "doc_id",
                              text_col: str = "text", n: int = 3,
@@ -1009,10 +1010,10 @@ def minhash_index_candidates(spark, path: str, new_docs: DataFrame,
             f"(index n={meta['n']}, num_hashes={meta['num_hashes']}, "
             f"bands={meta['bands']}) — a different signature config "
             "generates a different pair universe")
-    banded = tracked_persist(
+    banded = caching.persist(
         _minhash_banded(new_docs, id_col, text_col, n,
                         num_hashes, bands)
-        .withColumnRenamed(id_col, "id"), "dedup")
+        .withColumnRenamed(id_col, "id"))
     ref = spark.read.parquet(f"{path}/postings")
     cross = banded.join(
         ref.select(F.col("id").alias("__r"), "bk"), "bk").select(
@@ -1026,7 +1027,7 @@ def minhash_index_candidates(spark, path: str, new_docs: DataFrame,
         .unionByName(self_p).distinct()
 
 
-@scoped("dedup")
+@caching.leased
 def strip_spans_incremental(docs: DataFrame, ref_index: DataFrame | None,
                             n: int = 13, id_col: str = "doc_id",
                             text_col: str = "text") -> DataFrame:
@@ -1052,8 +1053,8 @@ def strip_spans_incremental(docs: DataFrame, ref_index: DataFrame | None,
     index rows, never the accumulated corpus (the index is the
     persistable artifact :func:`cross_duplicated_windows` documents).
     """
-    wins = tracked_persist(
-        _window_hash_rows(docs, n, id_col, text_col), "dedup")
+    wins = caching.persist(
+        _window_hash_rows(docs, n, id_col, text_col))
     keep = wins.groupBy("h").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min(F.struct(id_col, "pos")).alias("keeper"),

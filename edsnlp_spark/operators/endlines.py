@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..core import caching
 from ..core.base import Transformer
 from .. import registry
 
@@ -121,6 +122,7 @@ class EndlinesModel:
 
     # ---- fit / predict ----------------------------------------------
 
+    @caching.leased
     def fit(self, notes: DataFrame, text_col: str = "note_text"):
         from pyspark.ml import Pipeline as MLPipeline
         from pyspark.ml.classification import LogisticRegression
@@ -128,7 +130,7 @@ class EndlinesModel:
             OneHotEncoder, StringIndexer, VectorAssembler,
         )
 
-        lines = self._lines(notes, text_col).persist()
+        lines = caching.persist(self._lines(notes, text_col))
         # SPACE=1: adjacent in-line token pairs (capped per line)
         pairs = lines.filter(F.size("toks") >= 2).select(
             F.explode(
@@ -146,7 +148,7 @@ class EndlinesModel:
             _typo_class(F.col("p.y")).alias("a2"),
             F.lit(1.0).alias("space"),
         )
-        nl = self._newline_rows(lines).persist()
+        nl = caching.persist(self._newline_rows(lines))
         if nl.limit(1).count() == 0:
             lines.unpersist()
             nl.unpersist()

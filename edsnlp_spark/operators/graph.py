@@ -17,13 +17,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 #: damping factor 0.85 as the exact rational 17/20
 _DAMP_NUM, _DAMP_DEN = 17, 20
 
 
-@scoped("graph")
+@caching.leased
 def pagerank(edges: DataFrame, iterations: int = 8,
              scale: int = 1_000_000, max_fanout: int = 8192,
              checkpoint_interval: int = 1,
@@ -93,11 +93,10 @@ def pagerank(edges: DataFrame, iterations: int = 8,
               else F.lit(1).cast("long"))
     # persisted: deg, adj and nodes all derive from it — unpersisted,
     # the (possibly expensive) upstream edge build re-executes 3x
-    e = tracked_persist(
+    e = caching.persist(
         edges.select(F.col(src_col).alias("src"),
                      F.col(dst_col).alias("dst"),
-                     w_expr.alias("w")),
-        "graph")
+                     w_expr.alias("w")))
     deg = e.groupBy("src").agg(F.sum("w").alias("deg"),
                                F.count(F.lit(1)).alias("__fan"))
     n_chunks = F.greatest(
@@ -106,17 +105,16 @@ def pagerank(edges: DataFrame, iterations: int = 8,
     # unweighted adjacency stays a plain long array (struct rows cost
     # ~10% on the explode); weighted carries (dst, w) structs
     dst_entry = (F.struct("dst", "w") if weight_col else F.col("dst"))
-    adj = tracked_persist(
+    adj = caching.persist(
         e.join(deg, "src")
         .withColumn("__chunk", F.pmod(F.xxhash64("dst"), n_chunks))
         .groupBy("src", "__chunk")
         .agg(F.collect_list(dst_entry).alias("dsts"),
              F.first("deg").alias("deg"))
-        .repartition("src"),
-        "graph")
-    nodes = tracked_persist(
+        .repartition("src"))
+    nodes = caching.persist(
         e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node"))).distinct(), "graph")
+        .union(e.select(F.col("dst").alias("node"))).distinct())
     if seeds is None:
         teleport = F.lit(base)
         init = F.lit(int(scale))
@@ -135,11 +133,10 @@ def pagerank(edges: DataFrame, iterations: int = 8,
     # precomputed static leg ∪ the contrib-driven leg — one join per
     # iteration removed, bit-identical ranks by the recurrence.
     if iterations > 0:
-        static = tracked_persist(
+        static = caching.persist(
             nodes.join(e.select(F.col("dst").alias("node")).distinct(),
                        "node", "left_anti")
-            .select("node", teleport.cast("long").alias("rank")),
-            "graph")
+            .select("node", teleport.cast("long").alias("rank")))
     for it in range(iterations):
         joined = adj.join(ranks, adj["src"] == ranks["node"])
         if weight_col:
@@ -166,7 +163,7 @@ def pagerank(edges: DataFrame, iterations: int = 8,
     return ranks
 
 
-@scoped("graph")
+@caching.leased
 def triangle_counts(edges: DataFrame, src_col: str = "src",
                     dst_col: str = "dst") -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over
@@ -199,13 +196,13 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    und = tracked_persist(und, "graph")
+    und = caching.persist(und)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))
         .groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     )
-    deg = tracked_persist(deg, "graph")
+    deg = caching.persist(deg)
     rk = (F.col("deg") * F.lit(8589934592) + F.col("node")).alias("rk")
     ranked = deg.select("node", rk)
     oriented = (
@@ -220,7 +217,7 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
              .otherwise(F.col("u")).alias("b"),
             F.greatest("rku", "rkv").alias("rk_hi"))
     )
-    oriented = tracked_persist(oriented, "graph")
+    oriented = caching.persist(oriented)
     w1 = oriented.select(F.col("a"), F.col("b"),
                          F.col("rk_hi").alias("rk_b"))
     w2 = oriented.select(F.col("a"), F.col("b").alias("c"),
@@ -247,7 +244,7 @@ def triangle_counts(edges: DataFrame, src_col: str = "src",
                       clustering.alias("clustering"))
 
 
-@scoped("graph")
+@caching.leased
 def random_walks(edges: DataFrame, walks_per_node: int = 2,
                  walk_len: int = 6, src_col: str = "src",
                  dst_col: str = "dst",
@@ -297,7 +294,7 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
                      F.col(dst_col).alias("dst"))
     if not assume_distinct:
         e = e.distinct()
-    e = tracked_persist(e, "graph")
+    e = caching.persist(e)
     # deg carries BOTH guards: it feeds every step's neighbor-index
     # pmod, so Catalyst cannot prune it (the repo's in-data-path
     # raise convention).
@@ -312,12 +309,11 @@ def random_walks(edges: DataFrame, walks_per_node: int = 2,
                   "random_walks: negative node ids break the "
                   "'-'-joined walk encoding")))
         .otherwise(F.size("nbrs")).cast("int"))
-    adj = tracked_persist(
+    adj = caching.persist(
         e.groupBy("src").agg(
             F.sort_array(F.collect_list("dst")).alias("nbrs"))
         .select("src", "nbrs", deg_guard.alias("deg"))
-        .repartition("src"),
-        "graph")
+        .repartition("src"))
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node"))).distinct()
              .select(F.when(F.col("node") < 0, F.raise_error(F.lit(
@@ -409,7 +405,7 @@ def skipgram_pairs(walks: DataFrame, window: int = 2,
     )
 
 
-@scoped("graph")
+@caching.leased
 def train_graph_embeddings(pairs: DataFrame, dim: int = 8,
                            iters: int = 1, ratio_scale: int = 64,
                            shift: int = 1, assoc_cap: int = 1 << 20,
@@ -464,11 +460,10 @@ def train_graph_embeddings(pairs: DataFrame, dim: int = 8,
     # unpersisted, the caller's pair-generation subtree (walk explode +
     # groupBy) re-executed per reference (r14; the pagerank edge-plane
     # lesson).  Bounded by distinct (center, context) pairs.
-    p = tracked_persist(
+    p = caching.persist(
         pairs.select(F.col(center_col).cast("long").alias("c"),
                      F.col(context_col).cast("long").alias("x"),
-                     F.col(count_col).cast("long").alias("n")),
-        "graph")
+                     F.col(count_col).cast("long").alias("n")))
     tot = p.agg(F.sum("n").cast("long").alias("D"))
     ncs = p.groupBy("c").agg(F.sum("n").cast("long").alias("nc"))
     # the {-1,+1} sketch entry r_j(x) depends only on the NODE x, so it
@@ -493,7 +488,7 @@ def train_graph_embeddings(pairs: DataFrame, dim: int = 8,
              .crossJoin(F.broadcast(tot))  # 1-row totals
              .select("c", "x", a_expr.alias("a"), "sig")
              .filter(F.col("a") > 0))
-    assoc = tracked_persist(assoc, "graph")
+    assoc = caching.persist(assoc)
     ecols = [f"e{j}" for j in range(d)]
 
     # a-weighted sketch row: the precomputed per-node signs scaled by
@@ -513,7 +508,7 @@ def train_graph_embeddings(pairs: DataFrame, dim: int = 8,
         r13-shape floors 8.8-9.2s vs 9.6-9.7s with 2/5 rounds blown to
         12-19s; reverted per VERDICT r14 #1).  Maxima-as-literals also
         keep the downstream plan smaller."""
-        df = tracked_persist(df, "graph")
+        df = caching.persist(df)
         s = df.agg(*[F.max(F.abs(F.col(e))).alias(e)
                      for e in ecols]).first()
         cols = []

@@ -51,7 +51,7 @@ from .qualifiers import QualifierEngine, HISTORY_CUES
 from .sections import SectionSegmenter
 from .. import registry
 from ..functions.text import let_bound
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 # Superset gate for any text temporal_mentions could classify as
 # history/recent evidence.  Every non-digit-bearing temporal pattern
@@ -103,7 +103,7 @@ class HistoryQualifier:
 
     # -- date evidence ---------------------------------------------------
 
-    @scoped("history", method=True)
+    @caching.leased
     def date_table(self, notes: DataFrame) -> DataFrame:
         """Classified date evidence: one row per kept mention with
         (d_note, tok_s, tok_e, sent_s, sent_e, is_recent)."""
@@ -154,7 +154,7 @@ class HistoryQualifier:
         # with this join's doConsume overflows the 64 KB codegen limit;
         # persisting the compact mention plane keeps both stages
         # compiled (see temporal_mentions for the same pattern).
-        d = tracked_persist(d, "history")
+        d = caching.persist(d)
 
         from ..functions.memo import memo_column
         wc, keep, args = memo_column(
@@ -168,7 +168,7 @@ class HistoryQualifier:
 
     # -- main ------------------------------------------------------------
 
-    @scoped("history", method=True)
+    @caching.leased
     def qualify(self, notes: DataFrame, entities: DataFrame) -> DataFrame:
         eng = self.engine
 
@@ -201,20 +201,18 @@ class HistoryQualifier:
                  **{"__sec__" + k: list(v)
                     for k, v in self.sections.sections.items()}},
                 attr=eng.attr, span_type="cue")
-            rows = tracked_persist(merged.entities(notes), "history")
+            rows = caching.persist(merged.entities(notes))
             is_sec = F.col("label").startswith("__sec__")
             cues = rows.filter(~is_sec).select(
                 "note_id", "tok_start", "tok_end",
                 F.col("label").alias("cue_class"))
             headers = rows.filter(is_sec).withColumn(
                 "label", F.expr("substring(label, 8)"))
-            st = tracked_persist(
-                self.sections.sections_table(notes, headers=headers),
-                "history")
+            st = caching.persist(
+                self.sections.sections_table(notes, headers=headers))
         elif self.use_sections:
             cues = eng._cue_table(notes)
-            st = tracked_persist(self.sections.sections_table(notes),
-                                 "history")
+            st = caching.persist(self.sections.sections_table(notes))
         else:
             cues = eng._cue_table(notes)
             st = None
@@ -226,7 +224,7 @@ class HistoryQualifier:
                 (F.col("tok_start") + 1).cast("int").alias("tok_end"),
                 F.lit("termination").alias("cue_class")))
             hist_secs = st.filter(F.col("section").isin(*self.section_names))
-        cues = tracked_persist(cues, "history")
+        cues = caching.persist(cues)
         bounds = eng._boundaries(notes, cues)
 
         # Per-note evidence arrays in ONE shuffle (r4 VERDICT #5): every

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 
 def _prf(per: DataFrame) -> DataFrame:
@@ -288,7 +288,7 @@ def rouge_l(cands: DataFrame, refs: DataFrame,
         F.round(f, 4).alias("f1"))
 
 
-@scoped("metrics")
+@caching.leased
 def binary_auc_calibration(scored: DataFrame, score_col: str = "score",
                            label_col: str = "label",
                            n_buckets: int = 10) -> DataFrame:
@@ -332,10 +332,9 @@ def binary_auc_calibration(scored: DataFrame, score_col: str = "score",
     # shuffle re-executes once per reference (measured 0.52 -> 1.24s
     # at sf0.1 when the r14 two-pass prefix sum added the extra
     # reference).  The plane is bounded at <= 1e6 + 1 rows.
-    agg = tracked_persist(
+    agg = caching.persist(
         d.groupBy("s6").agg(F.count(F.lit(1)).alias("c"),
-                            F.sum("y").alias("p")),
-        "metrics")
+                            F.sum("y").alias("p")))
     # two-pass range-partitioned prefix sum (r14, VERDICT r13 #8): the
     # former global Window.orderBy("s6") funneled the whole (bounded,
     # but up to 1e6+1-row) plane through ONE task.  s6 DIV 16384 gives

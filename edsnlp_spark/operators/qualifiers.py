@@ -49,7 +49,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..core.base import Transformer
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 from .matcher import PhraseMatcher, RegexMatcher
 from .. import registry
 
@@ -299,7 +299,7 @@ class QualifierEngine(Transformer):
 
     # -- public API --------------------------------------------------------
 
-    @scoped("qualifier", method=True)
+    @caching.leased
     def qualify(self, notes: DataFrame, entities: DataFrame,
                 sections: DataFrame | None = None) -> DataFrame:
         """entities (flat plane, with tok_start/tok_end) + boolean column
@@ -314,9 +314,8 @@ class QualifierEngine(Transformer):
         followed by a grouped max — no semi-join + join-back double pass.
         Duplicate entity rows (identical on all columns) collapse.
         """
-        cues = tracked_persist(self._cue_table(notes), "qualifier")
-        bounds = tracked_persist(self._boundaries(notes, cues),
-                                 "qualifier")
+        cues = caching.persist(self._cue_table(notes))
+        bounds = caching.persist(self._boundaries(notes, cues))
         ents_b = self._assign_boundary_overlap(entities, bounds)
         active = cues.filter(F.col("cue_class") != "termination")
         cues_b = self._assign_boundary(active, bounds, "tok_start").select(

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 
 def _tokens(text: Column) -> Column:
@@ -34,7 +34,7 @@ def _tokens(text: Column) -> Column:
     return F.split(F.lower(text), " ", -1)
 
 
-@scoped("retrieval")
+@caching.leased
 def bm25_topk(docs: DataFrame, terms: list[str], k: int = 10,
               k1: float = 1.2, b: float = 0.75,
               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -47,8 +47,8 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 10,
     numeric) is persisted because it is read twice (corpus-statistics
     aggregate + scoring): re-deriving it would re-scan the full TEXT
     column, which at corpus scale costs far more than caching a few
-    numeric columns.  Tracked under the 'retrieval' scope; repeated
-    calls release the previous call's plane.
+    numeric columns.  Leased like every persisted plane: the next
+    top-level call releases the previous call's plane.
     """
     if not terms:
         raise ValueError("bm25_topk requires at least one query term")
@@ -57,11 +57,11 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 10,
         F.size(F.filter(toks, _eq(t))).cast("double").alias(f"tf{i}")
         for i, t in enumerate(terms)
     ]
-    base = tracked_persist(docs.select(
+    base = caching.persist(docs.select(
         F.col(id_col),
         F.size(toks).cast("double").alias("dl"),
         *tf_cols,
-    ), "retrieval")
+    ))
     stats = base.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.sum("dl").alias("sum_dl"),
@@ -99,7 +99,7 @@ def _eq(term: str):
     return pred
 
 
-@scoped("retrieval")
+@caching.leased
 def bm25_topk_batch(docs: DataFrame, queries: DataFrame, k: int = 10,
                     k1: float = 1.2, b: float = 0.75,
                     id_col: str = "doc_id", text_col: str = "text",
@@ -148,7 +148,7 @@ def bm25_topk_batch(docs: DataFrame, queries: DataFrame, k: int = 10,
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
     # read 2x (df, scoring join) — tiny after the term filter
-    postings = tracked_persist(postings, "retrieval")
+    postings = caching.persist(postings)
     # Corpus stats WITHOUT a second tokenize pass (r15, guide §2.3):
     # size(split(lower(t), ' ', -1)) == regexp_count(t, ' ') + 1 exactly
     # (split -1 keeps empties so size = separators + 1, and no Unicode
@@ -431,7 +431,7 @@ def _index_stats(spark, path: str):
                  F.max("n_buckets").alias("n_buckets")).first())
 
 
-@scoped("retrieval")
+@caching.leased
 def bm25_topk_indexed(spark, path: str, queries: DataFrame,
                       k: int = 10, k1: float = 1.2, b: float = 0.75,
                       query_id_col: str = "query_id",
@@ -468,7 +468,7 @@ def bm25_topk_indexed(spark, path: str, queries: DataFrame,
         .select("term", "doc_id", F.col("tf").cast("double").alias("tf"),
                 F.col("dl").cast("double").alias("dl"))
     )
-    postings = tracked_persist(postings, "retrieval")
+    postings = caching.persist(postings)
     term_df = postings.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df"))
     qterms = (

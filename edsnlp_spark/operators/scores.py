@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..core import caching
 from ..core.base import Transformer
 from .. import registry
 
@@ -202,6 +203,7 @@ class AdicapDecoder(Transformer):
         self.text_col = text_col
         self.requires = ("note_id", text_col)
 
+    @caching.leased
     def entities(self, df: DataFrame) -> DataFrame:
         spark = df.sparkSession
         raw = F.regexp_extract_all(
@@ -213,7 +215,7 @@ class AdicapDecoder(Transformer):
         ).withColumn("code", F.regexp_replace("raw_code", r"[^A-Za-z0-9 ]+", ""))
 
         from ..resources import load_resource
-        dims = load_resource(spark, "adicap").persist()
+        dims = caching.persist(load_resource(spark, "adicap"))
 
         def dim_lookup(dim: str, out: str):
             adicap_dim = (

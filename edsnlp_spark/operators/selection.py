@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 _TWO60 = float(1 << 60)
 
@@ -100,7 +100,7 @@ def dsir_log_ratio_table(raw: DataFrame, target: DataFrame,
     return _ratio_from_counts(tf, rf, b)
 
 
-@scoped("selection")
+@caching.leased
 def dsir_weights(raw: DataFrame, target: DataFrame, b: int = 4096,
                  id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
@@ -113,10 +113,9 @@ def dsir_weights(raw: DataFrame, target: DataFrame, b: int = 4096,
     would re-scan the full text column twice (measured ~1.4x whole-
     query).  The ratio table (<= b rows) is broadcast; the per-doc sum
     is one groupBy(doc) with partial aggregation."""
-    per_doc = tracked_persist(
+    per_doc = caching.persist(
         hashed_ngram_features(raw, b, id_col, text_col)
-        .groupBy(id_col, "bkt").agg(F.count(F.lit(1)).alias("n")),
-        "selection")
+        .groupBy(id_col, "bkt").agg(F.count(F.lit(1)).alias("n")))
     rf = per_doc.groupBy("bkt").agg(F.sum("n").alias("cr"))
     tf = hashed_ngram_features(target, b, id_col, text_col) \
         .groupBy("bkt").agg(F.count(F.lit(1)).alias("ct"))
@@ -336,7 +335,7 @@ def source_vocab_saturation(docs: DataFrame, p: int = 9,
     )
 
 
-@scoped("selection")
+@caching.leased
 def source_divergence(docs: DataFrame, b: int = 4096,
                       source_col: str = "source",
                       id_col: str = "doc_id",
@@ -364,10 +363,9 @@ def source_divergence(docs: DataFrame, b: int = 4096,
     # counts feeds totals, the bucket-union build (x2) and both verify
     # joins — 5 references; unpersisted, the corpus feature pass would
     # re-execute each time.  <= |sources| * b rows (tiny).
-    counts = tracked_persist(
+    counts = caching.persist(
         feats.groupBy(F.col("__src").alias("src"), "bkt").agg(
-            F.count(F.lit(1)).alias("c")),
-        "selection")
+            F.count(F.lit(1)).alias("c")))
     totals = counts.groupBy("src").agg(F.sum("c").alias("tot"))
     spairs = (
         totals.select(F.col("src").alias("sa"), F.col("tot").alias("ta"))

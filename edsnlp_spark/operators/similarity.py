@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -217,7 +217,7 @@ def cosine_neardup(emb: DataFrame, planes: list[list[float]],
     )
 
 
-@scoped("semdedup")
+@caching.leased
 def semdedup(emb: DataFrame, centroids: list[list[float]],
              threshold: float = 0.95,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -248,7 +248,7 @@ def semdedup(emb: DataFrame, centroids: list[list[float]],
             ),
         ))[0]["cell"],
     )
-    assigned = tracked_persist(assigned, "semdedup")
+    assigned = caching.persist(assigned)
     a = assigned.select("cell", F.col("__id").alias("a_id"),
                         F.col("v").alias("a_v"))
     b = assigned.select("cell", F.col("__id").alias("b_id"),

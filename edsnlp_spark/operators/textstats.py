@@ -19,14 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 # single-pass bigram lookahead (CLAUDE.md r2: one regexp pass beats
 # nested array HOFs ~4.6x in hot per-row code)
 _BIGRAM_RX = r"(?=([^ ]+ [^ ]+))[^ ]+ "
 
 
-@scoped("textstats")
+@caching.leased
 def bigram_pmi_topk(docs: DataFrame, k: int = 20, min_count: int = 5,
                     text_col: str = "text") -> DataFrame:
     """Top-k collocations by pointwise mutual information (Church &
@@ -70,7 +70,7 @@ def bigram_pmi_topk(docs: DataFrame, k: int = 20, min_count: int = 5,
         docs.select(F.explode(toks).alias("t"))
         .groupBy("t").agg(F.count(F.lit(1)).alias("c1"))
     )
-    uni = tracked_persist(uni, "textstats")
+    uni = caching.persist(uni)
     pairs = (
         docs.select(F.explode(F.regexp_extract_all(
             guarded, F.lit(_BIGRAM_RX), F.lit(1))).alias("bg"))
@@ -142,7 +142,7 @@ def length_profile(docs: DataFrame, source_col: str = "source",
     )
 
 
-@scoped("textstats")
+@caching.leased
 def tfidf_keywords(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Top-k keywords per document by TF-IDF -> (id_col, term, rank,
@@ -165,7 +165,7 @@ def tfidf_keywords(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
         docs.select(F.col(id_col), F.explode(toks).alias("term"))
         .groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf = tracked_persist(tf, "textstats")
+    tf = caching.persist(tf)
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     df_tbl = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (

@@ -32,6 +32,8 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..core import caching
+
 
 def _pseudo_vector(token: str, dim: int) -> list[float]:
     h = hashlib.md5(token.encode()).digest()
@@ -150,22 +152,25 @@ class SharedEmbedding:
     subtree.
 
     ``materialize()`` forces the forward (one count()) so later
-    consumers never race to compute it; ``release()`` unpersists —
-    the disable_cache analog.
+    consumers never race to compute it.  The plane is leased to this
+    object (or, when built inside another leased call, to that call's
+    owner); ``release()`` ends the lease once the heads' results are
+    consumed — the disable_cache analog.
     """
 
     def __init__(self, notes: DataFrame, window: int = 128,
                  stride: int = 64, dim: int = 16, forward=None):
         self.dim = dim
-        self.embeddings = transformer_embeddings(
-            notes, window, stride, dim, forward).persist()
+        with caching.lease(self):
+            self.embeddings = caching.persist(transformer_embeddings(
+                notes, window, stride, dim, forward))
 
     def materialize(self) -> "SharedEmbedding":
         self.embeddings.count()
         return self
 
     def release(self) -> None:
-        self.embeddings.unpersist()
+        caching.release(self)
 
 
 def ner_from_embeddings(shared: SharedEmbedding, notes: DataFrame,
@@ -636,6 +641,7 @@ def _perceptron_pass(docs, W, b, s0, T, dim, scale=1.0, acc=None):
     return errs
 
 
+@caching.leased
 def train_ner_perceptron(notes: DataFrame, gold_spans: DataFrame,
                          n_epochs: int = 5, n_states: int = 3, dim: int = 4,
                          feature_scale: float = 1.0 / 255.0,
@@ -697,13 +703,12 @@ def train_ner_perceptron(notes: DataFrame, gold_spans: DataFrame,
     # bit-identical to a sequential sweep).
     if n_shards is None:
         n_shards = notes.sparkSession.sparkContext.defaultParallelism
-    plane = (
+    plane = caching.persist(
         notes.select(id_col, text_col)
         .join(spans, id_col, "left")
         .repartition(n_shards, id_col)
         .sortWithinPartitions(id_col)
         .select(text_col, "__spans")
-        .persist()
     )
     plane.count()
 
@@ -836,6 +841,7 @@ def _gram_buckets(text: str, ngram: int, n_buckets: int) -> list[int]:
     ]
 
 
+@caching.leased
 def train_doc_classifier(docs: DataFrame, n_classes: int,
                          n_buckets: int = 64, ngram: int = 3,
                          n_epochs: int = 5, n_shards: int = 8,
@@ -916,12 +922,11 @@ def train_doc_classifier(docs: DataFrame, n_classes: int,
         bks_col = F.when(
             F.col(text_col).isNotNull(),
             F.transform(grams, bucket_of))
-    plane = (
+    plane = caching.persist(
         docs.select(id_col, text_col, label_col)
         .repartition(n_shards, id_col)
         .sortWithinPartitions(id_col)
         .select(bks_col.alias("__bks"), label_col)
-        .persist()
     )
     plane.count()
 

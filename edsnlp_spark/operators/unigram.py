@@ -35,7 +35,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 
 #: combined = score*COMB - n_pieces; words must be shorter than COMB
 _COMB = 64
@@ -91,7 +91,7 @@ def _scores_from_counts(counts: dict, scale: int) -> dict:
     }
 
 
-@scoped("unigram")
+@caching.leased
 def unigram_train(docs: DataFrame, vocab_size: int = 300,
                   seed_size: int = 800, max_piece_len: int = 6,
                   iterations: int = 2, scale: int = 4096,
@@ -117,68 +117,69 @@ def unigram_train(docs: DataFrame, vocab_size: int = 300,
     plane so the corpus is exploded and shuffled once per run (r15,
     guide §2.3 compute-once); counts are identical either way.
     """
-    words = word_freqs if word_freqs is not None else tracked_persist(
+    words = word_freqs if word_freqs is not None else caching.persist(
         docs.select(F.explode(F.split(F.col(text_col), " ", -1))
                     .alias("word"))
-        .groupBy("word").agg(F.count(F.lit(1)).alias("wcount")),
-        "unigram")
-    subs = F.expr(
-        f"flatten(transform(sequence(1, length(word)), i -> "
-        f"transform(sequence(1, least({int(max_piece_len)}, "
-        f"length(word) - i + 1)), l -> substring(word, i, l))))")
-    # persisted: referenced twice (singles collect + multi top-k) —
-    # unpersisted, the substring-explode aggregation subtree executed
-    # twice per training run (r15, guide §2.3 compute-once)
-    piece_counts = tracked_persist(
-        words.select(F.explode(subs).alias("piece"), F.col("wcount"))
-        .filter(F.length("piece") >= 1)
-        .groupBy("piece").agg(F.sum("wcount").alias("c")),
-        "unigram")
-    singles = {
-        r["piece"]: int(r["c"])
-        for r in piece_counts.filter(F.length("piece") == 1).collect()
-    }
-    multi = {
-        r["piece"]: int(r["c"])
-        for r in (piece_counts.filter(F.length("piece") > 1)
-                  .orderBy(F.col("c").desc(), F.col("piece"))
-                  .limit(int(seed_size)).collect())
-    }
-    from ..core.caching import release_plane
-    release_plane(piece_counts, "unigram")  # seed-only; EM reads words
-    counts = dict(singles)
-    counts.update(multi)
-    if not counts:  # empty corpus: everything encodes as unk
-        return {}, -int(scale)
-    vocab = _scores_from_counts(counts, scale)
-    unk = min(vocab.values()) - scale
-
-    max_len = int(max_piece_len)
-    for _ in range(int(iterations)):
-        vb, ub = dict(vocab), unk
-
-        def e_step(batches):
-            import pandas as pd
-            for pdf in batches:
-                agg: dict = {}
-                for w, c in zip(pdf["word"], pdf["wcount"]):
-                    for piece in _viterbi(w, vb, ub, max_len)[0]:
-                        agg[piece] = agg.get(piece, 0) + int(c)
-                yield pd.DataFrame(
-                    {"piece": list(agg), "c": list(agg.values())})
-
-        used_rows = (words.mapInPandas(e_step, "piece string, c long")
-                     .groupBy("piece").agg(F.sum("c").alias("c")))
-        used = {r["piece"]: int(r["c"]) for r in used_rows.collect()}
-        new_counts = {p: max(used.get(p, 0), 1) for p in singles}
-        kept_multi = sorted(
-            ((p, c) for p, c in used.items() if len(p) > 1),
-            key=lambda pc: (-pc[1], pc[0]),
-        )[: max(0, int(vocab_size) - len(new_counts))]
-        new_counts.update(dict(kept_multi))
-        vocab = _scores_from_counts(new_counts, scale)
+        .groupBy("word").agg(F.count(F.lit(1)).alias("wcount")))
+    try:
+        subs = F.expr(
+            f"flatten(transform(sequence(1, length(word)), i -> "
+            f"transform(sequence(1, least({int(max_piece_len)}, "
+            f"length(word) - i + 1)), l -> substring(word, i, l))))")
+        # persisted: referenced twice (singles collect + multi top-k) —
+        # unpersisted, the substring-explode aggregation subtree executed
+        # twice per training run (r15, guide §2.3 compute-once)
+        piece_counts = caching.persist(
+            words.select(F.explode(subs).alias("piece"), F.col("wcount"))
+            .filter(F.length("piece") >= 1)
+            .groupBy("piece").agg(F.sum("wcount").alias("c")))
+        singles = {
+            r["piece"]: int(r["c"])
+            for r in piece_counts.filter(F.length("piece") == 1).collect()
+        }
+        multi = {
+            r["piece"]: int(r["c"])
+            for r in (piece_counts.filter(F.length("piece") > 1)
+                      .orderBy(F.col("c").desc(), F.col("piece"))
+                      .limit(int(seed_size)).collect())
+        }
+        piece_counts.unpersist()  # seed-only; EM reads words
+        counts = dict(singles)
+        counts.update(multi)
+        if not counts:  # empty corpus: everything encodes as unk
+            return {}, -int(scale)
+        vocab = _scores_from_counts(counts, scale)
         unk = min(vocab.values()) - scale
-    return vocab, unk
+
+        max_len = int(max_piece_len)
+        for _ in range(int(iterations)):
+            vb, ub = dict(vocab), unk
+
+            def e_step(batches):
+                import pandas as pd
+                for pdf in batches:
+                    agg: dict = {}
+                    for w, c in zip(pdf["word"], pdf["wcount"]):
+                        for piece in _viterbi(w, vb, ub, max_len)[0]:
+                            agg[piece] = agg.get(piece, 0) + int(c)
+                    yield pd.DataFrame(
+                        {"piece": list(agg), "c": list(agg.values())})
+
+            used_rows = (words.mapInPandas(e_step, "piece string, c long")
+                         .groupBy("piece").agg(F.sum("c").alias("c")))
+            used = {r["piece"]: int(r["c"]) for r in used_rows.collect()}
+            new_counts = {p: max(used.get(p, 0), 1) for p in singles}
+            kept_multi = sorted(
+                ((p, c) for p, c in used.items() if len(p) > 1),
+                key=lambda pc: (-pc[1], pc[0]),
+            )[: max(0, int(vocab_size) - len(new_counts))]
+            new_counts.update(dict(kept_multi))
+            vocab = _scores_from_counts(new_counts, scale)
+            unk = min(vocab.values()) - scale
+        return vocab, unk
+    finally:
+        if words is not word_freqs:
+            words.unpersist()
 
 
 def unigram_encode_words(words: DataFrame, vocab: dict, unk: int,

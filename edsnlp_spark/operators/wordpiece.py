@@ -32,7 +32,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..core.caching import scoped, tracked_persist
+from ..core import caching
 from .bpe import _apply_merge_batch
 
 
@@ -70,7 +70,7 @@ def _wp_sym0(col_w):
     return F.transform(chars, tag)
 
 
-@scoped("wordpiece")
+@caching.leased
 def wordpiece_train(docs: DataFrame, n_merges: int = 48,
                     batch: int = 16, id_col: str = "doc_id",
                     text_col: str = "text",
@@ -94,9 +94,8 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 48,
         F.explode(F.split(F.col(text_col), " ", -1)).alias("w")
     ).groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
     words = words.filter(F.col("w") != "")
-    vocab = tracked_persist(
-        words.select("freq", _wp_sym0(F.col("w")).alias("sym")),
-        "wordpiece")
+    vocab = caching.persist(
+        words.select("freq", _wp_sym0(F.col("w")).alias("sym")))
     # the initial alphabet (bounded by the corpus CHARACTER set x2,
     # bare + '##' forms) is read off round 1's cached agg plane below
     # — its NULL-r sentinel rows ARE the distinct symbol set — instead
@@ -104,92 +103,96 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 48,
     pieces: list[str] = []
     merges: list[tuple[str, str]] = []
     retired: DataFrame | None = None
+    agg: DataFrame | None = None
     first_round = True
-    while len(merges) < n_merges:
-        # ONE scan + ONE shuffle per round (r15, guide §2.3/§2.4): the
-        # explode emits the adjacent PAIRS and a NULL-r sentinel row
-        # per SYMBOL, so pair counts and symbol counts come out of the
-        # same aggregation (measured 0.13-0.17s/round at sf0.1, counts
-        # bit-identical to the former two-aggregation shape).  The agg
-        # plane is vocabulary-bounded; persisted because the score
-        # projection reads it on three legs (pairs + both symc joins).
-        ent = vocab.select(
-            "freq",
-            F.explode(F.concat(
-                F.zip_with(
-                    F.slice(F.col("sym"), 1, F.size("sym") - 1),
-                    F.slice(F.col("sym"), 2, F.size("sym") - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                ),
-                F.transform(F.col("sym"), lambda s: F.struct(
-                    s.alias("l"),
-                    F.lit(None).cast("string").alias("r"))),
-            )).alias("p"))
-        # no explicit .count() barrier: the round's FIRST collect
-        # (round 1: the alphabet read; later rounds: the top-M collect)
-        # materializes the cache — partition-level BlockManager locking
-        # makes the 3-leg read compute each partition once (r15: one
-        # fewer job per round)
-        agg = tracked_persist(
-            ent.groupBy(F.col("p.l").alias("l"),
-                        F.col("p.r").alias("r"))
-            .agg(F.sum("freq").alias("c")),
-            "wordpiece")
-        if first_round:
-            # round 1's symbols are exactly the initial alphabet
-            pieces = sorted(
-                r["l"] for r in
-                agg.filter(F.col("r").isNull()).select("l").collect())
-            first_round = False
-        pairs = agg.filter(F.col("r").isNotNull())
-        symc = agg.filter(F.col("r").isNull()).select(
-            F.col("l").alias("s"), F.col("c").alias("cs"))
-        scored = (
-            pairs.filter(F.col("c") >= 2)
-            .join(symc.select(F.col("s").alias("l"),
-                              F.col("cs").alias("cl")), "l")
-            .join(symc.select(F.col("s").alias("r"),
-                              F.col("cs").alias("cr")), "r")
-            .select("l", "r", "c",
-                    (F.col("c").cast("double")
-                     / (F.col("cl") * F.col("cr")).cast("double"))
-                    .alias("score")))
-        want = min(batch, n_merges - len(merges))
-        top = (scored.orderBy(F.col("score").desc(), F.col("c").desc(),
-                              "l", "r")
-               .limit(4 * want + 8).collect())
-        from ..core.caching import release_plane
-        release_plane(agg, "wordpiece")  # round-local
-        if retired is not None:
-            release_plane(retired, "wordpiece")
-            retired = None
-        adopted = _adopt_disjoint_wp(
-            [(row["l"], row["r"]) for row in top], want)
-        if not adopted:
-            break
-        merges.extend(adopted)
-        pieces.extend(wp_merged(l, r) for l, r in adopted)
-        if len(merges) >= n_merges:
-            # the final round's successor vocab is never read (the
-            # trainer returns pieces only) — skip its fold + eager
-            # checkpoint (r15, guide §1.2; mirrors bpe_train_batched)
-            break
-        new_vocab = vocab.select(
-            "freq",
-            _apply_merge_batch(
-                F.col("sym"), adopted,
-                merged=[wp_merged(l, r) for l, r in adopted])
-            .alias("sym"))
-        retired = vocab
-        # LAZY checkpoint (r15): the next round's top-M collect is the
-        # first materialization, so it computes the fold AND saves the
-        # checkpoint blocks in the SAME job — the eager variant paid a
-        # dedicated job per round for the same work.  Lineage is still
-        # cut at materialization time (the r6 iterative-plan rule), and
-        # ``retired`` stays cached until after that collect, so the
-        # fold always reads its predecessor from cache.
-        vocab = tracked_persist(
-            new_vocab.localCheckpoint(eager=False), "wordpiece")
+    try:
+        while len(merges) < n_merges:
+            # ONE scan + ONE shuffle per round (r15, guide §2.3/§2.4): the
+            # explode emits the adjacent PAIRS and a NULL-r sentinel row
+            # per SYMBOL, so pair counts and symbol counts come out of the
+            # same aggregation (measured 0.13-0.17s/round at sf0.1, counts
+            # bit-identical to the former two-aggregation shape).  The agg
+            # plane is vocabulary-bounded; persisted because the score
+            # projection reads it on three legs (pairs + both symc joins).
+            ent = vocab.select(
+                "freq",
+                F.explode(F.concat(
+                    F.zip_with(
+                        F.slice(F.col("sym"), 1, F.size("sym") - 1),
+                        F.slice(F.col("sym"), 2, F.size("sym") - 1),
+                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+                    ),
+                    F.transform(F.col("sym"), lambda s: F.struct(
+                        s.alias("l"),
+                        F.lit(None).cast("string").alias("r"))),
+                )).alias("p"))
+            # no explicit .count() barrier: the round's FIRST collect
+            # (round 1: the alphabet read; later rounds: the top-M collect)
+            # materializes the cache — partition-level BlockManager locking
+            # makes the 3-leg read compute each partition once (r15: one
+            # fewer job per round)
+            agg = caching.persist(
+                ent.groupBy(F.col("p.l").alias("l"),
+                            F.col("p.r").alias("r"))
+                .agg(F.sum("freq").alias("c")))
+            if first_round:
+                # round 1's symbols are exactly the initial alphabet
+                pieces = sorted(
+                    r["l"] for r in
+                    agg.filter(F.col("r").isNull()).select("l").collect())
+                first_round = False
+            pairs = agg.filter(F.col("r").isNotNull())
+            symc = agg.filter(F.col("r").isNull()).select(
+                F.col("l").alias("s"), F.col("c").alias("cs"))
+            scored = (
+                pairs.filter(F.col("c") >= 2)
+                .join(symc.select(F.col("s").alias("l"),
+                                  F.col("cs").alias("cl")), "l")
+                .join(symc.select(F.col("s").alias("r"),
+                                  F.col("cs").alias("cr")), "r")
+                .select("l", "r", "c",
+                        (F.col("c").cast("double")
+                         / (F.col("cl") * F.col("cr")).cast("double"))
+                        .alias("score")))
+            want = min(batch, n_merges - len(merges))
+            top = (scored.orderBy(F.col("score").desc(), F.col("c").desc(),
+                                  "l", "r")
+                   .limit(4 * want + 8).collect())
+            agg.unpersist()  # round-local
+            if retired is not None:
+                retired.unpersist()
+                retired = None
+            adopted = _adopt_disjoint_wp(
+                [(row["l"], row["r"]) for row in top], want)
+            if not adopted:
+                break
+            merges.extend(adopted)
+            pieces.extend(wp_merged(l, r) for l, r in adopted)
+            if len(merges) >= n_merges:
+                # the final round's successor vocab is never read (the
+                # trainer returns pieces only) — skip its fold + eager
+                # checkpoint (r15, guide §1.2; mirrors bpe_train_batched)
+                break
+            new_vocab = vocab.select(
+                "freq",
+                _apply_merge_batch(
+                    F.col("sym"), adopted,
+                    merged=[wp_merged(l, r) for l, r in adopted])
+                .alias("sym"))
+            retired = vocab
+            # LAZY checkpoint (r15): the next round's top-M collect is the
+            # first materialization, so it computes the fold AND saves the
+            # checkpoint blocks in the SAME job — the eager variant paid a
+            # dedicated job per round for the same work.  Lineage is still
+            # cut at materialization time (the r6 iterative-plan rule), and
+            # ``retired`` stays cached until after that collect, so the
+            # fold always reads its predecessor from cache.
+            vocab = caching.persist(
+                new_vocab.localCheckpoint(eager=False))
+    finally:
+        for plane in (vocab, retired, agg):
+            if plane is not None:
+                plane.unpersist()
     return pieces
 
 

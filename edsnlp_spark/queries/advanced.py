@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from .relational import _t
 from .textops import _TOK_CTE, _notes
 from ..core.base import Pipeline
+from ..core import caching
 from ..operators.tokenizer import Tokenizer
 from ..operators.matcher import PhraseMatcher
 from ..operators.contextual import AssignRule, ContextRule, ContextualMatcher
@@ -314,6 +315,7 @@ FROM ent
 NER_CRF_VITERBI_SQL = _ner_crf_sql()
 
 
+@caching.leased
 def _train_quantized_student(spark, sf_dir, heldout_mod=None):
     """Shared distillation trainer (query + pin script): the integer
     demo CRF ("teacher") silver-labels the training corpus;
@@ -333,8 +335,8 @@ def _train_quantized_student(spark, sf_dir, heldout_mod=None):
                      F.col("text").alias("note_text"))
     train = notes if heldout_mod is None else notes.filter(
         F.col("note_id") % heldout_mod[0] != heldout_mod[1])
-    silver = ner_linear_crf(train).select(
-        "note_id", "tok_start", "tok_end").persist()
+    silver = caching.persist(ner_linear_crf(train).select(
+        "note_id", "tok_start", "tok_end"))
     silver.count()
     try:
         W, b, s0, T, _hist = train_ner_perceptron(
@@ -397,6 +399,7 @@ _NEG_WLEN, _NEG_NB, _NEG_NGRAM, _NEG_EPOCHS = 5, 128, 3, 8
 _NEG_ENTS = ("spark", "merge", "table")
 
 
+@caching.leased
 def _negation_instances(spark, sf_dir):
     """Instance plane for qualifier distillation: one row per entity
     occurrence with its distance-tagged left-window text and the
@@ -423,12 +426,10 @@ def _negation_instances(spark, sf_dir):
         F.col("doc_id") * 100000 + F.col("pos"),
     ).otherwise(F.raise_error(F.lit(
         "negation_distillation: pos >= 100000 breaks inst_id packing")))
-    from ..core.caching import tracked_persist
-    return tracked_persist(
+    return caching.persist(
         inst.join(teacher, ["doc_id", "pos"])
         .select(inst_id.alias("inst_id"), "doc_id", "pos", "term",
-                "wtext", "label"),
-        "qualifier")
+                "wtext", "label"))
 
 
 def _train_negation_student(spark, sf_dir, heldout_mod=None):

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .relational import _t
+from ..core import caching
 
 # reference golden texts (diabetes.py golden set); branch k%9
 _TEXTS = [
@@ -34,6 +35,7 @@ _EXPECT = [
 ]
 
 
+@caching.leased
 def disorders_full_diabetes(spark, sf_dir):
     """Run the FULL reference diabetes bundle (regex anchors + windowed
     excludes/assigns + process() status rules) over golden texts fanned
@@ -49,7 +51,8 @@ def disorders_full_diabetes(spark, sf_dir):
         F.element_at(texts, (F.col("o_orderkey") % 9 + 1).cast("int"))
         .alias("note_text"),
     )
-    notes = Pipeline([Tokenizer(), SentenceSegmenter()])(notes).persist()
+    notes = caching.persist(
+        Pipeline([Tokenizer(), SentenceSegmenter()])(notes))
     out = ReferenceDisorderMatcher("diabetes").entities(notes)
     return out.select(
         F.col("note_id").alias("o_orderkey"),

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .relational import _t
 from ..core.base import Pipeline
-from ..core.caching import scoped
+from ..core import caching
 from ..operators.tokenizer import Tokenizer
 from ..operators.sentences import SentenceSegmenter
 from ..operators.matcher import PhraseMatcher
@@ -199,17 +199,18 @@ FROM dec
 
 # ---- reported speech: quotation strict containment ---------------------
 
+@caching.leased
 def reported_speech_tokens(spark, sf_dir):
     """QualifierEngine quotation class (reported_speech.py:288-292): an
     entity is reported iff a quote span strictly contains it.  Quotes
     are injected after the document text, so in-quote occurrences of the
     targets qualify and body occurrences do not."""
     d = _t(spark, sf_dir, "documents")
-    notes = _pipe(d.select(
+    notes = caching.persist(_pipe(d.select(
         F.col("doc_id").alias("note_id"),
         F.concat(F.col("text"), F.lit(' " spark merge " spark'))
         .alias("note_text"),
-    )).persist()
+    )))
     ents = PhraseMatcher({"target": ["spark", "merge"]},
                          attr="TEXT").entities(notes)
     q = QualifierEngine("reported", {"quotation": [r'"[^"]*"']}, attr="TEXT")
@@ -251,13 +252,14 @@ FROM q WHERE token IN ('spark', 'merge')
 
 # ---- family: boundary-scoped cue class ---------------------------------
 
+@caching.leased
 def family_tokens(spark, sf_dir):
     """QualifierEngine boundary class (family.py:229-233): the entity is
     family iff ANY cue shares its boundary (boundaries cut at
     termination starts), not just a preceding/following cue."""
     d = _t(spark, sf_dir, "documents")
-    notes = _pipe(d.select(F.col("doc_id").alias("note_id"),
-                           F.col("text").alias("note_text"))).persist()
+    notes = caching.persist(_pipe(d.select(
+        F.col("doc_id").alias("note_id"), F.col("text").alias("note_text"))))
     ents = PhraseMatcher({"member": ["table", "row"]},
                          attr="TEXT").entities(notes)
     q = QualifierEngine("family", {"boundary": ["fast"],
@@ -294,6 +296,7 @@ FROM bid e WHERE e.token IN ('table', 'row')
 
 # ---- eds.history: three-evidence combine -------------------------------
 
+@caching.leased
 def history_qualifier(spark, sf_dir):
     """HistoryQualifier (qualifiers/history/history.py:56): history =
     preceding cue OR antecedents-section containment OR nearest
@@ -311,10 +314,10 @@ def history_qualifier(spark, sf_dir):
               F.concat(F.lit("vu le "), date_txt, F.lit(" diabete present")))
         .otherwise(F.lit("suivi diabete encore"))
     )
-    notes = _pipe(o.select(
+    notes = caching.persist(_pipe(o.select(
         k.alias("note_id"), text.alias("note_text"),
         F.col("o_orderdate").cast("timestamp").alias("note_datetime"),
-    )).persist()
+    )))
     ents = PhraseMatcher({"disease": ["diabete"]}, attr="TEXT").entities(notes)
     h = HistoryQualifier(
         history_limit_days=365,
@@ -346,7 +349,7 @@ FROM orders
 
 # ---- eds.sentences: reference-exact machine on constructed text --------
 
-@scoped("sentences")
+@caching.leased
 def sentence_boundaries(spark, sf_dir):
     """SentenceSegmenter (fast_sentences.pyx state machine): two
     sentences per order separated by '. '+capitalized word, with
@@ -366,20 +369,18 @@ def sentence_boundaries(spark, sf_dir):
     # sf0.1: direct 94s, repartition barrier 125s — the map side hits
     # the same interpreted stage — DISK_ONLY persist 2.2s cold / 0.25s
     # warm); materializing the array column first keeps the fold in its
-    # own codegen'd stage.  DISK_ONLY + tracked scope (VERDICT r5 #3):
-    # this cache exists only as a codegen barrier, so at 100 TB it must
-    # be a sequential disk spill of one derived column, not a
-    # corpus-sized executor-memory cache; callers running long-lived
-    # sessions reclaim it with caching.release("sentences").
+    # own codegen'd stage.  DISK_ONLY (VERDICT r5 #3): this cache
+    # exists only as a codegen barrier, so at 100 TB it must be a
+    # sequential disk spill of one derived column, not a corpus-sized
+    # executor-memory cache; it is leased to this query like any other.
     from pyspark import StorageLevel
 
-    from ..core import caching
-    notes = caching.tracked_persist(
+    notes = caching.persist(
         _pipe(o.select(
             k.alias("note_id"),
             F.concat(s1, F.lit(" "), s2).alias("note_text"),
         )).select("note_id", "sentences"),
-        scope="sentences", storage_level=StorageLevel.DISK_ONLY)
+        StorageLevel.DISK_ONLY)
     s = F.explode("sentences").alias("s")
     out = notes.select("note_id", s)
     return out.select(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from .relational import _t
+from ..core import caching
 from ..core.base import Pipeline
 from ..operators.tokenizer import Tokenizer
 from ..operators.terminology import LexiconMatcher
@@ -51,14 +52,15 @@ def _lexicon_notes(spark, sf_dir, resource: str):
     )
 
 
+@caching.leased
 def drugs_lexicon_match(spark, sf_dir):
     """Full ATC drug dictionary (5 789 forms) via LexiconMatcher.
 
     notes is persisted: LexiconMatcher references it twice (anchor
     explode + verify join-back) and the tokenized subtree would rebuild
     per reference otherwise (CLAUDE.md lazy-plan gotcha)."""
-    notes = Pipeline([Tokenizer(mode="pretokenized")])(
-        _lexicon_notes(spark, sf_dir, "drugs")).persist()
+    notes = caching.persist(Pipeline([Tokenizer(mode="pretokenized")])(
+        _lexicon_notes(spark, sf_dir, "drugs")))
     ents = LexiconMatcher("drug", "drugs").entities(notes)
     return ents.select(
         F.col("note_id").alias("doc_id"),
@@ -150,6 +152,7 @@ def scale_terms(spark):
     )
 
 
+@caching.leased
 def umls_scale_match(spark, sf_dir):
     """200k-form lexicon through the non-broadcast LexiconMatcher path."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -159,7 +162,8 @@ def umls_scale_match(spark, sf_dir):
         F.concat_ws(" ", "text", key).alias("note_text"),
     ).repartition(spark.sparkContext.defaultParallelism)
     # persisted: two references from the anchor+verify join (see above)
-    notes = Pipeline([Tokenizer(mode="pretokenized")])(notes).persist()
+    notes = caching.persist(
+        Pipeline([Tokenizer(mode="pretokenized")])(notes))
     ents = LexiconMatcher(
         "umls", resource="", terms_df=scale_terms(spark),
         broadcast_terms=False,

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .textops import _notes
 from ..core.base import Pipeline
+from ..core import caching
 from ..operators.tokenizer import Tokenizer
 from ..operators.tables import TablesExtractor
 from ..operators.misc_pipes import reason_spans, consultation_dates
@@ -111,6 +112,7 @@ def _fmt_date(day, month, year):
     return F.format_string("%02d/%02d/%04d", day, month, year)
 
 
+@caching.leased
 def note_dates(spark, sf_dir):
     """eds.reason (misc/reason/reason.py:13) + eds.consultation_dates
     (misc/consultation_dates/consultation_dates.py:14) over one
@@ -144,12 +146,10 @@ def note_dates(spark, sf_dir):
                F.concat(F.lit(" signe le "), d3, F.lit(".")))
         .otherwise(F.lit("")),
     )
-    from ..core.caching import tracked_persist
-    notes = tracked_persist(
+    notes = caching.persist(
         Pipeline([Tokenizer(mode="pretokenized")])(
             _notes(spark, sf_dir).select("note_id",
-                                         txt.alias("note_text"))),
-        "miscpipes")
+                                         txt.alias("note_text"))))
     reasons = reason_spans(notes, use_sections=True).select(
         F.col("note_id").alias("doc_id"),
         F.when(F.col("source") == "pattern", F.lit("reason"))
@@ -217,6 +217,7 @@ _SUICIDE_CASES = [
 ]
 
 
+@caching.leased
 def suicide_pollution(spark, sf_dir):
     """eds.suicide_attempt (ner/suicide_attempt/suicide_attempt.py:15,
     full reference modality patterns) over pollution-STRIPPED text
@@ -231,12 +232,9 @@ def suicide_pollution(spark, sf_dir):
     txt = F.concat(
         F.col("note_text"),
         F.when(doc_id % 7 == 6, F.lit(" nbnbnbnbnb")).otherwise(inj))
-    from ..core.caching import tracked_persist
-    notes = tracked_persist(
-        _notes(spark, sf_dir).select("note_id", txt.alias("note_text")),
-        "miscpipes")
-    clean = tracked_persist(strip_pollution(PollutionTagger()(notes)),
-                            "miscpipes")
+    notes = caching.persist(
+        _notes(spark, sf_dir).select("note_id", txt.alias("note_text")))
+    clean = caching.persist(strip_pollution(PollutionTagger()(notes)))
     matcher = RegexMatcher(SUICIDE_ATTEMPT_PATTERNS, attr="TEXT",
                            text_col="excluded_text")
     ents = matcher.entities(clean).select(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .relational import _t
+from ..core import caching
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators.multimodal import attach_blob, extract_features
@@ -298,6 +299,7 @@ def _verified_jaccard_pairs(cands, docs, threshold: float = 0.2):
 _DEDUP_SEED_BUILT: set = set()
 
 
+@caching.leased
 def _dedup_seed_index(spark, sf_dir) -> str:
     """Build-or-reuse the persisted BASE-corpus dedup state for
     ``sf_dir`` (the seed-index pattern): the MinHash banded postings
@@ -333,19 +335,17 @@ def _dedup_seed_index(spark, sf_dir) -> str:
                               ("keep", "labels"), ("keep", "meta"))
         ) and _art.version_ok(path)
         if not done:
-            from ..core.caching import tracked_persist
             docs = _docs(spark, sf_dir)
             base_docs = docs.filter(F.col("doc_id") % 7 != 3)
             D.minhash_postings_index(base_docs, f"{path}/bands", n=3,
                                      num_hashes=12, bands=6)
             post = spark.read.parquet(f"{path}/bands/postings")
-            cand = tracked_persist(
+            cand = caching.persist(
                 post.join(post.select(F.col("id").alias("__r"), "bk"),
                           "bk")
                 .filter(F.col("id") < F.col("__r"))
                 .select(F.col("id").alias("id_a"),
-                        F.col("__r").alias("id_b")).distinct(),
-                "dedup")
+                        F.col("__r").alias("id_b")).distinct())
             base_pairs = _verified_jaccard_pairs(cand, base_docs)
             D.components_index_build(
                 D.connected_components(base_pairs), f"{path}/comps",
@@ -419,6 +419,7 @@ def dedup_components_incremental(spark, sf_dir):
         ))
 
 
+@caching.leased
 def dedup_keeper_incremental(spark, sf_dir):
     """INGEST-SHAPED incremental keeper election (VERDICT r12 Next
     #6): composes the persisted dedup state (postings + component
@@ -436,15 +437,13 @@ def dedup_keeper_incremental(spark, sf_dir):
     touches WITHOUT relabeling keeps its membership, so skipping it
     is a provable no-op).  Idempotent: a replayed batch yields an
     empty touched set and the keeper refresh no-ops."""
-    from ..core.caching import tracked_persist
     docs = _docs(spark, sf_dir)
     path = _dedup_seed_index(spark, sf_dir)
     batch_docs = docs.filter(F.col("doc_id") % 7 == 3)
     cands = D.minhash_index_candidates(spark, f"{path}/bands",
                                        batch_docs, n=3,
                                        num_hashes=12, bands=6)
-    verified = tracked_persist(_verified_jaccard_pairs(cands, docs),
-                               "dedup")
+    verified = caching.persist(_verified_jaccard_pairs(cands, docs))
     touched = D.components_index_update(spark, f"{path}/comps",
                                         verified, return_touched=True)
     labels = spark.read.parquet(f"{path}/comps/labels")
@@ -467,6 +466,7 @@ def dedup_keeper_incremental(spark, sf_dir):
                     .alias("keep")))
 
 
+@caching.leased
 def dedup_keeper_election(spark, sf_dir):
     """Quality-aware keeper election over near-dup clusters (r12): the
     production curation policy keeps the MOST INFORMATIVE member of
@@ -478,13 +478,11 @@ def dedup_keeper_election(spark, sf_dir):
     end-to-end: capped ngram-Jaccard pairs -> connected components ->
     one per-cluster groupBy(max_by) -> join back; singletons keep
     themselves.  -> (doc_id, cluster, keeper_id, keep)."""
-    from ..core.caching import tracked_persist
-    docs = tracked_persist(
+    docs = caching.persist(
         _docs(spark, sf_dir).select(
             "doc_id",
             F.size(F.array_distinct(F.split("text", " ", -1)))
-            .cast("bigint").alias("nd")),
-        "dedup")
+            .cast("bigint").alias("nd")))
     pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), n=3,
                                   threshold=0.2, max_df=5)
     comps = D.connected_components(pairs)
@@ -1297,6 +1295,7 @@ SELECT (SELECT COUNT(*) FROM planted)::BIGINT AS n_planted,
 
 # ---- kNN label propagation (semi-supervised corpus labeling) -----------
 
+@caching.leased
 def knn_label_propagation_q(spark, sf_dir):
     """Pseudo-label the unlabeled TRAINED vectors (r13, VERDICT r12
     Next #4 — was the synthetic md5-embedding table through r12) by
@@ -1306,9 +1305,8 @@ def knn_label_propagation_q(spark, sf_dir):
     labeled index broadcasts; the corpus never shuffles.  The oracle
     replays the FULL training chain first (the semdedup/contrastive
     precedent)."""
-    from ..core.caching import tracked_persist
     from ..operators.similarity import knn_label_propagation
-    tv = tracked_persist(_trained_vec_table(spark, sf_dir), "semdedup")
+    tv = caching.persist(_trained_vec_table(spark, sf_dir))
     cents = [
         [float(x) for x in r["embedding"]]
         for r in tv.select("vec_id", "embedding")
@@ -1397,6 +1395,7 @@ def _trained_vec_table(spark, sf_dir):
             .filter(F.col("nn") > 0).drop("nn"))
 
 
+@caching.leased
 def semdedup_embeddings(spark, sf_dir):
     """SemDeDup over TRAINED vectors (r12, VERDICT r11 #7 — was a
     synthetic md5-embedding table through r11) with planted exact
@@ -1407,8 +1406,7 @@ def semdedup_embeddings(spark, sf_dir):
     always falls (pinned in pytest); the oracle replays the FULL
     training chain (the a0_trained_ann_topk precedent) before the
     assignment/drop joins."""
-    from ..core.caching import tracked_persist
-    tv = tracked_persist(_trained_vec_table(spark, sf_dir), "semdedup")
+    tv = caching.persist(_trained_vec_table(spark, sf_dir))
     clones = tv.filter(F.col("vec_id") % 37 == 1).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
     allv = tv.unionByName(clones)
@@ -1420,6 +1418,7 @@ def semdedup_embeddings(spark, sf_dir):
     return S.semdedup(allv, centroids=cents, threshold=0.95)
 
 
+@caching.leased
 def diversity_sample(spark, sf_dir):
     """Cluster-balanced diversity sampling (D4-style) over TRAINED
     vectors (r13, VERDICT r12 Next #4 — was the synthetic
@@ -1427,8 +1426,7 @@ def diversity_sample(spark, sf_dir):
     its nearest of the 8 lowest-id trained centroids, keep each
     cell's 5 most central members — coverage ACROSS semantic clusters
     instead of wherever the corpus is densest.  Full-replay oracle."""
-    from ..core.caching import tracked_persist
-    tv = tracked_persist(_trained_vec_table(spark, sf_dir), "semdedup")
+    tv = caching.persist(_trained_vec_table(spark, sf_dir))
     cents = [
         [float(x) for x in r["embedding"]]
         for r in tv.select("vec_id", "embedding")
@@ -1773,6 +1771,7 @@ WHERE rank <= 10
 
 # ---- Contrastive training-pair mining (hard negatives) -----------------
 
+@caching.leased
 def contrastive_pairs(spark, sf_dir):
     """Hard-negative triplet mining over TRAINED vectors (r12, VERDICT
     r11 #7 — was the synthetic md5-embedding table through r11): for
@@ -1784,8 +1783,7 @@ def contrastive_pairs(spark, sf_dir):
     broadcast literal); candidate pairs are cell-confined; election is
     one groupBy with rounded-cosine min/max structs (id tie-breaks).
     The oracle replays the full training chain first."""
-    from ..core.caching import tracked_persist
-    tv = tracked_persist(_trained_vec_table(spark, sf_dir), "semdedup")
+    tv = caching.persist(_trained_vec_table(spark, sf_dir))
     seeds = [
         [float(x) for x in r["embedding"]]
         for r in tv.select("vec_id", "embedding")
@@ -1928,6 +1926,7 @@ FROM nodes, pr WHERE pr.it = 8
 
 
 
+@caching.leased
 def mmr_diversified_search(spark, sf_dir):
     """MMR-diversified top-10 (similarity.mmr_rerank) over TRAINED
     vectors (r13, VERDICT r12 Next #4 — was the synthetic
@@ -1937,8 +1936,7 @@ def mmr_diversified_search(spark, sf_dir):
     rounded 4dp and scaled to 1e4 ints) inside one applyInPandas per
     bounded query group.  Oracle = the full training chain, then the
     same greedy as a recursive CTE with list accumulators."""
-    from ..core.caching import tracked_persist
-    tv = tracked_persist(_trained_vec_table(spark, sf_dir), "semdedup")
+    tv = caching.persist(_trained_vec_table(spark, sf_dir))
     queries = tv.orderBy("vec_id").limit(5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     return S.mmr_rerank(tv, queries, k=10, n_candidates=20)
@@ -2442,6 +2440,7 @@ def _graph_emb_seed(spark, sf_dir) -> str:
     return path
 
 
+@caching.leased
 def trained_ann_topk(spark, sf_dir):
     """ANN over TRAINED vectors (VERDICT r10 #3 'done' condition): the
     8 lowest-id nodes with a nonzero trained embedding probe the full
@@ -2454,13 +2453,12 @@ def trained_ann_topk(spark, sf_dir):
     training is deterministic, the full-replay oracle still verifies
     every value the artifact serves."""
     from pyspark.sql import Window as W
-    from ..core.caching import tracked_persist
     emb = spark.read.parquet(_graph_emb_seed(spark, sf_dir))
     nn = F.aggregate(F.transform("emb", lambda e: e * e),
                      F.lit(0).cast("long"), lambda acc, v: acc + v)
-    emb = tracked_persist(
+    emb = caching.persist(
         emb.select("node", "emb", nn.alias("nn"))
-        .filter(F.col("nn") > 0), "graph")
+        .filter(F.col("nn") > 0))
     probes = (emb.orderBy("node").limit(8)
               .select(F.col("node").alias("probe"),
                       F.col("emb").alias("p_emb"),
@@ -2574,13 +2572,12 @@ def _sem_sig_len(n: int, target: int = _SEM_TARGET_OCC,
     return sig_len
 
 
+@caching.leased
 def semantic_clusters_over(emb, target_occ: int = _SEM_TARGET_OCC,
-                           max_bucket: int = 2048,
-                           cache_scope: str = "graph"):
+                           max_bucket: int = 2048):
     """Core of :func:`semantic_clusters` over any (node, emb) table —
     factored so the hot-bucket guard is unit-testable on planted
     clone-heavy vectors without the persisted artifact."""
-    from ..core.caching import tracked_persist
     from ..operators.dedup import connected_components
     nn = F.aggregate(F.transform("emb", lambda e: e * e),
                      F.lit(0).cast("long"), lambda acc, v: acc + v)
@@ -2593,9 +2590,9 @@ def semantic_clusters_over(emb, target_occ: int = _SEM_TARGET_OCC,
                 F.lit(0).cast("long"), lambda acc, v: acc + v) >= 0,
             F.lit("1")).otherwise(F.lit("0"))
         for plane in _SEM_PLANES])
-    base = tracked_persist(
+    base = caching.persist(
         emb.select("node", "emb", nn.alias("nn"), sig.alias("sig"))
-        .filter(F.col("nn") > 0), cache_scope)
+        .filter(F.col("nn") > 0))
     # plane count derives from the corpus (1-value driver collect):
     # 2^L buckets sized for ~target_occ vectors each
     sig_len = _sem_sig_len(base.count(), target=target_occ)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .relational import _t
 from ..core.base import Pipeline
+from ..core import caching
 from ..operators.tokenizer import Tokenizer, Normalizer
 from ..operators.sentences import SentenceSegmenter
 from ..operators.matcher import PhraseMatcher
@@ -511,12 +512,13 @@ def negation_chain(notes):
     )
 
 
+@caching.leased
 def negation_tokens(spark, sf_dir):
     """Full qualifier engine: cue scan -> boundary sessionization ->
     interval join -> grouped EXISTS.  Oracle re-derives the same
     semantics with a last-marker window (the last cue-or-termination
     before the entity must be a cue)."""
-    notes = _pipe_notes(spark, sf_dir).persist()
+    notes = caching.persist(_pipe_notes(spark, sf_dir))
     return negation_chain(notes)
 
 
@@ -727,6 +729,7 @@ FROM built
 
 # ---- full temporal model: durations / relatives / bounds --------------
 
+@caching.leased
 def durations_extraction(spark, sf_dir):
     """Build one French temporal mention per order (duration / signed
     relative / specific / bounded absolute), then recover kind,
@@ -762,8 +765,9 @@ def durations_extraction(spark, sf_dir):
     # and the unpersisted subtree would rebuild + reshuffle per
     # reference (measured: 2.9s -> 1.2s warm at sf0.1).
     par = spark.sparkContext.defaultParallelism
-    notes = o.select(k.alias("note_id"), text.alias("note_text")) \
-        .repartition(par).persist()
+    notes = caching.persist(
+        o.select(k.alias("note_id"), text.alias("note_text"))
+        .repartition(par))
     return temporal_mentions(notes).select(
         F.col("note_id").alias("o_orderkey"), "lexical_variant", "kind",
         "direction", "bound", "offset_seconds", "norm",
@@ -1110,12 +1114,13 @@ _HYP_CUES = {"preceding": ["slow"], "following": ["big"],
              "termination": ["filter"]}
 
 
+@caching.leased
 def hypothesis_tokens(spark, sf_dir):
     """Qualifier with BOTH cue directions: preceded by 'slow' OR followed
     by 'big' within the boundary.  The oracle derives each direction with
     its own last/first-marker window (negation_tokens only covers the
     preceding direction)."""
-    notes = _pipe_notes(spark, sf_dir).persist()
+    notes = caching.persist(_pipe_notes(spark, sf_dir))
     ents = PhraseMatcher(_HYP_TARGETS, attr="TEXT").entities(notes)
     q = QualifierEngine("hypothesis", _HYP_CUES, attr="TEXT")
     out = q.qualify(notes, ents)
@@ -1154,6 +1159,7 @@ FROM marked WHERE token IN ('join', 'scan')
 
 # ---- full mention-level quantity engine --------------------------------
 
+@caching.leased
 def quantity_mentions_q(spark, sf_dir):
     """quantity_mentions over constructed French measurement texts: unit
     propagation ('N par M mm' -> both mm), followed_by composites
@@ -1177,8 +1183,9 @@ def quantity_mentions_q(spark, sf_dir):
         .otherwise(F.concat(F.lit("mesure "), n, F.lit(" cm x "), m2,
                             F.lit(" cm")))
     )
-    notes = o.select(k.alias("note_id"), text.alias("note_text")) \
-        .repartition(spark.sparkContext.defaultParallelism).persist()
+    notes = caching.persist(
+        o.select(k.alias("note_id"), text.alias("note_text"))
+        .repartition(spark.sparkContext.defaultParallelism))
     out = quantity_mentions(notes)
     return out.select(
         F.col("note_id").alias("o_orderkey"),
@@ -1949,6 +1956,7 @@ FROM surv s LEFT JOIN packed p USING (doc_id)
 """
 
 
+@caching.leased
 def corpus_curation_strip(spark, sf_dir):
     """Curation with SPAN-GRANULAR dedup (VERDICT r7 #7): the same
     composed pass as :func:`corpus_curation` but the doc-level exact
@@ -1968,45 +1976,42 @@ def corpus_curation_strip(spark, sf_dir):
     first-arrival dedup and span removal stays a batch-boundary
     compaction pass (see streaming/pipeline_stream.py).
     """
-    from ..core.caching import scope_call, tracked_persist
     from ..operators.dedup import strip_duplicated_spans
     from ..operators.packing import pack_documents
     d = _t(spark, sf_dir, "documents")
-    with scope_call("curation"):
-        kept = curation_quality_gate(d.select("doc_id", "text"))
-        stripped = strip_duplicated_spans(
-            kept.select("doc_id", "text"), n=13)
-        n_tok = F.when(F.col("text_clean") == "", F.lit(0)).otherwise(
-            F.size(F.split("text_clean", " ", -1)))
-        scrubbed = curation_finalize(
-            stripped.select("doc_id", F.col("text_clean").alias("text"),
-                            n_tok.alias("n_tokens"), "n_removed"),
-            extra_cols=("n_removed",))
-        # the compact plane feeds BOTH the packing leg and the final
-        # metadata join; unpersisted, the whole gate+strip subtree
-        # executed twice (measured 2.43 -> 1.41s warm at sf0.1).
-        # text_redacted is Catalyst-pruned (packing only reads
-        # n_tokens) but n_redactions keeps the PII SCAN in the plan
-        # (ADVICE r8 #3) — the persist holds metadata columns only.
-        compact = tracked_persist(
-            scrubbed.select("doc_id", "split", "n_tokens", "n_removed",
-                            "n_redactions"),
-            "curation")
-        train = compact.filter(F.col("split") == "train").select(
-            F.col("doc_id").alias("note_id"), "n_tokens")
-        packed = pack_documents(train, budget=512, n_shards=4,
-                                count_col="n_tokens")
-        return (
-            compact
-            .join(packed.select(F.col("note_id").alias("doc_id"),
-                                "shard", "pack_id"), "doc_id", "left")
-            .select("doc_id", "split",
-                    F.col("n_tokens").cast("bigint").alias("n_tokens"),
-                    F.col("n_removed").cast("bigint").alias("n_removed"),
-                    F.col("n_redactions").cast("bigint")
-                    .alias("n_redactions"),
-                    "shard", "pack_id")
-        )
+    kept = curation_quality_gate(d.select("doc_id", "text"))
+    stripped = strip_duplicated_spans(
+        kept.select("doc_id", "text"), n=13)
+    n_tok = F.when(F.col("text_clean") == "", F.lit(0)).otherwise(
+        F.size(F.split("text_clean", " ", -1)))
+    scrubbed = curation_finalize(
+        stripped.select("doc_id", F.col("text_clean").alias("text"),
+                        n_tok.alias("n_tokens"), "n_removed"),
+        extra_cols=("n_removed",))
+    # the compact plane feeds BOTH the packing leg and the final
+    # metadata join; unpersisted, the whole gate+strip subtree
+    # executed twice (measured 2.43 -> 1.41s warm at sf0.1).
+    # text_redacted is Catalyst-pruned (packing only reads
+    # n_tokens) but n_redactions keeps the PII SCAN in the plan
+    # (ADVICE r8 #3) — the persist holds metadata columns only.
+    compact = caching.persist(
+        scrubbed.select("doc_id", "split", "n_tokens", "n_removed",
+                        "n_redactions"))
+    train = compact.filter(F.col("split") == "train").select(
+        F.col("doc_id").alias("note_id"), "n_tokens")
+    packed = pack_documents(train, budget=512, n_shards=4,
+                            count_col="n_tokens")
+    return (
+        compact
+        .join(packed.select(F.col("note_id").alias("doc_id"),
+                            "shard", "pack_id"), "doc_id", "left")
+        .select("doc_id", "split",
+                F.col("n_tokens").cast("bigint").alias("n_tokens"),
+                F.col("n_removed").cast("bigint").alias("n_removed"),
+                F.col("n_redactions").cast("bigint")
+                .alias("n_redactions"),
+                "shard", "pack_id")
+    )
 
 
 CORPUS_CURATION_STRIP_SQL = f"""
@@ -2956,6 +2961,7 @@ def _load_bpe_pin() -> dict | None:
 _BPE_PIN = _load_bpe_pin()
 
 
+@caching.leased
 def bpe_lifecycle(spark, sf_dir):
     """The FULL tokenizer lifecycle on the driver surface (VERDICT r9
     #8): bpe_train_batched learns a production-count merge table (128
@@ -2970,27 +2976,24 @@ def bpe_lifecycle(spark, sf_dir):
     scripts/pin_bpe_merges.py) and replayed via the wrapped-symbol
     string rewrite — a hash mismatch catches trainer drift, encoder
     drift, or batch-adoption drift."""
-    from ..core.caching import scope_call, tracked_persist
     from ..operators.bpe import bpe_encode, bpe_train_batched
-    with scope_call("bpe"):
-        d = _t(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism)
-        # persisted: the pair-word derivation fed BOTH the trainer's
-        # word-frequency build and the encode pass — two full corpus
-        # derivations for one plane (r15, guide §2.3 compute-once).
-        # Registered under the query's own top-level "bpe" entry (the
-        # trainer's nested entry is a reentrant no-op), released on
-        # the next call.
-        corpus = tracked_persist(_bpe_pair_corpus(d), "bpe")
-        merges = bpe_train_batched(corpus,
-                                   n_merges=_BPE_LIFECYCLE_MERGES,
-                                   batch=_BPE_LIFECYCLE_BATCH)
-        enc = bpe_encode(corpus, merges)
-        return enc.select(
-            "doc_id",
-            F.size("tokens").cast("bigint").alias("n_tokens"),
-            F.concat_ws(" ", "tokens").alias("encoded"),
-        )
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism)
+    # persisted: the pair-word derivation fed BOTH the trainer's
+    # word-frequency build and the encode pass — two full corpus
+    # derivations for one plane (r15, guide §2.3 compute-once).
+    # Leased to this query (the trainer's nested call joins the
+    # lease), released on the next call.
+    corpus = caching.persist(_bpe_pair_corpus(d))
+    merges = bpe_train_batched(corpus,
+                               n_merges=_BPE_LIFECYCLE_MERGES,
+                               batch=_BPE_LIFECYCLE_BATCH)
+    enc = bpe_encode(corpus, merges)
+    return enc.select(
+        "doc_id",
+        F.size("tokens").cast("bigint").alias("n_tokens"),
+        F.concat_ws(" ", "tokens").alias("encoded"),
+    )
 
 
 def _bpe_lifecycle_sql() -> str | None:
@@ -3067,6 +3070,7 @@ def _load_wordpiece_pin() -> dict | None:
 _WP_PIN = _load_wordpiece_pin()
 
 
+@caching.leased
 def wordpiece_lifecycle(spark, sf_dir):
     """The THIRD tokenizer lifecycle (WordPiece, Schuster & Nakajima
     2012 — likelihood-scored merges + greedy longest-match encode,
@@ -3083,31 +3087,27 @@ def wordpiece_lifecycle(spark, sf_dir):
     scripts/pin_wordpiece_vocab.py) and the oracle replays the greedy
     longest-match scan as a recursive CTE over a piece-lookup MAP — a
     hash mismatch catches trainer OR encoder drift."""
-    from ..core.caching import scope_call, tracked_persist
     from ..operators.wordpiece import (wordpiece_encode_words,
                                        wordpiece_train)
-    with scope_call("wordpiece"):
-        d = _t(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism)
-        # persisted: referenced THREE times (trainer word-frequency
-        # build + distinct-word encode plane + per-doc token join) —
-        # three full pair-word derivations for one plane (r15, guide
-        # §2.3).  Registered under the query's top-level "wordpiece"
-        # entry; released on the next call.
-        corpus = tracked_persist(_bpe_pair_corpus(d), "wordpiece")
-        # ONE corpus explode+shuffle feeds BOTH the trainer's word-
-        # frequency table and the distinct-word encode plane (r15,
-        # guide §2.3): the groupBy(word) keys ARE the distinct set the
-        # encode needs, so the former second explode+distinct shuffle
-        # was pure duplication.  Pair-words are never '' (always
-        # 'a_b'), so the sets coincide exactly.
-        wfreq = tracked_persist(
-            corpus.select(
-                F.explode(F.split("text", " ", -1)).alias("w"))
-            .groupBy("w").agg(F.count(F.lit(1)).alias("freq")),
-            "wordpiece")
-        vocab = wordpiece_train(corpus, n_merges=_WP_MERGES,
-                                batch=_WP_BATCH, word_freqs=wfreq)
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism)
+    # persisted: referenced THREE times (trainer word-frequency
+    # build + distinct-word encode plane + per-doc token join) —
+    # three full pair-word derivations for one plane (r15, guide
+    # §2.3).  Leased to this query; released on the next call.
+    corpus = caching.persist(_bpe_pair_corpus(d))
+    # ONE corpus explode+shuffle feeds BOTH the trainer's word-
+    # frequency table and the distinct-word encode plane (r15,
+    # guide §2.3): the groupBy(word) keys ARE the distinct set the
+    # encode needs, so the former second explode+distinct shuffle
+    # was pure duplication.  Pair-words are never '' (always
+    # 'a_b'), so the sets coincide exactly.
+    wfreq = caching.persist(
+        corpus.select(
+            F.explode(F.split("text", " ", -1)).alias("w"))
+        .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
+    vocab = wordpiece_train(corpus, n_merges=_WP_MERGES,
+                            batch=_WP_BATCH, word_freqs=wfreq)
     words = wfreq.select(F.col("w").alias("word"))
     enc = wordpiece_encode_words(words, vocab)
     tok = corpus.select(
@@ -3966,6 +3966,7 @@ def _load_unigram_pin():
 _UNIGRAM_PIN = _load_unigram_pin()
 
 
+@caching.leased
 def unigram_tokenizer(spark, sf_dir):
     """The unigram-LM tokenizer lifecycle (SentencePiece, Kudo 2018 —
     the vocabulary-scoring complement to a0_bpe_lifecycle): RETRAINS
@@ -3978,27 +3979,24 @@ def unigram_tokenizer(spark, sf_dir):
     (resources/unigram_vocab.json) and the oracle replays the integer
     encode dp as a recursive CTE — a hash mismatch catches trainer OR
     encoder drift."""
-    from ..core.caching import scope_call, tracked_persist
     from ..operators.unigram import unigram_encode_words, unigram_train
-    with scope_call("unigram"):
-        d = _t(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism)
-        # persisted: the repartitioned doc scan feeds the trainer's
-        # word-frequency build, the distinct-word encode plane AND the
-        # per-doc token join — three scans+shuffles of the full text
-        # for one plane (r15, guide §2.3).  Released on the next call.
-        d = tracked_persist(d, "unigram")
-        # ONE corpus explode+shuffle feeds BOTH the trainer's word
-        # counts and the distinct-word encode plane (r15, guide §2.3):
-        # the groupBy(word) keys ARE the distinct set, so the former
-        # second explode+distinct shuffle was pure duplication.
-        wfreq = tracked_persist(
-            d.select(F.explode(F.split("text", " ", -1)).alias("word"))
-            .groupBy("word").agg(F.count(F.lit(1)).alias("wcount")),
-            "unigram")
-        vocab, unk = unigram_train(
-            d, vocab_size=300, seed_size=800, max_piece_len=6,
-            iterations=2, scale=4096, word_freqs=wfreq)
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism)
+    # persisted: the repartitioned doc scan feeds the trainer's
+    # word-frequency build, the distinct-word encode plane AND the
+    # per-doc token join — three scans+shuffles of the full text
+    # for one plane (r15, guide §2.3).  Released on the next call.
+    d = caching.persist(d)
+    # ONE corpus explode+shuffle feeds BOTH the trainer's word
+    # counts and the distinct-word encode plane (r15, guide §2.3):
+    # the groupBy(word) keys ARE the distinct set, so the former
+    # second explode+distinct shuffle was pure duplication.
+    wfreq = caching.persist(
+        d.select(F.explode(F.split("text", " ", -1)).alias("word"))
+        .groupBy("word").agg(F.count(F.lit(1)).alias("wcount")))
+    vocab, unk = unigram_train(
+        d, vocab_size=300, seed_size=800, max_piece_len=6,
+        iterations=2, scale=4096, word_freqs=wfreq)
     words = wfreq.select("word")
     enc = unigram_encode_words(words, vocab, unk, max_piece_len=6)
     tok = d.select(

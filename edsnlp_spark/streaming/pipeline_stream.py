@@ -33,6 +33,22 @@ def stream_notes_json(spark: SparkSession, path: str,
     )
 
 
+def _leased_batches(handle):
+    """``handle`` as a foreachBatch body whose persisted planes are
+    leased to the micro-batch and released once its writes are done.
+    Micro-batches run one after another, so by then no lazy plan still
+    reads them, whatever fresh engines the batch built (a per-engine
+    lease would never end for an engine that is not called again)."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        try:
+            with caching.lease(run):
+                handle(batch, batch_id)
+        finally:
+            caching.release(run)
+    return run
+
+
 def annotate_stream(stream_df: DataFrame,
                     batch_fn: Callable[[DataFrame], DataFrame],
                     out_path: str, checkpoint: str,
@@ -44,22 +60,10 @@ def annotate_stream(stream_df: DataFrame,
     """
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        # Bounded cache lifetime for long-running streams (ADVICE r6):
-        # a batch_fn that builds fresh engines per micro-batch (e.g. the
-        # negation chain's QualifierEngine) registers fresh persisted
-        # planes under a fresh owner every batch, and nothing would ever
-        # release them.  Snapshot before / release the delta after the
-        # batch output is written — micro-batches run sequentially, so
-        # no still-lazy plan references the batch's planes by then.
-        snap = caching.snapshot()
-        try:
-            out = batch_fn(batch)
-            out.write.mode("append").parquet(out_path)
-        finally:
-            caching.release_since(snap)
+        batch_fn(batch).write.mode("append").parquet(out_path)
 
     writer = (
-        stream_df.writeStream.foreachBatch(handle)
+        stream_df.writeStream.foreachBatch(_leased_batches(handle))
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
@@ -160,41 +164,37 @@ def curation_stream_strip(stream_docs: DataFrame, out_path: str,
     from pyspark.errors import AnalysisException
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        snap = caching.snapshot()
+        spark = batch.sparkSession
+        kept = curation_quality_gate(
+            batch.select("doc_id", "text")).select("doc_id", "text")
         try:
-            spark = batch.sparkSession
-            kept = curation_quality_gate(
-                batch.select("doc_id", "text")).select("doc_id", "text")
-            try:
-                ref = (spark.read.parquet(index_path)
-                       .filter(F.col("batch") < F.lit(batch_id)))
-            except AnalysisException:
-                ref = None  # cold start: no index yet
-            stripped = strip_spans_incremental(kept, ref, n=n)
-            n_tok = F.when(F.col("text_clean") == "", F.lit(0)).otherwise(
-                F.size(F.split("text_clean", " ", -1)))
-            out = curation_finalize(
-                stripped.select("doc_id",
-                                F.col("text_clean").alias("text"),
-                                n_tok.alias("n_tokens"), "n_removed"),
-                extra_cols=("n_removed",),
-            ).select("doc_id", "split",
-                     F.col("n_tokens").cast("bigint").alias("n_tokens"),
-                     F.col("n_removed").cast("bigint").alias("n_removed"),
-                     "text_redacted")
-            out.write.mode("overwrite").parquet(
-                f"{out_path}/batch={batch_id}")
-            # the batch's own PRE-strip windows become the next
-            # increment (first-arrival: later batches defer to these)
-            (_window_hash_rows(kept, n, "doc_id", "text")
-             .groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
-             .write.mode("overwrite")
-             .parquet(f"{index_path}/batch={batch_id}"))
-        finally:
-            caching.release_since(snap)
+            ref = (spark.read.parquet(index_path)
+                   .filter(F.col("batch") < F.lit(batch_id)))
+        except AnalysisException:
+            ref = None  # cold start: no index yet
+        stripped = strip_spans_incremental(kept, ref, n=n)
+        n_tok = F.when(F.col("text_clean") == "", F.lit(0)).otherwise(
+            F.size(F.split("text_clean", " ", -1)))
+        out = curation_finalize(
+            stripped.select("doc_id",
+                            F.col("text_clean").alias("text"),
+                            n_tok.alias("n_tokens"), "n_removed"),
+            extra_cols=("n_removed",),
+        ).select("doc_id", "split",
+                 F.col("n_tokens").cast("bigint").alias("n_tokens"),
+                 F.col("n_removed").cast("bigint").alias("n_removed"),
+                 "text_redacted")
+        out.write.mode("overwrite").parquet(
+            f"{out_path}/batch={batch_id}")
+        # the batch's own PRE-strip windows become the next
+        # increment (first-arrival: later batches defer to these)
+        (_window_hash_rows(kept, n, "doc_id", "text")
+         .groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
+         .write.mode("overwrite")
+         .parquet(f"{index_path}/batch={batch_id}"))
 
     writer = (
-        stream_docs.writeStream.foreachBatch(handle)
+        stream_docs.writeStream.foreachBatch(_leased_batches(handle))
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
@@ -230,80 +230,75 @@ def fuzzy_dedup_stream(stream_docs: DataFrame, out_path: str,
         _minhash_banded, cross_minhash_candidates, minhash_band_index)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        snap = caching.snapshot()
+        spark = batch.sparkSession
+        docs = batch.select("doc_id", "text")
         try:
-            spark = batch.sparkSession
-            docs = batch.select("doc_id", "text")
-            try:
-                idx = (spark.read.parquet(index_path)
-                       .filter(F.col("batch") < F.lit(batch_id))
-                       .groupBy("bk")
-                       .agg(F.sum("n_docs").alias("n_docs"),
-                            F.min("min_id").alias("min_id")))
-            except AnalysisException:
-                idx = None  # cold start: no index yet
-            # persisted: the batch's banded signature plane feeds FOUR
-            # evaluations per micro-batch (within-batch election
-            # groupBy + join-back, the corpus probe inside
-            # cross_minhash_candidates, and the index increment inside
-            # minhash_band_index — the latter two rebuild the SAME
-            # canonical plan from the same ``docs``, so the cache
-            # manager substitutes this plane for them); unpersisted,
-            # the shingle + signature fold ran per reference (r14,
-            # guide §2.3 — the dedup_resolution_stream sibling already
-            # did this).  release_since(snap) frees it after the batch.
-            from ..core.caching import tracked_persist
-            banded = tracked_persist(
-                _minhash_banded(docs, "doc_id", "text",
-                                n, num_hashes, bands), "dedup")
-            # within-batch first-arrival: a doc is a dup of the batch's
-            # smallest id sharing any band
-            within = (
-                banded.groupBy("bk")
-                .agg(F.min("doc_id").alias("wmin"),
-                     F.count(F.lit(1)).alias("wcnt"))
-                .filter(F.col("wcnt") >= 2)
-                .join(banded, "bk")
-                .filter(F.col("doc_id") > F.col("wmin"))
-                .groupBy("doc_id")
-                .agg(F.min("wmin").alias("within_keeper_id"))
+            idx = (spark.read.parquet(index_path)
+                   .filter(F.col("batch") < F.lit(batch_id))
+                   .groupBy("bk")
+                   .agg(F.sum("n_docs").alias("n_docs"),
+                        F.min("min_id").alias("min_id")))
+        except AnalysisException:
+            idx = None  # cold start: no index yet
+        # persisted: the batch's banded signature plane feeds FOUR
+        # evaluations per micro-batch (within-batch election
+        # groupBy + join-back, the corpus probe inside
+        # cross_minhash_candidates, and the index increment inside
+        # minhash_band_index — the latter two rebuild the SAME
+        # canonical plan from the same ``docs``, so the cache
+        # manager substitutes this plane for them); unpersisted,
+        # the shingle + signature fold ran per reference (r14,
+        # guide §2.3 — the dedup_resolution_stream sibling already
+        # did this).  The batch's lease frees it after the writes.
+        banded = caching.persist(
+            _minhash_banded(docs, "doc_id", "text",
+                            n, num_hashes, bands))
+        # within-batch first-arrival: a doc is a dup of the batch's
+        # smallest id sharing any band
+        within = (
+            banded.groupBy("bk")
+            .agg(F.min("doc_id").alias("wmin"),
+                 F.count(F.lit(1)).alias("wcnt"))
+            .filter(F.col("wcnt") >= 2)
+            .join(banded, "bk")
+            .filter(F.col("doc_id") > F.col("wmin"))
+            .groupBy("doc_id")
+            .agg(F.min("wmin").alias("within_keeper_id"))
+        )
+        if idx is not None:
+            hits = cross_minhash_candidates(
+                docs, idx, n=n, num_hashes=num_hashes, bands=bands
+            ).select("doc_id", "n_bands_hit", "ref_example_id")
+        else:
+            hits = docs.select(
+                "doc_id",
+                F.lit(None).cast("bigint").alias("n_bands_hit"),
+                F.lit(None).cast("bigint").alias("ref_example_id"),
+            ).limit(0)
+        out = (
+            docs.select("doc_id")
+            .join(hits, "doc_id", "left")
+            .join(within, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce("n_bands_hit", F.lit(0)).cast("bigint")
+                .alias("n_bands_hit"),
+                "ref_example_id", "within_keeper_id",
+                (F.col("n_bands_hit").isNotNull()
+                 | F.col("within_keeper_id").isNotNull())
+                .alias("flagged"),
             )
-            if idx is not None:
-                hits = cross_minhash_candidates(
-                    docs, idx, n=n, num_hashes=num_hashes, bands=bands
-                ).select("doc_id", "n_bands_hit", "ref_example_id")
-            else:
-                hits = docs.select(
-                    "doc_id",
-                    F.lit(None).cast("bigint").alias("n_bands_hit"),
-                    F.lit(None).cast("bigint").alias("ref_example_id"),
-                ).limit(0)
-            out = (
-                docs.select("doc_id")
-                .join(hits, "doc_id", "left")
-                .join(within, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("n_bands_hit", F.lit(0)).cast("bigint")
-                    .alias("n_bands_hit"),
-                    "ref_example_id", "within_keeper_id",
-                    (F.col("n_bands_hit").isNotNull()
-                     | F.col("within_keeper_id").isNotNull())
-                    .alias("flagged"),
-                )
-            )
-            out.write.mode("overwrite").parquet(
-                f"{out_path}/batch={batch_id}")
-            # the batch's grouped band keys become the next increment
-            minhash_band_index(docs, n=n, num_hashes=num_hashes,
-                               bands=bands) \
-                .write.mode("overwrite") \
-                .parquet(f"{index_path}/batch={batch_id}")
-        finally:
-            caching.release_since(snap)
+        )
+        out.write.mode("overwrite").parquet(
+            f"{out_path}/batch={batch_id}")
+        # the batch's grouped band keys become the next increment
+        minhash_band_index(docs, n=n, num_hashes=num_hashes,
+                           bands=bands) \
+            .write.mode("overwrite") \
+            .parquet(f"{index_path}/batch={batch_id}")
 
     writer = (
-        stream_docs.writeStream.foreachBatch(handle)
+        stream_docs.writeStream.foreachBatch(_leased_batches(handle))
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
@@ -399,56 +394,50 @@ def dedup_resolution_stream(stream_docs: DataFrame, index_path: str,
     restart)."""
     from pyspark.errors import AnalysisException
 
-    from ..core.caching import tracked_persist
     from ..operators.dedup import (_minhash_banded, components_index_view,
                                    incremental_components_delta)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        snap = caching.snapshot()
+        spark = batch.sparkSession
+        docs = batch.select("doc_id", "text")
+        banded = caching.persist(
+            _minhash_banded(docs, "doc_id", "text", n, num_hashes,
+                            bands).withColumnRenamed("doc_id", "id"))
+        edges = (
+            banded.join(banded.select(F.col("id").alias("__r"),
+                                      "bk"), "bk")
+            .filter(F.col("id") < F.col("__r"))
+            .select(F.col("id").alias("id_a"),
+                    F.col("__r").alias("id_b")))
         try:
-            spark = batch.sparkSession
-            docs = batch.select("doc_id", "text")
-            banded = tracked_persist(
-                _minhash_banded(docs, "doc_id", "text", n, num_hashes,
-                                bands).withColumnRenamed("doc_id", "id"),
-                "dedup")
-            edges = (
-                banded.join(banded.select(F.col("id").alias("__r"),
-                                          "bk"), "bk")
-                .filter(F.col("id") < F.col("__r"))
-                .select(F.col("id").alias("id_a"),
-                        F.col("__r").alias("id_b")))
-            try:
-                ref = (spark.read.parquet(f"{index_path}/postings")
-                       .filter(F.col("batch") < F.lit(batch_id)))
-                cross = (
-                    banded.join(ref.select(F.col("id").alias("__r"),
-                                           "bk"), "bk")
-                    .select(F.least("id", "__r").alias("id_a"),
-                            F.greatest("id", "__r").alias("id_b"))
-                    .filter(F.col("id_a") != F.col("id_b")))
-                edges = edges.unionByName(cross)
-            except AnalysisException:
-                pass                       # cold start: no postings yet
-            labels = components_index_view(spark, index_path,
-                                           before_batch=batch_id)
-            delta = incremental_components_delta(
-                labels, edges.distinct(), max_iter=max_iter)
-            delta.write.mode("overwrite").parquet(
-                f"{index_path}/delta/batch={batch_id}")
-            banded.write.mode("overwrite").parquet(
-                f"{index_path}/postings/batch={batch_id}")
-            docs.select(
-                "doc_id",
-                F.size(F.array_distinct(F.split("text", " ", -1)))
-                .cast("long").alias("nd"),
-            ).write.mode("overwrite").parquet(
-                f"{index_path}/quality/batch={batch_id}")
-        finally:
-            caching.release_since(snap)
+            ref = (spark.read.parquet(f"{index_path}/postings")
+                   .filter(F.col("batch") < F.lit(batch_id)))
+            cross = (
+                banded.join(ref.select(F.col("id").alias("__r"),
+                                       "bk"), "bk")
+                .select(F.least("id", "__r").alias("id_a"),
+                        F.greatest("id", "__r").alias("id_b"))
+                .filter(F.col("id_a") != F.col("id_b")))
+            edges = edges.unionByName(cross)
+        except AnalysisException:
+            pass                       # cold start: no postings yet
+        labels = components_index_view(spark, index_path,
+                                       before_batch=batch_id)
+        delta = incremental_components_delta(
+            labels, edges.distinct(), max_iter=max_iter)
+        delta.write.mode("overwrite").parquet(
+            f"{index_path}/delta/batch={batch_id}")
+        banded.write.mode("overwrite").parquet(
+            f"{index_path}/postings/batch={batch_id}")
+        docs.select(
+            "doc_id",
+            F.size(F.array_distinct(F.split("text", " ", -1)))
+            .cast("long").alias("nd"),
+        ).write.mode("overwrite").parquet(
+            f"{index_path}/quality/batch={batch_id}")
 
     writer = (
-        stream_docs.writeStream.foreachBatch(handle)
+        stream_docs.writeStream.foreachBatch(_leased_batches(handle))
         .option("checkpointLocation", checkpoint)
     )
     if available_now:
@@ -484,20 +473,16 @@ def components_stream(edge_stream: DataFrame, index_path: str,
                                    incremental_components_delta)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        snap = caching.snapshot()
-        try:
-            spark = batch.sparkSession
-            labels = components_index_view(spark, index_path,
-                                           before_batch=batch_id)
-            delta = incremental_components_delta(
-                labels, batch, id_a=id_a, id_b=id_b, max_iter=max_iter)
-            delta.write.mode("overwrite").parquet(
-                f"{index_path}/delta/batch={batch_id}")
-        finally:
-            caching.release_since(snap)
+        spark = batch.sparkSession
+        labels = components_index_view(spark, index_path,
+                                       before_batch=batch_id)
+        delta = incremental_components_delta(
+            labels, batch, id_a=id_a, id_b=id_b, max_iter=max_iter)
+        delta.write.mode("overwrite").parquet(
+            f"{index_path}/delta/batch={batch_id}")
 
     writer = (
-        edge_stream.writeStream.foreachBatch(handle)
+        edge_stream.writeStream.foreachBatch(_leased_batches(handle))
         .option("checkpointLocation", checkpoint)
     )
     if available_now:

@@ -293,8 +293,7 @@ def test_r12_operators_empty_inputs(spark, tmp_path):
     assert minhash_index_candidates(spark, path, empty_docs).count() == 0
     # semantic clustering over an empty vector table -> empty
     empty_emb = spark.createDataFrame([], "node long, emb array<long>")
-    assert semantic_clusters_over(
-        empty_emb, cache_scope="test_empty").count() == 0
+    assert semantic_clusters_over(empty_emb).count() == 0
     # 8x8 single-block JPEG (smallest legal image) round-trips
     one = np.full((8, 8), 77, dtype=np.uint8)
     px = decode_jpeg(encode_jpeg(one))

@@ -425,12 +425,10 @@ def test_semantic_clusters_hot_bucket_raises(spark):
         [(i, [1, 2, 3, 4, 5, 6, 7, 8]) for i in range(30)],
         "node long, emb array<long>")
     with _pytest.raises(Exception, match="hot LSH bucket"):
-        semantic_clusters_over(clones, max_bucket=10,
-                               cache_scope="test_sem").collect()
+        semantic_clusters_over(clones, max_bucket=10).collect()
     # with the cap above occupancy the same corpus clusters cleanly:
     # all 30 identical vectors land in one component
-    got = semantic_clusters_over(clones, max_bucket=64,
-                                 cache_scope="test_sem").collect()
+    got = semantic_clusters_over(clones, max_bucket=64).collect()
     assert len({r.cluster for r in got}) == 1
     assert sum(r.is_canonical for r in got) == 1
 

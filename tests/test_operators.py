@@ -979,9 +979,10 @@ def test_pseudo_real_exact_tie_keeps_real(spark):
 
 def test_tracked_persist_release(spark):
     """r4 (ADVICE r3 #2): operator-internal persists (qualifier cues/
-    bounds, history planes, semdedup assignment) are TRACKED; a
-    long-lived session releases them with caching.release() after
-    materializing the output instead of accumulating cached tables."""
+    bounds, history planes, semdedup assignment) are TRACKED, leased to
+    their owner; a long-lived session releases them with
+    caching.release(owner) after materializing the output instead of
+    accumulating cached tables."""
     from edsnlp_spark.core import caching
     caching.release()  # clean slate
     ndf = run_pipeline(spark, ["pas de douleur aujourd'hui"]).persist()
@@ -991,18 +992,18 @@ def test_tracked_persist_release(spark):
                                      "termination": ["mais"]})
     q.qualify(ndf, ents).collect()
     live = caching.tracked_scopes()
-    assert live.get("qualifier", 0) >= 2  # cues + bounds
-    released = caching.release("qualifier")
+    assert live.get("QualifierEngine", 0) >= 2  # cues + bounds
+    released = caching.release(q)
     assert released >= 2
-    assert caching.tracked_scopes().get("qualifier", 0) == 0
+    assert caching.tracked_scopes().get("QualifierEngine", 0) == 0
     ndf.unpersist()
 
 
 def test_repeated_qualify_calls_stay_bounded(spark):
     """r6 (VERDICT r5 #7): repeated qualify() calls on the SAME engine
     without caching.release() must not accumulate cached planes — the
-    scope_call boundary releases the previous call's planes on
-    re-entry, so N calls hold the same count as one call."""
+    engine's next top-level call ends the previous call's lease, so N
+    calls hold the same count as one call."""
     from edsnlp_spark.core import caching
     from edsnlp_spark.operators.qualifiers import QualifierEngine
     caching.release()
@@ -1011,46 +1012,21 @@ def test_repeated_qualify_calls_stay_bounded(spark):
     q = QualifierEngine("negation", {"preceding": ["pas de"],
                                      "termination": ["mais"]})
     q.qualify(ndf, ents).collect()
-    one_call = caching.tracked_scopes().get("qualifier", 0)
+    one_call = caching.tracked_scopes().get("QualifierEngine", 0)
     assert one_call >= 2
     for _ in range(3):
         out = q.qualify(ndf, ents)
-    assert caching.tracked_scopes().get("qualifier", 0) == one_call
+    assert caching.tracked_scopes().get("QualifierEngine", 0) == one_call
     # the latest call's output is still correct after the releases
     assert out.collect()[0]["negation"] is True
     caching.release()
     ndf.unpersist()
 
 
-def test_release_since_identity_not_count(spark):
-    """r8 (ADVICE r7 #2): release_since must track plane IDENTITIES.
-    With per-scope counts, a pre-snapshot plane removed mid-batch slid
-    the post-snapshot planes below the saved index and silently KEPT
-    them — the streaming leak this pins."""
-    from edsnlp_spark.core import caching
-    caching.release()
-    a = caching.tracked_persist(spark.range(3).toDF("a"), "x")
-    snap = caching.snapshot()
-    b = caching.tracked_persist(spark.range(4).toDF("b"), "x")
-    # a same-owner scope re-entry inside the batch removes the
-    # PRE-snapshot plane
-    caching.release_plane(a, "x")
-    released = caching.release_since(snap)
-    assert released == 1  # b released despite the list shrinking
-    assert caching.tracked_scopes().get("x", 0) == 0
-    assert b.storageLevel.useMemory is False  # actually unpersisted
-    # planes present at snapshot time stay untouched wherever they sit
-    c = caching.tracked_persist(spark.range(5).toDF("c"), "y")
-    snap2 = caching.snapshot()
-    assert caching.release_since(snap2) == 0
-    assert caching.tracked_scopes().get("y", 0) == 1
-    caching.release()
-
-
 def test_different_owners_do_not_release_each_other(spark):
-    """r6: two engines sharing the 'qualifier' scope (facade chains
+    """r6: two engines called one after the other (facade chains
     several before materializing) must keep BOTH calls' planes — only
-    the same owner's re-entry releases."""
+    the same owner's next top-level call releases."""
     from edsnlp_spark.core import caching
     from edsnlp_spark.operators.qualifiers import QualifierEngine
     caching.release()
@@ -1061,9 +1037,9 @@ def test_different_owners_do_not_release_each_other(spark):
     q2 = QualifierEngine("hypothesis", {"preceding": ["si"],
                                         "termination": ["mais"]})
     out1 = q1.qualify(ndf, ents)
-    n1 = caching.tracked_scopes().get("qualifier", 0)
+    n1 = caching.tracked_scopes().get("QualifierEngine", 0)
     out2 = q2.qualify(ndf, out1)
-    assert caching.tracked_scopes().get("qualifier", 0) == 2 * n1
+    assert caching.tracked_scopes().get("QualifierEngine", 0) == 2 * n1
     rows = {r.lexical_variant: (r.negation, r.hypothesis)
             for r in out2.collect()}
     assert rows["douleur"] == (True, False)
@@ -1072,23 +1048,23 @@ def test_different_owners_do_not_release_each_other(spark):
     ndf.unpersist()
 
 
-def test_nested_scope_call_is_reentrant(spark):
+def test_nested_lease_is_reentrant(spark):
     """r6: HistoryQualifier.qualify() calls self.date_table() — the
-    nested same-owner entry must NOT release the planes the outer call
-    already registered (only top-level re-entry releases)."""
+    nested same-owner call must NOT release the planes the outer call
+    already leased (only a top-level call releases)."""
     from edsnlp_spark.core import caching
     caching.release()
-    with caching.scope_call("t", owner=None):
-        df1 = caching.tracked_persist(
-            spark.range(3).toDF("a"), "t")
-        with caching.scope_call("t", owner=None):
-            caching.tracked_persist(spark.range(4).toDF("b"), "t")
-        assert caching.tracked_scopes().get("t", 0) == 2
+    owner = object()
+    with caching.lease(owner):
+        df1 = caching.persist(spark.range(3).toDF("a"))
+        with caching.lease(owner):
+            caching.persist(spark.range(4).toDF("b"))
+        assert caching.tracked_scopes() == {"object": 2}
         assert df1.storageLevel.useMemory or df1.storageLevel.useDisk
-    # a fresh top-level entry releases both
-    with caching.scope_call("t", owner=None):
+    # a fresh top-level call releases both
+    with caching.lease(owner):
         pass
-    assert caching.tracked_scopes().get("t", 0) == 0
+    assert caching.tracked_scopes() == {}
 
 
 def test_entities_grouped_matches_flat_path(spark):
@@ -1426,7 +1402,8 @@ def test_bpe_encode_arrow_scales_past_expression_cliff(spark):
 def test_bpe_train_holds_bounded_planes(spark):
     """ADVICE r7 #1: bpe_train must retire each iteration's vocab plane
     once its successor is materialized — at most ~2 cached planes at
-    any time, not one per merge."""
+    any time, not one per merge — and unpersist the rest on return
+    (the planes are round-local: the merges list is all it returns)."""
     from edsnlp_spark.core import caching
     from edsnlp_spark.operators.bpe import bpe_train
 
@@ -1435,7 +1412,7 @@ def test_bpe_train_holds_bounded_planes(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     merges = bpe_train(docs, n_merges=12)
     assert len(merges) == 12
-    assert caching.tracked_scopes().get("bpe", 0) <= 2, \
+    assert caching.tracked_scopes().get("bpe_train", 0) == 0, \
         caching.tracked_scopes()
 
 
@@ -1800,7 +1777,7 @@ def test_duplicated_windows_skew_immune_plan(spark):
     assert "partial_count" in plan or "HashAggregate" in plan
     out.count()
     from edsnlp_spark.core import caching
-    caching.release("dedup")
+    caching.release()
 
 
 def test_bigram_logppl_hand_computed(spark, tmp_path):

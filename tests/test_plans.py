@@ -153,7 +153,7 @@ def test_bm25_batch_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoin" in s
     assert "CartesianProduct" not in s
     from edsnlp_spark.core import caching
-    caching.release("retrieval")
+    caching.release()
 
 
 def test_strip_duplicated_spans_plan_shape(spark, sf_dir):
@@ -167,7 +167,7 @@ def test_strip_duplicated_spans_plan_shape(spark, sf_dir):
     # collect_set, not a per-hash window
     assert "Window" not in s
     from edsnlp_spark.core import caching
-    caching.release("dedup")
+    caching.release()
 
 
 def test_dsir_plan_shape(spark, sf_dir):
@@ -179,7 +179,7 @@ def test_dsir_plan_shape(spark, sf_dir):
     assert "BroadcastHashJoin" in s
     assert "CartesianProduct" not in s
     from edsnlp_spark.core import caching
-    caching.release("selection")
+    caching.release()
 
 
 def test_hll_plan_is_one_small_exchange(spark, sf_dir):

@@ -193,12 +193,12 @@ def test_streaming_negation_chain_restart(spark, tmp_path):
 
 def test_streaming_cache_stays_bounded(spark, tmp_path):
     """r7 (ADVICE r6 #1): a batch_fn that builds a FRESH QualifierEngine
-    per micro-batch registers fresh persisted planes under a fresh
-    owner each time; scope_call's per-owner release never fires for
-    them.  annotate_stream must release the per-batch delta after each
-    write, so a long-running stream holds a bounded number of tracked
-    planes — after N micro-batches the registry is back to its
-    pre-stream state."""
+    per micro-batch persists fresh planes every batch; a per-engine
+    lease would never end for them.  annotate_stream leases each
+    micro-batch's planes to the batch and releases them after its
+    write, so a long-running stream holds a bounded number of cached
+    planes — after N micro-batches both the lease registry and Spark's
+    persistent RDDs are back to their pre-stream state."""
     from edsnlp_spark.core import caching
     from edsnlp_spark.core.base import Pipeline
     from edsnlp_spark.operators.sentences import SentenceSegmenter
@@ -219,12 +219,16 @@ def test_streaming_cache_stays_bounded(spark, tmp_path):
                              SentenceSegmenter()])(batch)
         return negation_chain(prepared)
 
-    before = caching.snapshot()
+    def rdd_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    tracked_before, rdds_before = caching.tracked_scopes(), rdd_ids()
     q = annotate_stream(
         stream_notes_json(spark, str(src), max_files_per_trigger=1),
         batch_fn, str(tmp_path / "out"), str(tmp_path / "ckpt"))
     q.awaitTermination(180)
-    assert caching.snapshot() == before
+    assert caching.tracked_scopes() == tracked_before
+    assert not (rdd_ids() - rdds_before)
     out = spark.read.parquet(str(tmp_path / "out"))
     assert out.count() == 6 * 3  # 3 targets x 2 notes x 3 batches
 
