@@ -1,14 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query contract for the Spark engine.
 
 entry(spark)    — flagship query (qualifier engine) on sf0.001.
 queries()       — every implemented operator from SURVEY.md §2 as
                   (spark, sf_dir) -> DataFrame callables.
-oracle_sql()    — matching ANSI SQL for DuckDB; queries without an
-                  oracle (python-side stubs) are omitted and get the
-                  driver's rows-only check.
+oracle_sql()    — matching ANSI SQL for DuckDB, keyed like queries();
+                  tests/test_oracle_parity.py checks each pair.
 
-Implementations live in edsnlp_spark/queries/ (relational.py,
-textops.py, scaleops.py); operators in edsnlp_spark/operators/.
+Both are views of edsnlp_spark.queries.all_queries(); implementations
+live in edsnlp_spark/queries/, operators in edsnlp_spark/operators/.
 """
 
 from __future__ import annotations
@@ -23,105 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from edsnlp_spark.queries import all_queries  # noqa: E402
 
-# Driver-window rotation.  The driver's correctness gate records only
-# the FIRST 50 queries() keys; with 90+ queries, the rest get no
-# driver-recorded row that round (ALL queries are covered every session
-# by the identical in-repo replica gate, tests/test_oracle_parity.py).
-#
-# MECHANISM (fixed per VERDICT r7 #1): rotations r5–r7 rekeyed names
-# with an `a0_` prefix but queries() kept building its dict from
-# sorted(all_queries().items()) — sorted by the PRE-rekey canonical
-# name — so the dict insertion order (what the driver windows on) never
-# changed and the prefix NEVER moved a query into the window.  Two
-# fixes, belt and braces:
-#   1. queries()/oracle_sql() now sort by the DRIVER key, so dict
-#      insertion order == prefixed-key order == sorted-keys order (the
-#      two keying models coincide; tests/test_driver_window.py pins the
-#      first-50 membership in ITERATION order).
-#   2. The 13 queries with zero driver rows through r7 carry the a0_
-#      prefix in their CANONICAL registry key (edsnlp_spark/queries/*):
-#      a0_semdedup_embeddings, a0_sentence_boundaries,
-#      a0_sequence_packing, a0_source_mixture_sample,
-#      a0_split_assignment, a0_tnm_mentions, a0_umls_scale_match,
-#      a0_unigram_logppl, a0_url_domain_filtering, a0_simhash_neardup,
-#      a0_source_divergence, a0_strip_duplicated_spans, a0_winnowing_fp
-#      — robust under ANY driver keying model.
-#
-# Rotation #10 (set at r15 START; the driver grades the round-END
-# keying — rotate once, early, never re-rotate mid-round): the 46
-# queries whose newest driver-green row is r11 (they would exceed the
-# 3-round staleness cap once CORRECTNESS_r14 lands).  33 of the 46 are
-# canonical a0_ names — those re-enter the window simply by NOT being
-# listed in _ROTATE_OUT_OF_WINDOW; the 13 plain names below gain the
-# prefix via _ROTATE_INTO_WINDOW.  Slots are freed by dropping the
-# prefix from the driver key of r13/r14-verified canonical a0_ names
-# whose behavior is unchanged in r15 (_ROTATE_OUT_OF_WINDOW) —
-# canonical registry keys stay stable so bench_best / COVERAGE / tests
-# don't churn.  Window budget (slot arithmetic FIRST, the r12 lesson):
-# 13 rotated-in + 33 due canonical a0_ + 3 r14-verified names whose
-# PLANS change in this optimization round and must stay windowed
-# (a0_bpe_lifecycle, a0_unigram_tokenizer, a0_hybrid_retrieval — the
-# VERDICT r14 #2/#3 targets) = 49, leaving 1 spare slot (filled by the
-# first plain name, badwords_filter — a free extra verification).
-_ROTATE_INTO_WINDOW = frozenset({
-    # newest driver row r11 (plain canonical names):
-    "adicap_decode", "composed_units", "contextual_match",
-    "cross_corpus_dedup", "customers_without_orders",
-    "dates_extraction", "family_tokens", "filter_spans_greedy",
-    "gopher_line_repetition", "gopher_repetition", "hf_ner_spans",
-    "history_qualifier", "simhash_fingerprints",
-})
-
-# r13/r14-verified canonical a0_ names whose behavior is UNCHANGED in
-# r15: the driver key drops the prefix so they leave the window and
-# free slots.  Canonical a0_ names NOT listed here either hit the r11
-# staleness cap (the 33 in the budget comment above) or have their
-# plans CHANGED in r15 and stay windowed (a0_bpe_lifecycle,
-# a0_unigram_tokenizer, a0_hybrid_retrieval).
-_ROTATE_OUT_OF_WINDOW = frozenset({
-    "a0_badwords_filter",
-    "a0_bigram_pmi",
-    "a0_bloom_decontamination",
-    "a0_clustering_coefficient",
-    "a0_contrastive_pairs",
-    "a0_corpus_curation_strip",
-    "a0_crf_distillation",
-    "a0_cross_minhash_dedup",
-    "a0_dedup_components_incremental",
-    "a0_dedup_keeper_election",
-    "a0_dedup_keeper_incremental",
-    "a0_distillation_eval",
-    "a0_duplication_profile",
-    "a0_ivfpq_indexed_search",
-    "a0_jpeg_decode",
-    "a0_knn_label_propagation",
-    "a0_langid_trained",
-    "a0_length_quantiles",
-    "a0_mmr_diversified_search",
-    "a0_mp4_frames",
-    "a0_ner_crf_viterbi",
-    "a0_note_dates",
-    "a0_pagerank_copurchase",
-    "a0_phrase_search",
-    "a0_quality_auc",
-    "a0_related_parts_ppr",
-    "a0_semantic_clusters",
-    "a0_semdedup_embeddings",
-    "a0_suicide_pollution",
-    "a0_table_cells",
-    "a0_temperature_mixture",
-    "a0_tokenizer_fertility",
-    "a0_weighted_pagerank",
-})
-
-
-def _driver_key(name: str) -> str:
-    if name in _ROTATE_INTO_WINDOW:
-        return f"a0_{name}"
-    if name in _ROTATE_OUT_OF_WINDOW:
-        return name[len("a0_"):]
-    return name
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full qualifier pipeline (tokenize -> sentence segment ->
@@ -132,20 +32,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Sort by the DRIVER key (VERDICT r7 #1): dict insertion order must
-    # equal prefixed-key order, or the a0_ rekeying never changes the
-    # driver's first-50 window.
-    return {
-        _driver_key(name): fn
-        for name, (fn, _) in sorted(all_queries().items(),
-                                    key=lambda kv: _driver_key(kv[0]))
-    }
+    return {name: fn for name, (fn, _) in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        _driver_key(name): sql
-        for name, (_, sql) in sorted(all_queries().items(),
-                                     key=lambda kv: _driver_key(kv[0]))
-        if sql
-    }
+    return {name: sql for name, (_, sql) in all_queries().items() if sql}

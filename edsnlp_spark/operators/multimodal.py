@@ -7,16 +7,16 @@ resize / frame-sample run as Arrow-batched pandas functions over
 standard formats need none: PPM (P6), 24-bit BI_RGB BMP and 16-bit
 PCM WAV decode with pure numpy / the stdlib ``wave`` module
 (r10: decode_ppm/decode_bmp/decode_wav + nn_resize + decode_features —
-REAL decode, driver-checked by a0_multimodal_decode), PNG decodes
+REAL decode, oracle-checked by multimodal_decode), PNG decodes
 with stdlib ``zlib`` + per-row unfiltering (r11: decode_png/encode_png,
-all 5 filter types, driver-checked by a0_png_decode), and baseline
+all 5 filter types, oracle-checked by png_decode), and baseline
 JPEG decodes with stdlib struct + numpy huffman/IDCT (r12:
-decode_jpeg/encode_jpeg incl. 4:2:0/4:2:2 sampling, driver-checked by
-a0_jpeg_decode).  MP4 (r13): ISO-BMFF is a pure container — the box
+decode_jpeg/encode_jpeg incl. 4:2:0/4:2:2 sampling, oracle-checked by
+jpeg_decode).  MP4 (r13): ISO-BMFF is a pure container — the box
 walk + sample tables (encode_mp4_mjpeg / mp4_sample_table /
 decode_mp4_frames below) parse with stdlib struct, and an MJPEG track
-decodes per-frame through the real decode_jpeg (driver-checked by
-a0_mp4_frames).  The remaining stub surface is non-MJPEG video codecs
+decodes per-frame through the real decode_jpeg (oracle-checked by
+mp4_frames).  The remaining stub surface is non-MJPEG video codecs
 (avc1/hvc1) and progressive JPEG: ``decode_stub=True`` produces
 deterministic pseudo-features from the bytes; ``decode_stub=False``
 raises NotImplementedError where an ffmpeg call would go.  The

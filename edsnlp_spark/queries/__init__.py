@@ -1,56 +1,27 @@
 """Query registry: every declared operator's (spark_fn, oracle_sql) pair.
 
-The driver contract (__spark_entry__.py) exposes these via queries() /
-oracle_sql(); tests/test_oracle_parity.py replicates the driver's
-DuckDB comparison locally.
+The entry contract (__spark_entry__.py) exposes these via queries() /
+oracle_sql(); tests/test_oracle_parity.py runs each one against its
+DuckDB oracle.
 """
 
 from __future__ import annotations
 
 
 def all_queries() -> dict:
-    """name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None)."""
-    from . import relational
+    """name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None).
+
+    A module that fails to import, or a name registered by two modules,
+    raises rather than silently shrinking the registry."""
+    from . import (advanced, disorders_q, domain, lexicon, miscpipes,
+                   relational, relational2, scaleops, textops)
     out: dict = {}
-    out.update(relational.QUERIES)
-    try:
-        from . import textops
-        out.update(textops.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import scaleops
-        out.update(scaleops.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import advanced
-        out.update(advanced.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import relational2
-        out.update(relational2.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import lexicon
-        out.update(lexicon.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import disorders_q
-        out.update(disorders_q.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import domain
-        out.update(domain.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import miscpipes
-        out.update(miscpipes.QUERIES)
-    except ImportError:
-        pass
+    for mod in (relational, textops, scaleops, advanced, relational2,
+                lexicon, disorders_q, domain, miscpipes):
+        clash = out.keys() & mod.QUERIES.keys()
+        if clash:
+            raise ValueError(
+                f"{mod.__name__} redefines registered queries: "
+                f"{sorted(clash)}")
+        out.update(mod.QUERIES)
     return out

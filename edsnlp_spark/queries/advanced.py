@@ -359,7 +359,7 @@ def crf_distillation(spark, sf_dir):
     are a reproducible constant of (data, config) — pinned at sf0.01
     in resources/distilled_crf.json (regenerate with
     scripts/pin_distilled_params.py) and replayed through the same
-    recursive-CTE Viterbi as a0_ner_crf_viterbi.  A hash mismatch
+    recursive-CTE Viterbi as ner_crf_viterbi.  A hash mismatch
     therefore catches ANY drift in the training pipeline, not just the
     decode."""
     from ..operators.trainable import ner_linear_crf
@@ -483,7 +483,7 @@ def negation_distillation(spark, sf_dir):
 
 def negation_distillation_eval(spark, sf_dir):
     """Held-out student-vs-teacher quality for the distilled negation
-    head (a0_distillation_eval precedent): train on doc_id % 5 != 4,
+    head (distillation_eval precedent): train on doc_id % 5 != 4,
     score binary P/R/F1 + accuracy on the held-out fifth (positive
     class = negated).  Floor pinned >= 0.70 F1 in pytest."""
     from ..operators.trainable import classify_docs
@@ -696,20 +696,20 @@ QUERIES = {
     "filter_spans_greedy": (filter_spans_greedy, FILTER_SPANS_GREEDY_SQL),
     "simstring_fuzzy": (simstring_fuzzy, SIMSTRING_FUZZY_SQL),
     # NEW r9: real numeric trainable head (no torch)
-    "a0_ner_crf_viterbi": (ner_crf_viterbi, NER_CRF_VITERBI_SQL),
+    "ner_crf_viterbi": (ner_crf_viterbi, NER_CRF_VITERBI_SQL),
     # r9 rows-only -> ORACLED r10 (VERDICT r9 #2): the student decode
     # runs integer-quantized averaged params, replayed from the pinned
     # snapshot through the same recursive-CTE Viterbi
-    "a0_crf_distillation": (crf_distillation, CRF_DISTILLATION_SQL),
+    "crf_distillation": (crf_distillation, CRF_DISTILLATION_SQL),
     # NEW r10: held-out teacher-vs-student quality row (exact-span
     # P/R/F1), fully oracled
-    "a0_distillation_eval": (distillation_eval, DISTILLATION_EVAL_SQL),
+    "distillation_eval": (distillation_eval, DISTILLATION_EVAL_SQL),
     # NEW r11 (VERDICT r10 #5): qualifier-head distillation — rule
     # engine teacher -> integer perceptron student over distance-
     # tagged window features, pinned-weights oracle
-    "a0_negation_distillation": (negation_distillation,
-                                 NEGATION_DISTILLATION_SQL),
+    "negation_distillation": (negation_distillation,
+                              NEGATION_DISTILLATION_SQL),
     # NEW r11: held-out binary P/R/F1 + accuracy for the distilled head
-    "a0_negation_distillation_eval": (negation_distillation_eval,
-                                      NEGATION_DISTILLATION_EVAL_SQL),
+    "negation_distillation_eval": (negation_distillation_eval,
+                                   NEGATION_DISTILLATION_EVAL_SQL),
 }

@@ -443,13 +443,12 @@ WHERE o_orderkey % 50 <= 40
 
 
 QUERIES = {
-    # a0_ canonical keys: no driver row through r7 (VERDICT r7 #1)
-    "a0_tnm_mentions": (tnm_mentions, TNM_MENTIONS_SQL),
+    "tnm_mentions": (tnm_mentions, TNM_MENTIONS_SQL),
     "adicap_decode": (adicap_decode, ADICAP_DECODE_SQL),
     "reported_speech_tokens": (reported_speech_tokens,
                                REPORTED_SPEECH_TOKENS_SQL),
     "family_tokens": (family_tokens, FAMILY_TOKENS_SQL),
     "history_qualifier": (history_qualifier, HISTORY_QUALIFIER_SQL),
-    "a0_sentence_boundaries": (sentence_boundaries, SENTENCE_BOUNDARIES_SQL),
+    "sentence_boundaries": (sentence_boundaries, SENTENCE_BOUNDARIES_SQL),
     "charlson_scores": (charlson_scores, CHARLSON_SCORES_SQL),
 }

@@ -220,6 +220,5 @@ FROM grams g JOIN terms t ON g.n = t.n AND g.g = t.key
 
 QUERIES = {
     "drugs_lexicon_match": (drugs_lexicon_match, DRUGS_LEXICON_MATCH_SQL),
-    # a0_ canonical key: no driver row through r7 (VERDICT r7 #1)
-    "a0_umls_scale_match": (umls_scale_match, UMLS_SCALE_MATCH_SQL),
+    "umls_scale_match": (umls_scale_match, UMLS_SCALE_MATCH_SQL),
 }

@@ -4,8 +4,8 @@ and eds.suicide_attempt composed with the eds.pollution strip.
 
 The documents table is synthetic single-spaced word salad, so each
 query SYNTHESIZES the clinical surface the operator needs from the doc
-tokens / doc_id deterministically (the a0_multimodal_decode /
-a0_png_decode recipe), runs the REAL operator, and the oracle replays
+tokens / doc_id deterministically (the multimodal_decode /
+png_decode recipe), runs the REAL operator, and the oracle replays
 the expected output in SQL.  Construction parameters vary per doc
 (doc_id modulus) so every code path is exercised in one run.
 """
@@ -274,7 +274,7 @@ FROM documents WHERE doc_id % 7 <> 6
 
 
 QUERIES = {
-    "a0_table_cells": (table_cells, TABLE_CELLS_SQL),
-    "a0_note_dates": (note_dates, NOTE_DATES_SQL),
-    "a0_suicide_pollution": (suicide_pollution, SUICIDE_POLLUTION_SQL),
+    "table_cells": (table_cells, TABLE_CELLS_SQL),
+    "note_dates": (note_dates, NOTE_DATES_SQL),
+    "suicide_pollution": (suicide_pollution, SUICIDE_POLLUTION_SQL),
 }

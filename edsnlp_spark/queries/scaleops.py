@@ -128,7 +128,7 @@ GROUP BY b.doc_id
 
 
 # Full-recompute replay of the ingest-shaped incremental components
-# (a0_dedup_components_incremental): the pair universe is band
+# (dedup_components_incremental): the pair universe is band
 # collisions (the MinHash banding above) VERIFIED by exact 3-gram
 # Jaccard >= 0.2, resolved by reachability — what the base-index +
 # batch-probe + index-update chain composes to.
@@ -398,7 +398,7 @@ def dedup_components_incremental(spark, sf_dir):
     # every label fold must re-elect the touched clusters' keepers or
     # the shared artifact's keeper invariant breaks for whichever
     # query folds the batch FIRST (r14: on a fresh host this query
-    # runs before a0_dedup_keeper_incremental, and a labels-only fold
+    # runs before dedup_keeper_incremental, and a labels-only fold
     # left the stored keepers permanently stale — replays no-op, so
     # the staleness never heals)
     touched = D.components_index_update(spark, f"{path}/comps",
@@ -1404,7 +1404,7 @@ def semdedup_embeddings(spark, sf_dir):
     member of every in-cell pair with cosine >= 0.95.  Every planted
     clone scores exactly 1.0 against its source, so the clone set
     always falls (pinned in pytest); the oracle replays the FULL
-    training chain (the a0_trained_ann_topk precedent) before the
+    training chain (the trained_ann_topk precedent) before the
     assignment/drop joins."""
     tv = caching.persist(_trained_vec_table(spark, sf_dir))
     clones = tv.filter(F.col("vec_id") % 37 == 1).select(
@@ -2022,7 +2022,7 @@ def clustering_coefficient(spark, sf_dir):
     (graph.triangle_counts: degree-ordered orientation, each triangle
     found once from its min-rank vertex, forward-degree-bounded wedge
     work) over the same 1995 co-purchase graph as
-    a0_pagerank_copurchase."""
+    pagerank_copurchase."""
     from ..operators.graph import triangle_counts
     li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= "1995-01-01")
@@ -2099,7 +2099,7 @@ def related_parts_ppr(spark, sf_dir):
     3-part seed set over the 1995 co-purchase graph — the
     "related items" recommendation shape: teleport mass is confined to
     the seeds, so rank measures co-purchase proximity to them.  Same
-    integer machinery as a0_pagerank_copurchase; 6 iterations."""
+    integer machinery as pagerank_copurchase; 6 iterations."""
     from ..operators.graph import pagerank
     li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= "1995-01-01")
@@ -2402,7 +2402,7 @@ def _graph_emb_seed(spark, sf_dir) -> str:
     _text_seed_index): train_graph_embeddings output parquet under the
     gitignored ``.graph_emb/<tag>``, keyed by the lineitem fingerprint
     + embedding config.  Training is deterministic, so the artifact's
-    values equal a fresh retrain (what a0_graph_embeddings verifies
+    values equal a fresh retrain (what graph_embeddings verifies
     per run against the full-replay oracle) — consumers read trained
     vectors at index-read cost instead of re-running the walk/train
     pipeline inline."""
@@ -2904,7 +2904,7 @@ FROM m
 def png_decode(spark, sf_dir):
     """REAL PNG decode on the driver surface (VERDICT r10 #4): per-doc
     pixels (the same sanitized-ASCII 8x4 payload as
-    a0_multimodal_decode) are ENCODED into a real PNG — stdlib zlib
+    multimodal_decode) are ENCODED into a real PNG — stdlib zlib
     deflate, scanline filter type = doc_id %% 5, so every run
     exercises all five unfilter paths (None/Sub/Up/Average/Paeth) —
     then decoded back by the pure-stdlib decode_png inside
@@ -2961,7 +2961,7 @@ def jpeg_decode(spark, sf_dir):
     YCbCr image — four constant-Y 8x8 quadrants (code points 1-4)
     under image-constant chroma (5-6).  The repo's own encode_jpeg
     writes a genuine JFIF stream whose LAYOUT varies per doc so every
-    run exercises every decode path (the a0_png_decode filter=%5
+    run exercises every decode path (the png_decode filter=%5
     recipe): doc_id %% 2 picks 4:2:0 (one 2x2-luma MCU + subsampled
     chroma) vs 4:4:4 (four interleaved MCUs), and doc_id %% 3 == 0
     adds DRI/RST1-interval restarts on the 4:4:4 stream.
@@ -3304,34 +3304,34 @@ FROM g WHERE i = 96
 QUERIES = {
     "minhash_lsh_dedup": (minhash_lsh_dedup, MINHASH_LSH_DEDUP_SQL),
     # NEW r10 session-2: integer-exact PageRank over the co-supplier graph
-    "a0_pagerank_copurchase": (pagerank_copurchase,
-                               PAGERANK_COPURCHASE_SQL),
+    "pagerank_copurchase": (pagerank_copurchase,
+                            PAGERANK_COPURCHASE_SQL),
     # NEW r10 session-2: weighted PageRank over co-purchase counts
-    "a0_weighted_pagerank": (weighted_pagerank_copurchase,
-                             WEIGHTED_PAGERANK_SQL),
+    "weighted_pagerank": (weighted_pagerank_copurchase,
+                          WEIGHTED_PAGERANK_SQL),
     # NEW r10 session-2: skip-gram pairs from the walk corpus
-    "a0_walk_skipgram_pairs": (walk_skipgram_pairs,
-                               WALK_SKIPGRAM_PAIRS_SQL),
+    "walk_skipgram_pairs": (walk_skipgram_pairs,
+                            WALK_SKIPGRAM_PAIRS_SQL),
     # NEW r11: trained graph embeddings (DeepWalk loop closed) with a
     # FULL-REPLAY oracle of the whole training pipeline
-    "a0_graph_embeddings": (graph_embeddings, GRAPH_EMBEDDINGS_SQL),
+    "graph_embeddings": (graph_embeddings, GRAPH_EMBEDDINGS_SQL),
     # NEW r11: cosine ANN over the TRAINED vectors
-    "a0_trained_ann_topk": (trained_ann_topk, TRAINED_ANN_TOPK_SQL),
+    "trained_ann_topk": (trained_ann_topk, TRAINED_ANN_TOPK_SQL),
     # NEW r11: trained vectors -> LSH buckets -> verified pairs -> CC
-    "a0_semantic_clusters": (semantic_clusters, SEMANTIC_CLUSTERS_SQL),
+    "semantic_clusters": (semantic_clusters, SEMANTIC_CLUSTERS_SQL),
     # NEW r10 session-2: deterministic random-walk corpus
-    "a0_graph_walks": (graph_walks, GRAPH_WALKS_SQL),
+    "graph_walks": (graph_walks, GRAPH_WALKS_SQL),
     # NEW r10 session-2: personalized PageRank (related-parts recs)
-    "a0_related_parts_ppr": (related_parts_ppr, RELATED_PARTS_PPR_SQL),
+    "related_parts_ppr": (related_parts_ppr, RELATED_PARTS_PPR_SQL),
     # NEW r10 session-2: triangle counts / clustering coefficient
-    "a0_clustering_coefficient": (clustering_coefficient,
-                                  CLUSTERING_COEFFICIENT_SQL),
+    "clustering_coefficient": (clustering_coefficient,
+                               CLUSTERING_COEFFICIENT_SQL),
     # NEW r10 session-2: MMR result diversification
-    "a0_mmr_diversified_search": (mmr_diversified_search,
-                                  MMR_DIVERSIFIED_SEARCH_SQL),
+    "mmr_diversified_search": (mmr_diversified_search,
+                               MMR_DIVERSIFIED_SEARCH_SQL),
     # NEW r10: incremental fuzzy dedup against the persisted band index
-    "a0_cross_minhash_dedup": (cross_minhash_dedup,
-                               CROSS_MINHASH_DEDUP_SQL),
+    "cross_minhash_dedup": (cross_minhash_dedup,
+                            CROSS_MINHASH_DEDUP_SQL),
     "ngram_jaccard": (ngram_jaccard, NGRAM_JACCARD_SQL),
     "ngram_jaccard_capped": (ngram_jaccard_capped, NGRAM_JACCARD_CAPPED_SQL),
     "dedup_components": (dedup_components, DEDUP_COMPONENTS_SQL),
@@ -3340,27 +3340,21 @@ QUERIES = {
     # persisted postings + label index probed by the batch, index
     # updated in place; oracle replays the full recompute over the
     # band-collision ∩ Jaccard-verified pair universe
-    "a0_dedup_components_incremental": (dedup_components_incremental,
-                                        DEDUP_COMPONENTS_INCREMENTAL_SQL),
+    "dedup_components_incremental": (dedup_components_incremental,
+                                     DEDUP_COMPONENTS_INCREMENTAL_SQL),
     # NEW r13: ingest-shaped keeper election — touched-cluster-only
     # re-election over the persisted keeper index (VERDICT r12 #6)
-    "a0_dedup_keeper_incremental": (dedup_keeper_incremental,
-                                    DEDUP_KEEPER_INCREMENTAL_SQL),
+    "dedup_keeper_incremental": (dedup_keeper_incremental,
+                                 DEDUP_KEEPER_INCREMENTAL_SQL),
     # NEW r12: quality-aware keeper election over near-dup clusters
     # (keep the most informative member, not the smallest id)
-    "a0_dedup_keeper_election": (dedup_keeper_election,
-                                 DEDUP_KEEPER_ELECTION_SQL),
+    "dedup_keeper_election": (dedup_keeper_election,
+                              DEDUP_KEEPER_ELECTION_SQL),
     "simhash_fingerprints": (simhash_fingerprints, SIMHASH_FINGERPRINTS_SQL),
-    # a0_-prefixed CANONICAL keys: queries with no driver-recorded
-    # correctness row through r7 (VERDICT r7 #1 — the rekey layer never
-    # moved them into the first-50 window because queries() sorted by
-    # the canonical name).  The prefix is baked into the registry key
-    # itself so EVERY keying model (dict order, sorted keys) puts them
-    # in the driver's checked window.
-    "a0_simhash_neardup": (simhash_neardup, SIMHASH_NEARDUP_SQL),
+    "simhash_neardup": (simhash_neardup, SIMHASH_NEARDUP_SQL),
     # NEW r8: the Manku-config scale path with the hot-block cap
-    "a0_simhash_neardup_capped": (simhash_neardup_capped,
-                                  SIMHASH_NEARDUP_CAPPED_SQL),
+    "simhash_neardup_capped": (simhash_neardup_capped,
+                               SIMHASH_NEARDUP_CAPPED_SQL),
     "diversity_sample": (diversity_sample, DIVERSITY_SAMPLE_SQL),
     "embedding_topk": (embedding_topk, EMBEDDING_TOPK_SQL),
     "embedding_topk_ivf": (embedding_topk_ivf, EMBEDDING_TOPK_IVF_SQL),
@@ -3368,28 +3362,28 @@ QUERIES = {
     "embedding_topk_ivfpq": (embedding_topk_ivfpq, EMBEDDING_TOPK_IVFPQ_SQL),
     # NEW r10: the persisted-index read path, driver-checked end-to-end
     # (IVFADC-R: saved cell-partitioned codes + exact rerank)
-    "a0_ivfpq_indexed_search": (ivfpq_indexed_search,
-                                IVFPQ_INDEXED_SEARCH_SQL),
-    "a0_semdedup_embeddings": (semdedup_embeddings, SEMDEDUP_SQL),
+    "ivfpq_indexed_search": (ivfpq_indexed_search,
+                             IVFPQ_INDEXED_SEARCH_SQL),
+    "semdedup_embeddings": (semdedup_embeddings, SEMDEDUP_SQL),
     # NEW r8: semi-supervised labeling composed from the ANN machinery
-    "a0_knn_label_propagation": (knn_label_propagation_q,
-                                 KNN_LABEL_PROPAGATION_SQL),
+    "knn_label_propagation": (knn_label_propagation_q,
+                              KNN_LABEL_PROPAGATION_SQL),
     # NEW r8: dedup-tier evaluation harness (planted-clone recall)
-    "a0_dedup_recall_eval": (dedup_recall_eval, DEDUP_RECALL_EVAL_SQL),
+    "dedup_recall_eval": (dedup_recall_eval, DEDUP_RECALL_EVAL_SQL),
     "multimodal_features": (multimodal_features, MULTIMODAL_FEATURES_SQL),
     # NEW r10 session-2: REAL pure-numpy PPM decode on the driver surface
-    "a0_multimodal_decode": (multimodal_decode, MULTIMODAL_DECODE_SQL),
+    "multimodal_decode": (multimodal_decode, MULTIMODAL_DECODE_SQL),
     # NEW r11 (VERDICT r10 #4): stdlib-zlib PNG decode, all 5 filters
-    "a0_png_decode": (png_decode, PNG_DECODE_SQL),
+    "png_decode": (png_decode, PNG_DECODE_SQL),
     # NEW r12 (VERDICT r11 #6): baseline JPEG — marker parse, huffman
     # entropy decode, dequant, exact IDCT, int64 YCbCr->RGB
-    "a0_jpeg_decode": (jpeg_decode, JPEG_DECODE_SQL),
-    "a0_mp4_frames": (mp4_frames, MP4_FRAMES_SQL),
+    "jpeg_decode": (jpeg_decode, JPEG_DECODE_SQL),
+    "mp4_frames": (mp4_frames, MP4_FRAMES_SQL),
     # NEW r11 (VERDICT r10 #9): exact-integer Goertzel spectral probes
     # over the real PCM decode
-    "a0_wav_spectral": (wav_spectral, WAV_SPECTRAL_SQL),
+    "wav_spectral": (wav_spectral, WAV_SPECTRAL_SQL),
     # NEW r9: RRF hybrid retrieval composing both index tiers
-    "a0_hybrid_retrieval": (hybrid_retrieval, HYBRID_RETRIEVAL_SQL),
+    "hybrid_retrieval": (hybrid_retrieval, HYBRID_RETRIEVAL_SQL),
     # NEW r9: contrastive hard-negative mining over the IVF cells
-    "a0_contrastive_pairs": (contrastive_pairs, CONTRASTIVE_PAIRS_SQL),
+    "contrastive_pairs": (contrastive_pairs, CONTRASTIVE_PAIRS_SQL),
 }

@@ -3969,7 +3969,7 @@ _UNIGRAM_PIN = _load_unigram_pin()
 @caching.leased
 def unigram_tokenizer(spark, sf_dir):
     """The unigram-LM tokenizer lifecycle (SentencePiece, Kudo 2018 —
-    the vocabulary-scoring complement to a0_bpe_lifecycle): RETRAINS
+    the vocabulary-scoring complement to bpe_lifecycle): RETRAINS
     the piece vocabulary per run (substring seeding + 2 hard-EM
     Viterbi rounds, operators/unigram.py), Viterbi-encodes the
     distinct-word plane under it, and rolls per-doc subword stats.
@@ -4076,7 +4076,7 @@ def rouge_overlap(spark, sf_dir):
 def rouge_l_overlap(spark, sf_dir):
     """ROUGE-L (metrics.rouge_l): LCS-based P/R/F1 of each document
     vs its successor — the ORDER-SENSITIVE generation-eval complement
-    of a0_rouge_overlap's multiset n-gram counts.  Sequences truncate
+    of rouge_overlap's multiset n-gram counts.  Sequences truncate
     to 64 tokens on BOTH engines (the documented config bound that
     keeps the per-pair dp O(64^2) at any corpus scale); the oracle
     replays the exact dp as a recursive CTE — the within-row
@@ -4454,58 +4454,55 @@ QUERIES = {
     "bigram_logppl": (bigram_logppl, BIGRAM_LOGPPL_SQL),
     "bpe_encoding": (bpe_encoding, BPE_ENCODING_SQL),
     # NEW r10: full tokenizer lifecycle — batched train -> arrow encode
-    "a0_bpe_lifecycle": (bpe_lifecycle, BPE_LIFECYCLE_SQL),
+    "bpe_lifecycle": (bpe_lifecycle, BPE_LIFECYCLE_SQL),
     # NEW r11: the THIRD tokenizer lifecycle — WordPiece likelihood
     # merges + greedy longest-match encode, pinned-vocab oracle
-    "a0_wordpiece_lifecycle": (wordpiece_lifecycle,
-                               WORDPIECE_LIFECYCLE_SQL),
+    "wordpiece_lifecycle": (wordpiece_lifecycle,
+                            WORDPIECE_LIFECYCLE_SQL),
     # NEW r10 session-2: unigram-LM tokenizer lifecycle (train + encode)
-    "a0_unigram_tokenizer": (unigram_tokenizer, UNIGRAM_TOKENIZER_SQL),
+    "unigram_tokenizer": (unigram_tokenizer, UNIGRAM_TOKENIZER_SQL),
     "ccnet_buckets": (ccnet_buckets, CCNET_BUCKETS_SQL),
     "cms_token_counts": (cms_token_counts, CMS_TOKEN_COUNTS_SQL),
     "cross_corpus_dedup": (cross_corpus_dedup, CROSS_CORPUS_DEDUP_SQL),
-    # a0_-prefixed CANONICAL keys: no driver row through r7 (VERDICT r7
-    # #1) — prefix baked into the registry key so every driver keying
-    # model windows them.
-    "a0_source_divergence": (source_divergence_q, SOURCE_DIVERGENCE_SQL),
+    "source_divergence": (source_divergence_q, SOURCE_DIVERGENCE_SQL),
     # NEW r8 (VERDICT r7 #8): sketch composed into the source monitor
-    "a0_source_vocab_saturation": (source_vocab_saturation_q,
-                                   SOURCE_VOCAB_SATURATION_SQL),
+    "source_vocab_saturation": (source_vocab_saturation_q,
+                                SOURCE_VOCAB_SATURATION_SQL),
     # NEW r8 breadth: blocklist filter, A-ES weighted sampling,
     # sliding-window chunking, per-source tokenizer fertility
-    "a0_badwords_filter": (badwords_filter, BADWORDS_FILTER_SQL),
-    "a0_weighted_doc_sample": (weighted_doc_sample,
-                               WEIGHTED_DOC_SAMPLE_SQL),
-    "a0_document_chunking": (document_chunking, DOCUMENT_CHUNKING_SQL),
-    "a0_tokenizer_fertility": (tokenizer_fertility,
-                               _tokenizer_fertility_sql()),
-    "a0_bigram_pmi": (bigram_pmi, BIGRAM_PMI_SQL),
-    "a0_tfidf_keywords": (tfidf_keyword_extraction, TFIDF_KEYWORDS_SQL),
-    "a0_corpus_length_profile": (corpus_length_profile,
-                                 CORPUS_LENGTH_PROFILE_SQL),
+    "badwords_filter": (badwords_filter, BADWORDS_FILTER_SQL),
+    "weighted_doc_sample": (weighted_doc_sample,
+                            WEIGHTED_DOC_SAMPLE_SQL),
+    "document_chunking": (document_chunking, DOCUMENT_CHUNKING_SQL),
+    "tokenizer_fertility": (tokenizer_fertility,
+                            _tokenizer_fertility_sql()),
+    "bigram_pmi": (bigram_pmi, BIGRAM_PMI_SQL),
+    "tfidf_keywords": (tfidf_keyword_extraction, TFIDF_KEYWORDS_SQL),
+    "corpus_length_profile": (corpus_length_profile,
+                              CORPUS_LENGTH_PROFILE_SQL),
     "bm25_search": (bm25_search, BM25_SEARCH_SQL),
     "bm25_search_batch": (bm25_search_batch, BM25_SEARCH_BATCH_SQL),
     # NEW r10 session-2: composed chunk->index->retrieve pipeline
-    "a0_chunk_retrieval": (chunk_retrieval, CHUNK_RETRIEVAL_SQL),
+    "chunk_retrieval": (chunk_retrieval, CHUNK_RETRIEVAL_SQL),
     # NEW r10 session-2: histogram-sketch quantile estimates
-    "a0_length_quantiles": (length_quantiles, LENGTH_QUANTILES_SQL),
+    "length_quantiles": (length_quantiles, LENGTH_QUANTILES_SQL),
     # NEW r10 session-2: ROUGE-N generation-eval overlap
-    "a0_rouge_overlap": (rouge_overlap, ROUGE_OVERLAP_SQL),
+    "rouge_overlap": (rouge_overlap, ROUGE_OVERLAP_SQL),
     # NEW r11: ROUGE-L — order-sensitive LCS eval, doubling-pass
     # recursive-CTE dp oracle
-    "a0_rouge_l": (rouge_l_overlap, ROUGE_L_SQL),
+    "rouge_l": (rouge_l_overlap, ROUGE_L_SQL),
     # NEW r10 session-2: positional phrase search
-    "a0_phrase_search": (phrase_search, PHRASE_SEARCH_SQL),
+    "phrase_search": (phrase_search, PHRASE_SEARCH_SQL),
     # NEW r10 session-2: BM25 served from the persisted inverted index
-    "a0_bm25_indexed_search": (bm25_indexed_search, BM25_INDEXED_SEARCH_SQL),
+    "bm25_indexed_search": (bm25_indexed_search, BM25_INDEXED_SEARCH_SQL),
     "bm25_eval_metrics": (bm25_eval_metrics, BM25_EVAL_METRICS_SQL),
     "dsir_selection": (dsir_selection, DSIR_SELECTION_SQL),
     "hll_distinct_windows": (hll_distinct_windows,
                              HLL_DISTINCT_WINDOWS_SQL),
-    "a0_winnowing_fp": (winnowing_fp, WINNOWING_FP_SQL),
+    "winnowing_fp": (winnowing_fp, WINNOWING_FP_SQL),
     "exact_substring_dedup": (exact_substring_dedup, EXACT_SUBSTRING_SQL),
-    "a0_strip_duplicated_spans": (strip_duplicated_spans_q,
-                                  STRIP_DUPLICATED_SPANS_SQL),
+    "strip_duplicated_spans": (strip_duplicated_spans_q,
+                               STRIP_DUPLICATED_SPANS_SQL),
     "hypothesis_tokens": (hypothesis_tokens, HYPOTHESIS_TOKENS_SQL),
     "markup_extraction": (markup_extraction, MARKUP_EXTRACTION_SQL),
     "endlines_rule": (endlines_rule, ENDLINES_RULE_SQL),
@@ -4513,19 +4510,19 @@ QUERIES = {
                                  BOILERPLATE_LINES_SQL),
     "gopher_line_repetition": (gopher_line_repetition,
                                GOPHER_LINE_REPETITION_SQL),
-    "a0_url_domain_filtering": (url_domain_filtering,
-                                URL_DOMAIN_FILTERING_SQL),
+    "url_domain_filtering": (url_domain_filtering,
+                             URL_DOMAIN_FILTERING_SQL),
     "token_stats_by_lang": (token_stats_by_lang, TOKEN_STATS_BY_LANG_SQL),
     "doc_quality": (doc_quality, DOC_QUALITY_SQL),
     "quality_model_scores": (quality_model_scores, QUALITY_MODEL_SCORES_SQL),
     # NEW r13: per-decile calibration + Mann-Whitney AUC for the
     # quality classifier (integer midrank arithmetic)
-    "a0_quality_auc": (quality_auc, QUALITY_AUC_SQL),
+    "quality_auc": (quality_auc, QUALITY_AUC_SQL),
     "bpe_token_counts": (bpe_token_counts, BPE_TOKEN_COUNTS_SQL),
     "lang_id_heuristic": (lang_id_heuristic, LANG_ID_HEURISTIC_SQL),
     # NEW r10: trained model-based language ID (integer-quantized
     # multiclass perceptron export as a pure projection)
-    "a0_langid_trained": (langid_trained, LANGID_TRAINED_SQL),
+    "langid_trained": (langid_trained, LANGID_TRAINED_SQL),
     "doc_fingerprint": (doc_fingerprint, DOC_FINGERPRINT_SQL),
     "dedup_exact": (dedup_exact, DEDUP_EXACT_SQL),
     "phrase_match_tokens": (phrase_match_tokens, PHRASE_MATCH_TOKENS_SQL),
@@ -4540,19 +4537,19 @@ QUERIES = {
     "pii_redaction": (pii_redaction, PII_REDACTION_SQL),
     "decontamination_overlap": (decontamination_overlap,
                                 DECONTAMINATION_SQL),
-    "a0_bloom_decontamination": (bloom_decontamination, BLOOM_DECONTAMINATION_SQL),
-    "a0_duplication_profile": (duplication_profile, DUPLICATION_PROFILE_SQL),
-    "a0_temperature_mixture": (temperature_mixture, TEMPERATURE_MIXTURE_SQL),
-    "a0_sequence_packing": (sequence_packing, SEQUENCE_PACKING_SQL),
-    "a0_unigram_logppl": (unigram_logppl, UNIGRAM_LOGPPL_SQL),
+    "bloom_decontamination": (bloom_decontamination, BLOOM_DECONTAMINATION_SQL),
+    "duplication_profile": (duplication_profile, DUPLICATION_PROFILE_SQL),
+    "temperature_mixture": (temperature_mixture, TEMPERATURE_MIXTURE_SQL),
+    "sequence_packing": (sequence_packing, SEQUENCE_PACKING_SQL),
+    "unigram_logppl": (unigram_logppl, UNIGRAM_LOGPPL_SQL),
     "gopher_repetition": (gopher_repetition, GOPHER_REPETITION_SQL),
-    "a0_split_assignment": (split_assignment, SPLIT_ASSIGNMENT_SQL),
+    "split_assignment": (split_assignment, SPLIT_ASSIGNMENT_SQL),
     "corpus_curation": (corpus_curation, CORPUS_CURATION_SQL),
     # NEW r8 (VERDICT r7 #7): span-granular dedup inside the composed
-    # curation pass (a0_ canonical key: new queries enter the window)
-    "a0_corpus_curation_strip": (corpus_curation_strip,
-                                 CORPUS_CURATION_STRIP_SQL),
-    "a0_source_mixture_sample": (source_mixture_sample, SOURCE_MIXTURE_SQL),
+    # curation pass
+    "corpus_curation_strip": (corpus_curation_strip,
+                              CORPUS_CURATION_STRIP_SQL),
+    "source_mixture_sample": (source_mixture_sample, SOURCE_MIXTURE_SQL),
     "composed_units": (composed_units, COMPOSED_UNITS_SQL),
     "hf_ner_spans": (hf_ner_spans, HF_NER_SPANS_SQL),
     "quantity_mentions": (quantity_mentions_q, QUANTITY_MENTIONS_SQL),

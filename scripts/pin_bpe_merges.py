@@ -1,6 +1,6 @@
 """Pin the batched-trained BPE merge table at sf0.01 (VERDICT r9 #8).
 
-The a0_bpe_lifecycle query trains ~128 merges with bpe_train_batched on
+The bpe_lifecycle query trains ~128 merges with bpe_train_batched on
 the derived pair-word corpus (adjacent-token pairs joined by '_' — the
 raw corpus has only ~31 distinct words and exhausts at ~110 merges, the
 r8 measurement) and encodes the same corpus with the Arrow path.

@@ -7,7 +7,7 @@ translate(text, 'etaoins', 'zqxjkvw') — on the training split
 (doc_id % 5 != 4), quantizes onto the 2^16 integer grid, and snapshots
 the weights to edsnlp_spark/resources/langid_weights.json.  Training is
 fully deterministic (explicit shards, sorted order), so the snapshot is
-a constant of (data, config); the a0_langid_trained oracle replays the
+a constant of (data, config); the langid_trained oracle replays the
 integer scorer from it.  Rerun on config or testdata changes:
 
     python scripts/pin_langid_weights.py [sf_dir]

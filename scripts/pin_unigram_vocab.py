@@ -7,7 +7,7 @@ and snapshots the vocabulary to
 edsnlp_spark/resources/unigram_vocab.json.  Training is fully
 deterministic (exact integer E-step counts, sorted driver-side
 M-step), so the snapshot is a constant of (data, config); the
-a0_unigram_tokenizer oracle replays the integer encode dp from it —
+unigram_tokenizer oracle replays the integer encode dp from it —
 the query RETRAINS per run, so any training-pipeline drift breaks the
 driver hash.  Rerun on config or testdata changes:
 

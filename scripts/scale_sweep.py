@@ -1,10 +1,9 @@
-"""Run EVERY driver query against the 10x replica (count-only smoke).
+"""Run EVERY registered query against the 10x replica (count-only smoke).
 
-Purpose (r4): the bench's `scale_10x` section curves the five heaviest
-queries; this sweep proves the OTHER ~60 also execute cleanly at 10x —
-no codegen fallback, no broadcast-size failure, no driver collect — and
-records per-query wall seconds to SCALE_SWEEP.json for the scale story
-in SCALE.md.
+The sweep proves each query executes cleanly at 10x — no codegen
+fallback, no broadcast-size failure, no driver collect — and records
+per-query wall seconds to SCALE_SWEEP.json for the scale story in
+SCALE.md.
 
 Notes on the replica (scripts/gen_scale10x.py): fact tables are 10
 key-shifted copies; dims (region/nation) stay fixed-size by TPC-H

@@ -2887,7 +2887,7 @@ def test_jpeg_rich_gray_bitstream_exact():
 def test_jpeg_constant_color_exact_int_colorspace():
     """Constant 8x8 YCbCr blocks with all-ones quant tables round-trip
     EXACTLY (DC-only), and the YCbCr->RGB conversion is the exact
-    int64 fixed-point formula the a0_jpeg_decode oracle mirrors."""
+    int64 fixed-point formula the jpeg_decode oracle mirrors."""
     import numpy as np
 
     from edsnlp_spark.operators.multimodal import (_J_CB_B, _J_CB_G,

@@ -89,7 +89,7 @@ def test_umls_scale_no_broadcast(spark, sf_dir):
     """The 200k-form lexicon tier must NOT broadcast the terms table:
     the anchor join is a shuffle-hash join (hinted), which is the only
     place a ShuffledHashJoin can appear in this plan."""
-    s = plan_of(spark, sf_dir, "a0_umls_scale_match")
+    s = plan_of(spark, sf_dir, "umls_scale_match")
     assert "ShuffledHashJoin" in s, "anchor join lost the shuffle_hash hint"
     # the terms range-generator side must not appear under a broadcast
     assert "BroadcastExchange" not in s.split("ShuffledHashJoin")[1][:2000] \
@@ -102,8 +102,8 @@ def test_domain_queries_native_and_broadcast(spark, sf_dir):
     # locate fold — only zero-width patterns take the exact Arrow path,
     # which is why history_qualifier is exempt: its date regexes carry
     # \b and deliberately run exact)
-    for name in ("a0_tnm_mentions", "adicap_decode", "charlson_scores",
-                 "a0_sentence_boundaries", "family_tokens",
+    for name in ("tnm_mentions", "adicap_decode", "charlson_scores",
+                 "sentence_boundaries", "family_tokens",
                  "reported_speech_tokens"):
         s = plan_of(spark, sf_dir, name)
         assert "BatchEvalPython" not in s and "ArrowEvalPython" not in s \
@@ -161,7 +161,7 @@ def test_strip_duplicated_spans_plan_shape(spark, sf_dir):
     window hash, never a Window.partitionBy(h) — the hot-boilerplate
     skew rule from VERDICT r6 #2 applies to the removal half too; and
     reconstruction joins LEFT so untouched docs pass through."""
-    s = plan_of(spark, sf_dir, "a0_strip_duplicated_spans")
+    s = plan_of(spark, sf_dir, "strip_duplicated_spans")
     assert "partial_count" in s or "HashAggregate" in s
     # the only Window ops allowed are none — ranges merge via
     # collect_set, not a per-hash window
@@ -197,7 +197,7 @@ def test_source_vocab_saturation_plan_shape(spark, sf_dir):
     aggregated map-side (HashAggregate on (src, idx), bounded by
     sources x 2^p rows per task), totals carried IN the register rows
     (no second corpus scan, no join), no window, no cartesian."""
-    s = plan_of(spark, sf_dir, "a0_source_vocab_saturation")
+    s = plan_of(spark, sf_dir, "source_vocab_saturation")
     assert "Join" not in s and "Window" not in s
     assert "CartesianProduct" not in s
     assert "HashAggregate" in s
@@ -210,11 +210,11 @@ def test_r9_candidate_joins_are_equi_joins(spark, sf_dir):
     RRF fusion must all plan as EQUI-joins — a CartesianProduct or
     BroadcastNestedLoopJoin anywhere means a candidate generator lost
     its key and went corpus-quadratic."""
-    for name in ("a0_bloom_decontamination", "a0_contrastive_pairs",
-                 "a0_hybrid_retrieval", "a0_duplication_profile"):
+    for name in ("bloom_decontamination", "contrastive_pairs",
+                 "hybrid_retrieval", "duplication_profile"):
         s = plan_of(spark, sf_dir, name)
         assert "CartesianProduct" not in s, name
-        if name == "a0_hybrid_retrieval":
+        if name == "hybrid_retrieval":
             # the BM25 tier deliberately crossJoins two 1-ROW broadcast
             # stat tables (n_docs/sum_dl, then the df-enriched totals);
             # those plan as BroadcastNestedLoopJoin and are bounded by
@@ -228,7 +228,7 @@ def test_temperature_mixture_is_two_pass(spark, sf_dir):
     """The mixture filter must be a projection over a broadcast quota
     table — no corpus-sized shuffle (the per-source count aggregate is
     the only exchange of corpus rows)."""
-    s = plan_of(spark, sf_dir, "a0_temperature_mixture")
+    s = plan_of(spark, sf_dir, "temperature_mixture")
     assert "BroadcastHashJoin" in s
     assert "CartesianProduct" not in s
 
@@ -236,6 +236,6 @@ def test_temperature_mixture_is_two_pass(spark, sf_dir):
 def test_ner_crf_is_single_python_stage(spark, sf_dir):
     """The CRF head is ONE Arrow-batched python stage (the numpy
     forward+decode), never row-at-a-time BatchEvalPython."""
-    s = plan_of(spark, sf_dir, "a0_ner_crf_viterbi")
+    s = plan_of(spark, sf_dir, "ner_crf_viterbi")
     assert s.count("MapInPandas") == 1
     assert "BatchEvalPython" not in s
