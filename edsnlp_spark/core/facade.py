@@ -13,7 +13,10 @@ A user of the reference can keep their pipeline-building code shape:
 
 Under the hood every pipe is a Transformer on the notes/entities planes;
 ``pipe`` wires matcher-style pipes (entity emitters) and qualifier-style
-pipes (entity annotators) in add order.
+pipes (entity annotators) in add order.  All ``QualifierEngine`` pipes
+are ONE plan (``operators/qualifiers.py`` ``qualify_all``): one labelled
+cue-dictionary scan, one boundary table per termination set, one join
+and one aggregate; other qualifier pipes (``eds.history_full``) follow.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import registry
 from . import caching
 from .base import Pipeline
+from ..operators.qualifiers import QualifierEngine, qualify_all
 from ..operators.tokenizer import Normalizer, Tokenizer
 from ..operators.sentences import SentenceSegmenter
 
@@ -102,9 +106,15 @@ class SparkNLP:
             raise ValueError("no entity-emitting pipe added (eds.matcher, ...)")
         ents = union_span_groups(
             *[m.entities(prepared) for m in self._emitters])
-        for q in self._qualifiers:
+        cols = ents.columns
+        engines = [q for q in self._qualifiers if isinstance(q, QualifierEngine)]
+        ents = qualify_all(engines, prepared, ents) if engines else ents
+        for q in [q for q in self._qualifiers if q not in engines]:
             ents = q.qualify(prepared, ents)
-        return ents
+        # qualifier columns in add order, each where its last writer was
+        # added (eds.history_full replaces an earlier eds.history column)
+        names = [q.qualifier for q in self._qualifiers]
+        return ents.select(*cols, *reversed(dict.fromkeys(names[::-1])))
 
     def __call__(self, text: str, spark: SparkSession | None = None):
         """Eager single-document annotation (reference §3.1): returns the

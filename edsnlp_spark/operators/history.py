@@ -47,7 +47,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .qualifiers import QualifierEngine, HISTORY_CUES
+from .qualifiers import (HISTORY_CUES, QualifierEngine, _REGEX_CLASSES,
+                         _boundaries, _cue_table)
 from .sections import SectionSegmenter
 from .. import registry
 from ..functions.text import let_bound
@@ -71,6 +72,8 @@ _DATE_GATE_RX = (
 
 
 class HistoryQualifier:
+    qualifier = "history"  # the column qualify() writes
+
     def __init__(self, history_limit_days: int = 14,
                  cues: dict | None = None,
                  use_sections: bool = True,
@@ -186,8 +189,7 @@ class HistoryQualifier:
             self.use_sections
             and isinstance(self.sections._matcher, PhraseMatcher)
             and self.sections._matcher.attr == eng.attr
-            and eng._rx_matcher is None
-            and "pseudo" not in eng.cues
+            and not {"pseudo", *_REGEX_CLASSES} & set(eng.cues)
             # the reserved section prefix must be unambiguous: a cue
             # class named '__sec__*' would be split out as a section
             # header after the merged scan (ADVICE r4) — fall back to
@@ -210,12 +212,10 @@ class HistoryQualifier:
                 "label", F.expr("substring(label, 8)"))
             st = caching.persist(
                 self.sections.sections_table(notes, headers=headers))
-        elif self.use_sections:
-            cues = eng._cue_table(notes)
-            st = caching.persist(self.sections.sections_table(notes))
         else:
-            cues = eng._cue_table(notes)
-            st = None
+            cues = _cue_table([eng], [0], notes).drop("q", "b_set")
+            st = caching.persist(self.sections.sections_table(notes)) \
+                if self.use_sections else None
 
         if st is not None:
             # every section title start is an extra termination cut
@@ -225,7 +225,7 @@ class HistoryQualifier:
                 F.lit("termination").alias("cue_class")))
             hist_secs = st.filter(F.col("section").isin(*self.section_names))
         cues = caching.persist(cues)
-        bounds = eng._boundaries(notes, cues)
+        bounds = _boundaries(notes, cues.withColumn("b_set", F.lit(0)), 1)
 
         # Per-note evidence arrays in ONE shuffle (r4 VERDICT #5): every
         # evidence row (boundary / boundary-cue / section / classified

@@ -971,7 +971,7 @@ def train_doc_classifier(docs: DataFrame, n_classes: int,
                     if packed:
                         # flat byte read of the char-packed buckets —
                         # exact inverse of char()+array_join (values
-                        # 0..127, latin-1 == code point == bucket)
+                        # 0..255, latin-1 == code point == bucket)
                         rows = [np.frombuffer(s.encode("latin-1"),
                                               dtype=np.uint8)
                                 .astype(np.int64)

@@ -9,6 +9,7 @@ registry rather than on the lease's bookkeeping.
 import pathlib
 import re
 
+import pytest
 from pyspark import StorageLevel
 
 from edsnlp_spark.core import caching
@@ -22,11 +23,12 @@ def _rdd_ids(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
-def _nlp():
+def _nlp(qualifiers=("negation",)):
     import edsnlp_spark as es
     nlp = es.blank()
     nlp.add_pipe("eds.matcher", terms={"diabete": ["diabete"]})
-    nlp.add_pipe("eds.negation")
+    for q in qualifiers:
+        nlp.add_pipe(f"eds.{q}")
     return nlp
 
 
@@ -50,12 +52,16 @@ def test_every_persist_goes_through_the_lease():
     assert not bad, "persist outside caching.persist:\n" + "\n".join(bad)
 
 
-def test_tracked_planes_match_persistent_rdds(spark, tmp_path):
+@pytest.mark.parametrize("qualifiers", [
+    ["negation"], ["negation", "hypothesis", "family"]], ids="-".join)
+def test_tracked_planes_match_persistent_rdds(spark, tmp_path, qualifiers):
     """After one written facade pass, the lease accounts for every
     persistent RDD the pass added: tracked_scopes() is the whole cache
-    the pass holds, the prepared notes plane included."""
+    the pass holds, the prepared notes plane included.  However many
+    qualifiers share the default termination set, the pass holds three
+    planes: prepared notes, cues and boundaries."""
     caching.release()
-    nlp = _nlp()
+    nlp = _nlp(qualifiers)
     before = _rdd_ids(spark)
     nlp.pipe(_notes(spark)).write.mode("overwrite").parquet(
         str(tmp_path / "out"))
@@ -63,6 +69,7 @@ def test_tracked_planes_match_persistent_rdds(spark, tmp_path):
     assert added
     assert sum(caching.tracked_scopes().values()) == len(added)
     assert caching.tracked_scopes() == {"SparkNLP": len(added)}
+    assert caching.tracked_scopes() == {"SparkNLP": 3}
     caching.release(nlp)
     assert not (_rdd_ids(spark) & added)
 

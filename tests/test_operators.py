@@ -1024,9 +1024,9 @@ def test_repeated_qualify_calls_stay_bounded(spark):
 
 
 def test_different_owners_do_not_release_each_other(spark):
-    """r6: two engines called one after the other (facade chains
-    several before materializing) must keep BOTH calls' planes — only
-    the same owner's next top-level call releases."""
+    """r6: two engines called one after the other before
+    materializing must keep BOTH calls' planes — only the same owner's
+    next top-level call releases."""
     from edsnlp_spark.core import caching
     from edsnlp_spark.operators.qualifiers import QualifierEngine
     caching.release()

@@ -7,6 +7,7 @@ order-insensitive value comparison (sorted rows, stringified values).
 
 from __future__ import annotations
 
+import contextlib
 import math
 
 import duckdb
@@ -96,7 +97,11 @@ def test_query_matches_oracle(name, spark, sf_dir):
     # processes/threads over read-only parquet, both release the GIL
     # while executing, and the comparison below is unchanged.
     with concurrent.futures.ThreadPoolExecutor(max_workers=1) as ex:
-        ofut = ex.submit(lambda: duck_con(sf_dir).execute(sql).df())
+        def oracle():
+            with contextlib.closing(duck_con(sf_dir)) as con:
+                return con.execute(sql).df()
+
+        ofut = ex.submit(oracle)
         sdf = fn(spark, sf_dir).toPandas()
         odf = ofut.result()
 
