@@ -72,10 +72,9 @@ class LexiconMatcher(Transformer):
        (native slice + concat_ws + transform — no UDF).
 
     Scale posture: candidate generation is map-side; the verify join
-    shuffles candidates plus one pass of (note_id, tokens, text).  With
-    the corpus bucketed by note_id (plans/bucketing.py) the verify join
-    is co-located and shuffle-free.  Hot anchors (common first words in
-    labels) are AQE-skew-split; candidates carry only ids + key.
+    shuffles candidates plus one pass of (note_id, tokens, text).  Hot
+    anchors (common first words in labels) are AQE-skew-split;
+    candidates carry only ids + key.
     """
 
     requires = ("note_id", "tokens")

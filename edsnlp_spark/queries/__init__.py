@@ -7,6 +7,13 @@ DuckDB oracle.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read the testdata table ``name`` from ``sf_dir``."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
 
 def all_queries() -> dict:
     """name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None).
@@ -14,10 +21,10 @@ def all_queries() -> dict:
     A module that fails to import, or a name registered by two modules,
     raises rather than silently shrinking the registry."""
     from . import (advanced, disorders_q, domain, lexicon, miscpipes,
-                   relational, relational2, scaleops, textops)
+                   relational2, scaleops, textops)
     out: dict = {}
-    for mod in (relational, textops, scaleops, advanced, relational2,
-                lexicon, disorders_q, domain, miscpipes):
+    for mod in (textops, scaleops, advanced, relational2, lexicon,
+                disorders_q, domain, miscpipes):
         clash = out.keys() & mod.QUERIES.keys()
         if clash:
             raise ValueError(

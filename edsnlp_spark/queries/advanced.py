@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .relational import _t
+from . import _t
 from .textops import _TOK_CTE, _notes
 from ..core.base import Pipeline
 from ..core import caching

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .relational import _t
+from . import _t
 from ..core import caching
 
 # reference golden texts (diabetes.py golden set); branch k%9

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from .relational import _t
+from . import _t
 from ..core import caching
 from ..core.base import Pipeline
 from ..operators.tokenizer import Tokenizer

@@ -4,10 +4,10 @@ and eds.suicide_attempt composed with the eds.pollution strip.
 
 The documents table is synthetic single-spaced word salad, so each
 query SYNTHESIZES the clinical surface the operator needs from the doc
-tokens / doc_id deterministically (the multimodal_decode /
-png_decode recipe), runs the REAL operator, and the oracle replays
-the expected output in SQL.  Construction parameters vary per doc
-(doc_id modulus) so every code path is exercised in one run.
+tokens / doc_id deterministically, runs the REAL operator, and the
+oracle replays the expected output in SQL.  Construction parameters
+vary per doc (doc_id modulus) so every code path is exercised in one
+run.
 """
 
 from __future__ import annotations

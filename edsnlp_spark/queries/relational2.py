@@ -1,43 +1,14 @@
-"""Second relational batch: range join, token-offset proof, LSH ANN,
-salted aggregation.
-"""
+"""Token-offset proof, LSH ANN and embedding near-dup queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
-from .relational import _t
+from . import _t
 from .textops import _notes
 from ..core.base import Pipeline
 from ..operators.tokenizer import Tokenizer
 from ..operators.similarity import lsh_topk
-from ..plans.skew import salted_count_sum
-
-
-# ---- range join on dates (interval predicate + arithmetic) ------------
-
-def late_shipments(spark, sf_dir):
-    """Lineitems shipped > 90 days after their order date — equi-join on
-    the order key with a date-arithmetic predicate."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
-    delay = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    return (
-        j.filter(delay > 90)
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_late"),
-             F.round(F.avg(delay), 4).alias("avg_delay_days"))
-    )
-
-
-LATE_SHIPMENTS_SQL = """
-SELECT o_orderpriority, COUNT(*) AS n_late,
-       ROUND(AVG(datediff('day', o_orderdate, l_shipdate)), 4) AS avg_delay_days
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE datediff('day', o_orderdate, l_shipdate) > 90
-GROUP BY o_orderpriority
-"""
 
 
 # ---- tokenizer offsets vs independent SQL prefix sums -----------------
@@ -155,29 +126,8 @@ WHERE ROUND(list_dot_product(a.v, b.v) /
 """
 
 
-# ---- salted aggregation (skew-robust two-phase) -----------------------
-
-def salted_event_totals(spark, sf_dir):
-    """Two-phase salted count/sum per event_type — same results as a
-    plain groupBy (the oracle), robust to a dominant hot key."""
-    e = _t(spark, sf_dir, "events")
-    out = salted_count_sum(e, ["event_type"], "value", salt=16)
-    return out.select(
-        "event_type", F.col("count").alias("n"),
-        F.round("sum", 2).alias("total_value"),
-    )
-
-
-SALTED_EVENT_TOTALS_SQL = """
-SELECT event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS total_value
-FROM events GROUP BY event_type
-"""
-
-
 QUERIES = {
-    "late_shipments": (late_shipments, LATE_SHIPMENTS_SQL),
     "token_offsets": (token_offsets, TOKEN_OFFSETS_SQL),
     "embedding_topk_lsh": (embedding_topk_lsh, EMBEDDING_TOPK_LSH_SQL),
     "embedding_neardup": (embedding_neardup, EMBEDDING_NEARDUP_SQL),
-    "salted_event_totals": (salted_event_totals, SALTED_EVENT_TOTALS_SQL),
 }

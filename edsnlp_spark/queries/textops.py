@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .relational import _t
+from . import _t
 from ..core.base import Pipeline
 from ..core import caching
 from ..operators.tokenizer import Tokenizer, Normalizer

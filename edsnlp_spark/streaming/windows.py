@@ -3,13 +3,11 @@
 The reference has no watermark/event-time constructs (SURVEY.md §2.12);
 these are the Spark-native streaming operators a production deployment
 of this engine would add around it (the north-star "hypertable rollup"
-family).  Batch twins of the tumbling rollup are oracle-checked
-(hourly_event_rollup); here the same aggregations run incrementally.
+family).
 
 - ``tumbling_counts`` / ``sliding_counts``: windowed groupBy with a
   watermark bounding state.
-- ``session_counts``: session windows (gap-based), the streaming twin of
-  the event_sessions batch query.
+- ``session_counts``: session windows (gap-based).
 - ``running_user_stats``: applyInPandasWithState — per-user running
   totals with explicit GroupState, the custom-stateful-operator surface.
 """

@@ -26,19 +26,14 @@ from edsnlp_spark.session import get_spark  # noqa: E402
 SHIFT = 1_000_000_000
 COPIES = 10
 # Every table a driver query reads, with the key to shift per copy.
-# Dims (region/nation) are fixed-size by schema and copied UNSCALED —
-# scaling them would break the TPC-H shape (25 nations, 5 regions).
 TABLES = {
     "orders": "o_orderkey",
     "documents": "doc_id",
     "lineitem": "l_orderkey",
     "customer": "c_custkey",
-    "supplier": "s_suppkey",
     "part": "p_partkey",
-    "events": "event_id",
     "embeddings": "vec_id",
 }
-DIMS = ["region", "nation"]
 
 
 def main() -> None:
@@ -46,12 +41,10 @@ def main() -> None:
     out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scale10x")
-    from edsnlp_spark.queries.relational import _t
+    from edsnlp_spark.queries import _t
     spark = get_spark(app_name="gen-scale10x")
     os.makedirs(out, exist_ok=True)
     for table, key in TABLES.items():
-        # _t normalizes events.ts (nanos parquet) to NTZ micros, so the
-        # scaled copy round-trips through _t identically
         df = _t(spark, src, table)
         scaled = None
         for i in range(COPIES):
@@ -60,10 +53,6 @@ def main() -> None:
         path = f"{out}/{table}.parquet"
         scaled.repartition(32).write.mode("overwrite").parquet(path)
         print(f"{table}: {spark.read.parquet(path).count()} rows -> {path}")
-    for table in DIMS:
-        path = f"{out}/{table}.parquet"
-        _t(spark, src, table).write.mode("overwrite").parquet(path)
-        print(f"{table}: copied unscaled -> {path}")
     spark.stop()
 
 

@@ -28,7 +28,7 @@ def main() -> None:
     from edsnlp_spark.queries.textops import (
         _BPE_LIFECYCLE_BATCH, _BPE_LIFECYCLE_MERGES, _bpe_pair_corpus)
     from edsnlp_spark.operators.bpe import bpe_train_batched
-    from edsnlp_spark.queries.relational import _t
+    from edsnlp_spark.queries import _t
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = es.get_spark(app_name="pin-bpe-merges")

@@ -26,7 +26,7 @@ SF = "/root/testdata/sf0.01"
 def main():
     spark = es.get_spark(master="local[8]")
     from edsnlp_spark.operators.wordpiece import wordpiece_train
-    from edsnlp_spark.queries.relational import _t
+    from edsnlp_spark.queries import _t
     from edsnlp_spark.queries.textops import (_WP_BATCH, _WP_MERGES,
                                               _bpe_pair_corpus)
 

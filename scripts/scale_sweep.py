@@ -5,11 +5,10 @@ fallback, no broadcast-size failure, no driver collect — and records
 per-query wall seconds to SCALE_SWEEP.json for the scale story in
 SCALE.md.
 
-Notes on the replica (scripts/gen_scale10x.py): fact tables are 10
-key-shifted copies; dims (region/nation) stay fixed-size by TPC-H
-shape; cross-table references resolve within copy 0, so some queries
-legitimately change shape (e.g. shifted customer copies have no
-orders).  Counts are recorded, not value-compared — value parity is
+Notes on the replica (scripts/gen_scale10x.py): tables are 10
+key-shifted copies; cross-table references resolve within copy 0, so
+some queries legitimately change shape (e.g. shifted customer copies
+have no orders).  Counts are recorded, not value-compared — value parity is
 the sf0.01 oracle gate's job.
 
 Usage: python scripts/scale_sweep.py [scale_dir] [out_json]

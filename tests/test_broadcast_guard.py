@@ -27,10 +27,6 @@ ALLOWED = {
         "16384; the prefix-sum range plane, never corpus-scale)",
     ("queries/lexicon.py", "F.broadcast(ranked)"):
         "checked-in resource lexicon (config-scale)",
-    ("queries/relational.py", "F.broadcast(n)"):
-        "TPC-H nation dim (25 rows by schema)",
-    ("queries/relational.py", "F.broadcast(r)"):
-        "TPC-H region dim (5 rows by schema)",
     ("queries/textops.py", "F.broadcast(eval_sh)"):
         "eval-split shingles; eval sets are tiny next to the corpus",
     ("queries/textops.py", "F.broadcast(total)"):

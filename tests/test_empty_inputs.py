@@ -238,7 +238,6 @@ def test_r11_operators_empty_inputs(spark):
     from edsnlp_spark.operators.dedup import (connected_components,
                                               incremental_components)
     from edsnlp_spark.operators.metrics import rouge_l
-    from edsnlp_spark.operators.multimodal import wav_spectral_probes
     from edsnlp_spark.operators.wordpiece import (wordpiece_encode_words,
                                                   wordpiece_train)
 
@@ -251,9 +250,6 @@ def test_r11_operators_empty_inputs(spark):
     cand = spark.createDataFrame([(0, "a b")], "pair_id long, text string")
     ref = spark.createDataFrame([], "pair_id long, text string")
     assert rouge_l(cand, ref).count() == 0
-    # wav spectral: empty blob table -> empty
-    blobs = spark.createDataFrame([], "doc_id long, blob binary")
-    assert wav_spectral_probes(blobs).count() == 0
     # incremental components: empty batch leaves labels unchanged
     labels = connected_components(spark.createDataFrame(
         [(1, 2)], "id_a long, id_b long"))
@@ -272,11 +268,8 @@ def test_r11_operators_empty_inputs(spark):
 def test_r12_operators_empty_inputs(spark, tmp_path):
     """Empty-input robustness for the round-12 operators: empty
     batches/corpora degrade to empty results, never errors."""
-    import numpy as np
-
     from edsnlp_spark.operators.dedup import (minhash_index_candidates,
                                               minhash_postings_index)
-    from edsnlp_spark.operators.multimodal import decode_jpeg, encode_jpeg
     from edsnlp_spark.queries.scaleops import semantic_clusters_over
 
     # postings index over an empty corpus builds, and probing it with
@@ -294,7 +287,3 @@ def test_r12_operators_empty_inputs(spark, tmp_path):
     # semantic clustering over an empty vector table -> empty
     empty_emb = spark.createDataFrame([], "node long, emb array<long>")
     assert semantic_clusters_over(empty_emb).count() == 0
-    # 8x8 single-block JPEG (smallest legal image) round-trips
-    one = np.full((8, 8), 77, dtype=np.uint8)
-    px = decode_jpeg(encode_jpeg(one))
-    assert (px == 77).all() and px.shape == (8, 8, 3)

@@ -29,7 +29,7 @@ _spec.loader.exec_module(_entry)
 
 
 def test_oracle_keys_match_query_keys():
-    assert set(_entry.oracle_sql()) <= set(_entry.queries())
+    assert set(_entry.oracle_sql()) == set(_entry.queries())
 
 
 def test_queries_are_the_registry():

@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from edsnlp_spark.operators.similarity import brute_force_topk, ivf_topk
-from edsnlp_spark.queries.relational import _t
+from edsnlp_spark.queries import _t
 
 
 def test_ivf_recall_vs_exact(spark, sf_dir):

@@ -155,32 +155,6 @@ def test_tables_extractor_differential_fuzz(spark):
     assert got == want
 
 
-def test_mp4_container_fuzz():
-    """Random frame counts / sample sizes / chunkings round-trip: the
-    demuxed sample table returns every frame's exact bytes in order
-    with correct timestamps."""
-    import random
-
-    from edsnlp_spark.operators.multimodal import (
-        encode_mp4_mjpeg, mp4_sample_table)
-
-    rng = random.Random(7)
-    for _ in range(25):
-        n = rng.randint(1, 9)
-        samples = [bytes(rng.getrandbits(8) for _ in
-                         range(rng.randint(1, 400))) for _ in range(n)]
-        spc = rng.choice([None, 1, 2, 3, n])
-        fm = rng.choice([10, 40, 100])
-        mp4 = encode_mp4_mjpeg(samples, 16, 16, frame_ms=fm,
-                               samples_per_chunk=spc)
-        codec, w, h, table = mp4_sample_table(mp4)
-        assert (codec, w, h) == (b"jpeg", 16, 16)
-        assert len(table) == n
-        for i, (off, size, t) in enumerate(table):
-            assert mp4[off:off + size] == samples[i]
-            assert t == i * fm
-
-
 def test_binary_auc_matches_python_reference(spark):
     """binary_auc_calibration's AUC equals a pure-Python midrank
     Mann-Whitney over seeded random scored sets (ties included)."""

@@ -838,37 +838,6 @@ def test_connected_components_star_rejects_non_integral_ids(spark):
     assert comps == {"a": "a", "b": "a", "c": "a"}
 
 
-def test_multimodal_resize_and_frame_sample(spark):
-    """Resize keeps the (doc_id, blob, meta) contract with target dims;
-    frame_sample fans one video row out to duration/step frame rows
-    with monotonically increasing timestamps."""
-    from edsnlp_spark.operators.multimodal import (
-        attach_blob, resize_media, frame_sample)
-    import pyspark.sql.functions as SF
-    docs = spark.createDataFrame(
-        [(1, "some fake image bytes"), (2, "other payload")],
-        "doc_id long, text string")
-    blobs = attach_blob(docs)
-    r = resize_media(blobs, width=64, height=64).collect()
-    assert all(row["meta"]["width"] == 64 and row["meta"]["height"] == 64
-               for row in r)
-    assert all(len(bytes(row["blob"])) == 64 * 64 // 64 for row in r)
-    vids = blobs.withColumn(
-        "meta", SF.struct(
-            SF.lit("video/fake").alias("media_type"),
-            SF.col("meta.width"), SF.col("meta.height"),
-            SF.lit(3500).alias("duration_ms")))
-    f = frame_sample(vids, every_ms=1000).collect()
-    per_doc = {}
-    for row in f:
-        per_doc.setdefault(row["doc_id"], []).append(row)
-    for doc_id, frames in per_doc.items():
-        assert len(frames) == 3  # 3500ms // 1000
-        ts = sorted(fr["ts_ms"] for fr in frames)
-        assert ts == [0, 1000, 2000]
-        assert all(len(bytes(fr["frame"])) >= 1 for fr in frames)
-
-
 @pytest.mark.parametrize("txt,from_group,result", [
     ("It is a match1 group1", True, "match1 group1"),   # group didn't fire
     ("It is a match1 group1", False, "match1 group1"),
@@ -2254,118 +2223,6 @@ def test_ner_perceptron_converges_and_decodes_gold(spark):
     assert pred == set(spans)
 
 
-def test_real_codecs_roundtrip_and_decode():
-    """r10: PPM/BMP/WAV decode with NO codec library — pure
-    numpy/stdlib.  Round-trips and hand-built byte layouts."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (
-        decode_bmp, decode_ppm, decode_wav, encode_ppm, nn_resize)
-
-    rng = np.random.RandomState(5)
-    img = rng.randint(0, 256, (3, 5, 3), dtype=np.uint8)
-    assert (decode_ppm(encode_ppm(img)) == img).all()
-    # header with comment + multi-whitespace
-    ugly = b"P6\n# a comment\n 5  3\n255\n" + img.tobytes()
-    assert (decode_ppm(ugly) == img).all()
-
-    # hand-built 2x2 bottom-up BMP with row padding (stride 8 for w=2)
-    # pixels (RGB): top row [(255,0,0), (0,255,0)],
-    #               bottom  [(0,0,255), (10,20,30)]
-    def bgr(r, g, b):
-        return struct.pack("BBB", b, g, r)
-
-    rows = [bgr(0, 0, 255) + bgr(10, 20, 30) + b"\0\0",   # bottom first
-            bgr(255, 0, 0) + bgr(0, 255, 0) + b"\0\0"]
-    payload = b"".join(rows)
-    header = (b"BM" + struct.pack("<IHHI", 54 + len(payload), 0, 0, 54)
-              + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0,
-                            len(payload), 0, 0, 0, 0))
-    px = decode_bmp(header + payload)
-    assert px.shape == (2, 2, 3)
-    assert tuple(px[0, 0]) == (255, 0, 0) and tuple(px[0, 1]) == (0, 255, 0)
-    assert tuple(px[1, 0]) == (0, 0, 255) and tuple(px[1, 1]) == (10, 20, 30)
-
-    # WAV via the stdlib writer
-    samples = np.array([0, 1000, -1000, 32767, -32768], dtype="<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(16000)
-        f.writeframes(samples.tobytes())
-    got, rate = decode_wav(buf.getvalue())
-    assert rate == 16000 and (got.ravel() == samples).all()
-
-    # nearest-neighbor resize doubles a 2x2 into exact quadrants
-    small = np.array([[[1, 1, 1], [2, 2, 2]],
-                      [[3, 3, 3], [4, 4, 4]]], dtype=np.uint8)
-    big = nn_resize(small, 4, 4)
-    assert (big[:2, :2] == 1).all() and (big[:2, 2:] == 2).all()
-    assert (big[2:, :2] == 3).all() and (big[2:, 2:] == 4).all()
-
-
-def test_decode_features_real_paths(spark):
-    import io
-    import wave
-
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (
-        decode_features, encode_ppm)
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    img[:, :, 0] = [[0, 100], [200, 100]]   # R: mean 100, var 5000
-    img[:, :, 1] = 7                        # G: constant
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1); f.setsampwidth(2); f.setframerate(8000)
-        f.writeframes(np.array([100, -100], dtype="<i2").tobytes())
-    rows = [
-        (1, bytearray(encode_ppm(img)),
-         {"media_type": "image/ppm", "width": 2, "height": 2,
-          "duration_ms": None}),
-        (2, bytearray(buf.getvalue()),
-         {"media_type": "audio/wav", "width": 0, "height": 0,
-          "duration_ms": 1}),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, blob binary, meta struct<media_type string,"
-              " width int, height int, duration_ms int>")
-    got = {r.doc_id: r for r in decode_features(df).collect()}
-    im = got[1]
-    assert (im.width, im.height) == (2, 2)
-    assert im.mean_r == 100.0 and im.std_r == 5000 ** 0.5
-    assert im.mean_g == 7.0 and im.std_g == 0.0
-    au = got[2]
-    assert (au.width, au.height) == (2, 8000)
-    assert au.mean_r == 0.0 and au.std_r == 100.0
-
-
-def test_resize_media_real_image(spark):
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (
-        decode_ppm, encode_ppm, resize_media)
-
-    img = np.array([[[1, 1, 1], [2, 2, 2]],
-                    [[3, 3, 3], [4, 4, 4]]], dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_ppm(img)),
-          {"media_type": "image/ppm", "width": 2, "height": 2,
-           "duration_ms": None})],
-        "doc_id long, blob binary, meta struct<media_type string,"
-        " width int, height int, duration_ms int>")
-    out = resize_media(df, width=4, height=4).collect()[0]
-    assert out.meta.width == 4 and out.meta.media_type == "image/ppm"
-    big = decode_ppm(bytes(out.blob))
-    assert big.shape == (4, 4, 3) and (big[:2, :2] == 1).all()
-
-
 def test_negation_distillation_heldout_floor(spark):
     """r11 (VERDICT r10 #5): the distilled negation head — integer
     perceptron over distance-tagged window features, taught by the
@@ -2559,152 +2416,6 @@ def test_components_index_update_refuses_delta_carrying_index(
     assert len(set(got.values())) == 1  # everything merged into one comp
 
 
-def test_png_roundtrip_all_filter_types():
-    """r11 (VERDICT r10 #4): pure-stdlib PNG codec — encode with every
-    filter type (None/Sub/Up/Average/Paeth) and demand bit-identical
-    pixels back, RGB and RGBA, including gradient data where the
-    predictors actually differ."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import decode_png, encode_png
-
-    rng = np.random.RandomState(11)
-    imgs = [
-        rng.randint(0, 256, (7, 5, 3)).astype(np.uint8),
-        rng.randint(0, 256, (4, 9, 4)).astype(np.uint8),
-        # smooth gradient: Sub/Up/Average/Paeth all predict differently
-        (np.arange(8 * 6 * 3).reshape(8, 6, 3) % 256).astype(np.uint8),
-        np.zeros((1, 1, 3), dtype=np.uint8),
-    ]
-    for img in imgs:
-        for ft in range(5):
-            blob = encode_png(img, filter_type=ft)
-            out = decode_png(blob)
-            assert out.shape == img.shape, (img.shape, ft)
-            assert (out == img).all(), (img.shape, ft)
-
-
-def test_png_decode_rejects_unsupported():
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from edsnlp_spark.operators.multimodal import (_PNG_SIG, decode_png,
-                                                   encode_png)
-
-    with pytest.raises(ValueError, match="not a PNG"):
-        decode_png(b"JUNK")
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data)))
-
-    # 16-bit depth
-    ihdr16 = struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)
-    with pytest.raises(NotImplementedError, match="8-bit"):
-        decode_png(_PNG_SIG + chunk(b"IHDR", ihdr16))
-    # Adam7
-    ihdr_i = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 1)
-    with pytest.raises(NotImplementedError, match="Adam7"):
-        decode_png(_PNG_SIG + chunk(b"IHDR", ihdr_i))
-    # truncated scanlines
-    good = encode_png(np.zeros((2, 2, 3), dtype=np.uint8))
-    ihdr_big = struct.pack(">IIBBBBB", 99, 99, 8, 2, 0, 0, 0)
-    bad = (_PNG_SIG + chunk(b"IHDR", ihdr_big)
-           + good[len(_PNG_SIG) + 25:])  # reuse the small IDAT/IEND
-    with pytest.raises(ValueError, match="truncated"):
-        decode_png(bad)
-
-
-def test_png_decode_features_matches_ppm(spark):
-    """decode_features over PNG blobs (every filter type) must produce
-    the same channel stats as the PPM path over the same pixels."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (decode_features,
-                                                   encode_png, encode_ppm)
-
-    rng = np.random.RandomState(3)
-    imgs = [rng.randint(0, 256, (4, 8, 3)).astype(np.uint8)
-            for _ in range(5)]
-    rows = []
-    for i, img in enumerate(imgs):
-        rows.append((i * 2, bytearray(encode_ppm(img)),
-                     ("image/ppm", 8, 4, None)))
-        rows.append((i * 2 + 1,
-                     bytearray(encode_png(img, filter_type=i % 5)),
-                     ("image/png", 8, 4, None)))
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, blob binary, meta struct<media_type string, "
-        "width int, height int, duration_ms int>")
-    got = {r.doc_id: (r.mean_r, r.std_r, r.mean_g, r.std_g,
-                      r.mean_b, r.std_b)
-           for r in decode_features(df).collect()}
-    for i in range(5):
-        assert got[i * 2] == got[i * 2 + 1], i
-
-
-def test_goertzel_matches_float_dft_and_resonates():
-    """r11 (VERDICT r10 #9): the exact-integer Goertzel powers equal
-    |DFT_k|^2 at the four integer-coefficient bins (k/N = 1/6, 1/4,
-    1/3, 1/2), and a pure tone at a probe bin concentrates its energy
-    there."""
-    import math
-
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import goertzel_powers
-
-    rng = np.random.RandomState(5)
-    N = 96
-    x = rng.randint(-8192, 8192, N).astype(np.int64)
-    got = goertzel_powers(x)
-    X = np.fft.fft(x.astype(np.float64))
-    for p, frac in zip(got, (6, 4, 3, 2)):
-        k = N // frac
-        want = abs(X[k]) ** 2
-        assert math.isclose(p, want, rel_tol=1e-9), (frac, p, want)
-    # resonance: a cos(2*pi*n/6) tone puts (quantized) energy at N/6
-    tone = np.round(8000 * np.cos(2 * np.pi * np.arange(N) / 6)) \
-        .astype(np.int64)
-    pt = goertzel_powers(tone)
-    assert pt[0] > 100 * max(pt[1], pt[2], pt[3], 1)
-
-
-def test_wav_spectral_probes_roundtrip(spark):
-    """wav_spectral_probes decodes REAL stdlib-wave blobs and must
-    reproduce goertzel_powers of the raw samples (truncated, never
-    padded)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (goertzel_powers,
-                                                   wav_spectral_probes)
-
-    rng = np.random.RandomState(9)
-    rows, want = [], {}
-    for doc_id, n in ((1, 96), (2, 200), (3, 40)):
-        x = rng.randint(-3000, 3000, n).astype("<i2")
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as f:
-            f.setnchannels(1)
-            f.setsampwidth(2)
-            f.setframerate(8000)
-            f.writeframes(x.tobytes())
-        rows.append((doc_id, bytearray(buf.getvalue())))
-        trunc = [int(v) for v in x[:96]]
-        want[doc_id] = (len(trunc), *goertzel_powers(trunc))
-    df = spark.createDataFrame(rows, "doc_id long, blob binary")
-    got = {r.doc_id: (r.n, r.p_f6, r.p_f4, r.p_f3, r.p_f2)
-           for r in wav_spectral_probes(df, n_samples=96).collect()}
-    assert got == want
-
-
 def test_wordpiece_train_matches_python_reference(spark):
     """r11: sequential (batch=1) WordPiece training vs a pure-Python
     reference of the likelihood objective — identical merge-output
@@ -2851,180 +2562,6 @@ def test_minhash_postings_index_probe_pair_universe(spark, tmp_path):
                                  bands=6)
 
 
-def test_jpeg_rich_gray_bitstream_exact():
-    """r12 (VERDICT r11 #6): baseline JPEG decode — on a rich random
-    grayscale image (every AC size category, ZRL runs, negatives, byte
-    stuffing), the decoder's pixels must EXACTLY equal an independent
-    reconstruction of the encoder's quantized coefficients: this pins
-    the huffman tables, bitstream, DC prediction, zigzag, dequant and
-    IDCT end-to-end."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (_J_ZZ, decode_jpeg,
-                                                   encode_jpeg,
-                                                   _jpeg_dct_matrix)
-
-    rng = np.random.RandomState(12)
-    img = rng.randint(0, 256, (16, 24)).astype(np.uint8)
-    got = decode_jpeg(encode_jpeg(img))
-    C = _jpeg_dct_matrix()
-    inv = np.array(_J_ZZ)
-    exp = np.zeros((16, 24), dtype=np.int64)
-    for by in range(2):
-        for bx in range(3):
-            blk = (img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                   .astype(np.float64) - 128.0)
-            coef = np.round(C @ blk @ C.T).astype(np.int64).reshape(64)
-            de = np.zeros(64, dtype=np.int64)
-            de[inv] = coef[inv]  # q=1: quantize/dequant is identity
-            f = C.T @ de.reshape(8, 8).astype(np.float64) @ C
-            exp[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = np.clip(
-                np.round(f) + 128, 0, 255)
-    assert np.array_equal(got[:, :, 0], exp.astype(np.uint8))
-    assert np.array_equal(got[:, :, 0], got[:, :, 1])  # gray replicated
-
-
-def test_jpeg_constant_color_exact_int_colorspace():
-    """Constant 8x8 YCbCr blocks with all-ones quant tables round-trip
-    EXACTLY (DC-only), and the YCbCr->RGB conversion is the exact
-    int64 fixed-point formula the jpeg_decode oracle mirrors."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (_J_CB_B, _J_CB_G,
-                                                   _J_CR_G, _J_CR_R,
-                                                   decode_jpeg,
-                                                   encode_jpeg)
-
-    ycc = np.zeros((8, 16, 3), dtype=np.uint8)
-    ycc[:, :8] = [200, 30, 180]
-    ycc[:, 8:] = [63, 200, 90]
-    got = decode_jpeg(encode_jpeg(ycc))
-
-    def mix(y, cb, cr):
-        off = 32768 + (1 << 24)
-
-        def clamp(acc):
-            return min(max(((acc + off) >> 16) - 256, 0), 255)
-
-        return [clamp(y * 65536 + _J_CR_R * (cr - 128)),
-                clamp(y * 65536 - _J_CB_G * (cb - 128)
-                      - _J_CR_G * (cr - 128)),
-                clamp(y * 65536 + _J_CB_B * (cb - 128))]
-
-    assert (got[:, :8] == mix(200, 30, 180)).all()
-    assert (got[:, 8:] == mix(63, 200, 90)).all()
-
-
-def test_jpeg_lossy_path_and_guards():
-    """Coarse quant tables decode to a sane lossy image (within the
-    quantization error bound), and unsupported streams raise."""
-    import numpy as np
-    import pytest as _pytest
-
-    from edsnlp_spark.operators.multimodal import (decode_jpeg,
-                                                   encode_jpeg)
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, (24, 16, 3)).astype(np.uint8)
-    q = (np.full(64, 16, dtype=np.int64), np.full(64, 17, dtype=np.int64))
-    blob = encode_jpeg(img, quant=q)
-    got = decode_jpeg(blob)
-    assert got.shape == (24, 16, 3) and got.dtype == np.uint8
-    with _pytest.raises(ValueError, match="SOI"):
-        decode_jpeg(b"\x00\x01\x02")
-    # patch SOF0 -> SOF2: the baseline-shaped scan (Ss=0, Se=63) is
-    # malformed AS progressive (a progressive DC scan must have Se=0)
-    # — must refuse, not corrupt (r13: SOF2 itself now decodes)
-    i = blob.index(b"\xFF\xC0")
-    patched = bytearray(blob)
-    patched[i + 1] = 0xC2
-    with _pytest.raises(ValueError, match="Se=0"):
-        decode_jpeg(bytes(patched))
-    # patch SOF0 -> SOF1 (extended sequential): still an honest raise
-    patched[i + 1] = 0xC1
-    with _pytest.raises(NotImplementedError, match="SOF0"):
-        decode_jpeg(bytes(patched))
-
-
-def test_jpeg_420_subsampling_exact_paths():
-    """r12 session 2: 4:2:0 interleaved scans (the dominant real-world
-    layout — 2x2 luma blocks + 1 Cb + 1 Cr per MCU, chroma upsampled
-    by replication) decode exactly on MCU-constant chroma: constant
-    color MCUs round-trip bit-exactly, and per-8x8-varying LUMA under
-    neutral chroma reproduces Y verbatim."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (_J_CB_B, _J_CB_G,
-                                                   _J_CR_G, _J_CR_R,
-                                                   decode_jpeg,
-                                                   encode_jpeg)
-
-    def mix(y, cb, cr):
-        off = 32768 + (1 << 24)
-
-        def clamp(acc):
-            return min(max(((acc + off) >> 16) - 256, 0), 255)
-
-        return [clamp(y * 65536 + _J_CR_R * (cr - 128)),
-                clamp(y * 65536 - _J_CB_G * (cb - 128)
-                      - _J_CR_G * (cr - 128)),
-                clamp(y * 65536 + _J_CB_B * (cb - 128))]
-
-    ycc = np.zeros((16, 32, 3), dtype=np.uint8)
-    ycc[:, :16] = [200, 30, 180]
-    ycc[:, 16:] = [63, 200, 90]
-    got = decode_jpeg(encode_jpeg(ycc, subsample="420"))
-    assert (got[:, :16] == mix(200, 30, 180)).all()
-    assert (got[:, 16:] == mix(63, 200, 90)).all()
-    # varying luma per 8x8 block, neutral chroma -> RGB == Y exactly
-    # (exercises the 2x2-luma-block MCU order + DC prediction chain)
-    ycc2 = np.full((16, 16, 3), 128, dtype=np.uint8)
-    for by in range(2):
-        for bx in range(2):
-            ycc2[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8, 0] = \
-                60 + 40 * (2 * by + bx)
-    got2 = decode_jpeg(encode_jpeg(ycc2, subsample="420"))
-    assert (got2[:, :, 0] == ycc2[:, :, 0]).all()
-    assert (got2[:, :, 0] == got2[:, :, 1]).all()
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="multiples of 16"):
-        encode_jpeg(np.zeros((8, 8, 3), np.uint8), subsample="420")
-
-
-def test_resize_media_dispatches_png_and_jpeg(spark):
-    """r12 regression: resize_media's real path routed every
-    non-PPM REAL type through decode_bmp — a PNG blob hit the BMP
-    parser.  All four real image types must resize through their own
-    decoder."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (decode_ppm,
-                                                   encode_jpeg,
-                                                   encode_png,
-                                                   resize_media)
-
-    arr = (np.arange(8 * 8 * 3).reshape(8, 8, 3) % 256).astype(np.uint8)
-    rows = [
-        (1, bytearray(encode_png(arr, filter_type=4)),
-         {"media_type": "image/png", "width": 8, "height": 8,
-          "duration_ms": None}),
-        (2, bytearray(encode_jpeg(arr)),
-         {"media_type": "image/jpeg", "width": 8, "height": 8,
-          "duration_ms": None}),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, blob binary, meta struct<media_type:string,"
-        "width:int,height:int,duration_ms:int>")
-    out = {r.doc_id: r for r in resize_media(df, width=4, height=4)
-           .collect()}
-    for doc_id in (1, 2):
-        px = decode_ppm(bytes(out[doc_id].blob))
-        assert px.shape == (4, 4, 3)
-    # the PNG resize is exact NN sampling of the source pixels
-    png_px = decode_ppm(bytes(out[1].blob))
-    assert (png_px == arr[::2, ::2]).all()
-
-
 def test_negation_student_survives_document_skew(spark, tmp_path):
     """r12 (VERDICT r11 #8): the distillation instance plane and the
     perceptron's explicit sharding must survive a corpus where ONE
@@ -3108,108 +2645,6 @@ def test_dedup_keeper_election_prefers_informative_member(spark, tmp_path):
     assert got[10].keep and not got[11].keep
 
 
-def test_jpeg_restart_intervals_exact():
-    """r12 session 2: DRI/RSTn restart intervals — the decoder
-    byte-aligns at each marker, verifies the RST0-7 cycle, resets DC
-    predictors, and the result is bit-identical to the no-restart
-    stream; an out-of-sequence marker raises."""
-    import numpy as np
-    import pytest as _pytest
-
-    from edsnlp_spark.operators.multimodal import (decode_jpeg,
-                                                   encode_jpeg)
-
-    rng = np.random.RandomState(5)
-    img = rng.randint(0, 256, (16, 40)).astype(np.uint8)
-    plain = decode_jpeg(encode_jpeg(img))
-    assert np.array_equal(
-        plain, decode_jpeg(encode_jpeg(img, restart_interval=1)))
-    assert np.array_equal(
-        plain, decode_jpeg(encode_jpeg(img, restart_interval=3)))
-    ycc = rng.randint(0, 256, (32, 48, 3)).astype(np.uint8)
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(ycc, subsample="420")),
-        decode_jpeg(encode_jpeg(ycc, subsample="420",
-                                restart_interval=2)))
-    # > 8 restarts exercises the RST0-7 marker cycle
-    wide = rng.randint(0, 256, (8, 8 * 20)).astype(np.uint8)
-    assert decode_jpeg(
-        encode_jpeg(wide, restart_interval=1)).shape == (8, 160, 3)
-    blob = bytearray(encode_jpeg(wide, restart_interval=1))
-    i = blob.index(b"\xFF\xD0")
-    blob[i + 1] = 0xD5
-    with _pytest.raises(ValueError, match="out of sequence"):
-        decode_jpeg(bytes(blob))
-
-
-def test_mp4_mjpeg_container_roundtrip():
-    """ISO-BMFF mux -> demux -> per-frame decode is bit-exact vs
-    decoding each JPEG sample directly, under both the one-chunk and
-    the multi-chunk (two-run stsc) layouts; every_ms sampling keeps
-    the first frame at or after each multiple."""
-    import numpy as np
-
-    from edsnlp_spark.operators.multimodal import (
-        decode_jpeg, decode_mp4_frames, encode_jpeg, encode_mp4_mjpeg)
-
-    frames = []
-    for f in range(5):
-        ycc = np.zeros((16, 16, 3), dtype=np.uint8)
-        for q, (r0, c0) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-            ycc[r0:r0 + 8, c0:c0 + 8, 0] = 40 * f + 10 * q + 30
-        ycc[:, :, 1] = 100 + f
-        ycc[:, :, 2] = 140 + f
-        frames.append(encode_jpeg(
-            ycc, subsample="420" if f % 2 == 0 else "444",
-            restart_interval=1 if f == 3 else 0))
-    for spc in (None, 2):
-        mp4 = encode_mp4_mjpeg(frames, 16, 16, frame_ms=40,
-                               samples_per_chunk=spc)
-        out = decode_mp4_frames(mp4)
-        assert [(i, t) for i, t, _ in out] == [(i, i * 40)
-                                               for i in range(5)]
-        for (_, _, px), s in zip(out, frames):
-            assert (px == decode_jpeg(s)).all()
-        assert [i for i, _, _ in decode_mp4_frames(mp4, every_ms=80)] \
-            == [0, 2, 4]
-
-
-def test_mp4_demux_guards_and_frame_sample(spark):
-    """Non-MJPEG tracks raise (honest codec wall), malformed boxes
-    raise, and frame_sample's real video/mp4 path emits the actual
-    JPEG sample bytes."""
-    import numpy as np
-    import pytest as _pytest
-
-    from edsnlp_spark.operators.multimodal import (
-        decode_jpeg, decode_mp4_frames, encode_jpeg, encode_mp4_mjpeg,
-        frame_sample)
-
-    ycc = np.full((16, 16, 3), 90, dtype=np.uint8)
-    sample = encode_jpeg(ycc)
-    mp4 = encode_mp4_mjpeg([sample, sample], 16, 16, frame_ms=40)
-    # patch the stsd entry fourcc to avc1: must refuse, not misparse
-    patched = bytearray(mp4)
-    i = mp4.index(b"jpeg", mp4.index(b"stsd"))
-    patched[i:i + 4] = b"avc1"
-    with _pytest.raises(NotImplementedError, match="avc1"):
-        decode_mp4_frames(bytes(patched))
-    with _pytest.raises(ValueError, match="box|moov"):
-        decode_mp4_frames(mp4[:24])
-    df = spark.createDataFrame(
-        [(1, bytearray(mp4),
-          {"media_type": "video/mp4", "width": 16, "height": 16,
-           "duration_ms": 80})],
-        "doc_id long, blob binary, meta struct<media_type string, "
-        "width int, height int, duration_ms int>")
-    rows = frame_sample(df, every_ms=40).collect()
-    assert [(r.frame_idx, r.ts_ms, r.media_type) for r in rows] == [
-        (0, 0, "image/jpeg"), (1, 40, "image/jpeg")]
-    for r in rows:
-        assert bytes(r.frame) == sample
-        assert (decode_jpeg(bytes(r.frame)) == decode_jpeg(sample)).all()
-
-
 def test_keeper_index_update_merge_delete_carryover(spark, tmp_path):
     """r13 incremental keeper election: a batch merge re-elects the
     keeper over the MERGED membership, the absorbed cluster's row is
@@ -3278,45 +2713,3 @@ def test_keeper_index_update_drops_emptied_partition(spark, tmp_path):
     k = {r.cluster: r.keeper_id for r in
          spark.read.parquet(f"{kpath}/labels").collect()}
     assert k == {1: 5}
-
-
-def test_jpeg_progressive_spectral_selection():
-    """r13 (VERDICT r12 Next #8): SOF2 spectral-selection streams
-    (interleaved DC scan + per-component AC band scans with EOBn
-    coding) decode bit-identically to the baseline encoding of the
-    same pixels; successive approximation and subsampled progressive
-    components raise honestly."""
-    import numpy as np
-    import pytest as _pytest
-
-    from edsnlp_spark.operators.multimodal import (
-        decode_jpeg, encode_jpeg, encode_jpeg_progressive)
-
-    rng = np.random.RandomState(3)
-    for shape in [(16, 24, 3), (8, 8, 3), (8, 8), (32, 32, 3)]:
-        img = rng.randint(0, 256, shape).astype(np.uint8)
-        assert (decode_jpeg(encode_jpeg_progressive(img))
-                == decode_jpeg(encode_jpeg(img))).all()
-    # lossy quant agrees too (dequant happens after all scans)
-    q = (np.full(64, 16, dtype=np.int64), np.full(64, 17, dtype=np.int64))
-    img = rng.randint(0, 256, (24, 16, 3)).astype(np.uint8)
-    assert (decode_jpeg(encode_jpeg_progressive(img, quant=q))
-            == decode_jpeg(encode_jpeg(img, quant=q))).all()
-    # constant image: every block takes the EOBn path
-    flat = np.full((16, 16, 3), 77, dtype=np.uint8)
-    assert (decode_jpeg(encode_jpeg_progressive(flat))
-            == decode_jpeg(encode_jpeg(flat))).all()
-    # successive approximation (Al != 0 in the DC scan header) raises
-    blob = bytearray(encode_jpeg_progressive(flat))
-    i = blob.index(b"\xFF\xDA")        # first SOS; header ends Ss Se A
-    ln = int.from_bytes(blob[i + 2:i + 4], "big")
-    blob[i + 2 + ln - 1] = 0x01        # Al = 1
-    with _pytest.raises(NotImplementedError, match="successive"):
-        decode_jpeg(bytes(blob))
-    # subsampled SOF2 raises before any scan decodes
-    base420 = bytearray(encode_jpeg(
-        np.full((16, 16, 3), 90, dtype=np.uint8), subsample="420"))
-    j = base420.index(b"\xFF\xC0")
-    base420[j + 1] = 0xC2
-    with _pytest.raises(NotImplementedError, match="subsampled"):
-        decode_jpeg(bytes(base420))

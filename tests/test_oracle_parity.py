@@ -16,13 +16,11 @@ import pytest
 from edsnlp_spark.queries import all_queries
 
 TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "customer", "part", "orders", "lineitem", "documents", "embeddings",
 ]
 
 _QUERIES = all_queries()
 WITH_ORACLE = sorted(n for n, (_, sql) in _QUERIES.items() if sql)
-NO_ORACLE = sorted(n for n, (_, sql) in _QUERIES.items() if not sql)
 
 # Queries whose registry key used to carry an ``a0_`` prefix. Their parity
 # tests keep the old id, so each query's test history stays under one name.
@@ -33,18 +31,17 @@ _FORMERLY_PREFIXED = frozenset("""
     cross_minhash_dedup dedup_components_incremental dedup_keeper_election
     dedup_keeper_incremental dedup_recall_eval distillation_eval
     document_chunking duplication_profile graph_embeddings graph_walks
-    hybrid_retrieval ivfpq_indexed_search jpeg_decode knn_label_propagation
-    langid_trained length_quantiles mmr_diversified_search mp4_frames
-    multimodal_decode negation_distillation negation_distillation_eval
-    ner_crf_viterbi note_dates pagerank_copurchase phrase_search png_decode
-    quality_auc related_parts_ppr rouge_l rouge_overlap semantic_clusters
-    semdedup_embeddings sentence_boundaries sequence_packing simhash_neardup
-    simhash_neardup_capped source_divergence source_mixture_sample
-    source_vocab_saturation split_assignment strip_duplicated_spans
-    suicide_pollution table_cells temperature_mixture tfidf_keywords
-    tnm_mentions tokenizer_fertility trained_ann_topk umls_scale_match
-    unigram_logppl unigram_tokenizer url_domain_filtering walk_skipgram_pairs
-    wav_spectral weighted_doc_sample weighted_pagerank winnowing_fp
+    hybrid_retrieval ivfpq_indexed_search knn_label_propagation langid_trained
+    length_quantiles mmr_diversified_search negation_distillation
+    negation_distillation_eval ner_crf_viterbi note_dates pagerank_copurchase
+    phrase_search quality_auc related_parts_ppr rouge_l rouge_overlap
+    semantic_clusters semdedup_embeddings sentence_boundaries sequence_packing
+    simhash_neardup simhash_neardup_capped source_divergence
+    source_mixture_sample source_vocab_saturation split_assignment
+    strip_duplicated_spans suicide_pollution table_cells temperature_mixture
+    tfidf_keywords tnm_mentions tokenizer_fertility trained_ann_topk
+    umls_scale_match unigram_logppl unigram_tokenizer url_domain_filtering
+    walk_skipgram_pairs weighted_doc_sample weighted_pagerank winnowing_fp
     wordpiece_lifecycle
 """.split())
 
@@ -54,7 +51,7 @@ def _test_id(name: str) -> str:
 
 
 def test_formerly_prefixed_names_are_oracle_queries():
-    assert len(_FORMERLY_PREFIXED) == 69
+    assert len(_FORMERLY_PREFIXED) == 64
     assert _FORMERLY_PREFIXED <= set(WITH_ORACLE)
 
 
@@ -116,10 +113,3 @@ def test_query_matches_oracle(name, spark, sf_dir):
         diff = [(a, b) for a, b in zip(s_rows, o_rows) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
-
-@pytest.mark.parametrize("name", NO_ORACLE)
-def test_query_runs(name, spark, sf_dir):
-    fn, _ = _QUERIES[name]
-    df = fn(spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0

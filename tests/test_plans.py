@@ -1,8 +1,8 @@
 """Physical-plan assertions: the 100 TB posture is checked, not assumed.
 
-Each test reads `.explain` output of a headline query and asserts the
-plan property that matters at scale: filter pushdown to parquet, column
-pruning, broadcast joins for dims, and no Python (BatchEvalPython /
+Each test reads the physical plan of a headline query and asserts the
+plan property that matters at scale: broadcast joins for bounded sides,
+no cartesian products, and no Python (BatchEvalPython /
 ArrowEvalPython) in native paths.
 """
 
@@ -20,30 +20,9 @@ def plan_of(spark, sf_dir, name) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def explain_formatted(spark, sf_dir, name) -> str:
-    df = QS[name][0](spark, sf_dir)
-    return spark.sparkContext._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-
-
-def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
-    s = explain_formatted(spark, sf_dir, "pricing_summary")
-    # shipdate filter reaches the parquet scan
-    assert "PushedFilters" in s and "l_shipdate" in s.split("PushedFilters", 1)[1]
-    # unused columns (l_orderkey etc.) are pruned from the read schema
-    read_schema = s.split("ReadSchema", 1)[1].splitlines()[0]
-    assert "l_orderkey" not in read_schema and "l_comment" not in read_schema
-
-
-def test_revenue_by_nation_broadcasts_dims(spark, sf_dir):
-    s = plan_of(spark, sf_dir, "revenue_by_nation")
-    assert s.count("BroadcastHashJoin") >= 2  # nation and region at least
-
-
 def test_native_queries_have_no_python_stage(spark, sf_dir):
-    for name in ("pricing_summary", "revenue_by_nation", "event_sessions",
-                 "purchase_asof_signup", "phrase_match_tokens",
-                 "negation_tokens", "minhash_lsh_dedup", "embedding_topk",
+    for name in ("phrase_match_tokens", "negation_tokens",
+                 "minhash_lsh_dedup", "embedding_topk",
                  "filter_spans_greedy", "dates_extraction",
                  "quantities_extraction", "simhash_fingerprints"):
         s = plan_of(spark, sf_dir, name)
@@ -54,15 +33,6 @@ def test_native_queries_have_no_python_stage(spark, sf_dir):
 def test_phrase_match_terms_join_is_broadcast(spark, sf_dir):
     s = plan_of(spark, sf_dir, "phrase_match_tokens")
     assert "BroadcastHashJoin" in s
-
-
-def test_wholestage_codegen_present(spark, sf_dir):
-    # AQE only finalizes (and shows codegen stages) after execution.
-    df = QS["pricing_summary"][0](spark, sf_dir)
-    df.collect()
-    s = df._jdf.queryExecution().executedPlan().toString()
-    # '*(n)' prefixes mark WholeStageCodegen stages in the plan string
-    assert "*(1)" in s and "*(2)" in s, s[:400]
 
 
 def test_r2_queries_plan_shapes(spark, sf_dir):
