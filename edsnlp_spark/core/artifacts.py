@@ -1,7 +1,7 @@
 """Central version stamp for persisted seed artifacts (VERDICT r11 #3).
 
-The gitignored seed artifacts (``.ivfpq_index``, ``.text_index`` —
-including its chunk-corpus variant — and ``.graph_emb``) are keyed by
+The gitignored seed artifacts (``.text_index`` — including its
+chunk-corpus variant — and ``.dedup_seed``) are keyed by
 DATA fingerprint + builder CONFIG.  Without a code-version component
 in the tag, a builder behavior change silently leaves consumers
 serving stale artifacts: the oracle hash gate catches the divergence,
@@ -34,8 +34,8 @@ import os
 ARTIFACT_VERSION = "3"
 
 # underscore-prefixed so Spark's file listing ignores it — the marker
-# may live INSIDE a parquet directory (.graph_emb/<tag> is itself the
-# parquet output; a plain-named file there breaks footer reads)
+# may live INSIDE a parquet directory (a plain-named file there breaks
+# footer reads)
 _MARKER = "_ARTIFACT_VERSION"
 
 

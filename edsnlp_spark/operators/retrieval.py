@@ -274,12 +274,12 @@ def rrf_fuse(tiers: list[DataFrame], k: int = 10, c: int = 60,
     rrf_score): rrf(d) = sum over tiers of 1 / (c + rank_tier(d)),
     re-ranked per query by (rounded score desc, id).  The standard
     production hybrid-retrieval shape: fuse a lexical tier (BM25) with
-    a dense tier (IVF-PQ) without score calibration — RRF only reads
-    RANK POSITIONS, so wildly different score scales (BM25 sums vs ADC
+    a dense tier without score calibration — RRF only reads RANK
+    POSITIONS, so wildly different score scales (BM25 sums vs vector
     distances) fuse cleanly.
 
     Input contract: each tier is a per-query top-k table (e.g.
-    :func:`bm25_topk_batch`, ``similarity.ivf_pq_topk``) whose
+    :func:`bm25_topk_batch`) whose
     ``rank_col`` holds the tier's OWN 1-based rank; rank gaps (e.g.
     from a post-ranking self-exclusion filter) are honored as-is.
 
@@ -387,8 +387,7 @@ def phrase_search_batch(docs: DataFrame, phrases: DataFrame,
 def build_text_index(docs: DataFrame, path: str, n_buckets: int = 64,
                      id_col: str = "doc_id",
                      text_col: str = "text") -> None:
-    """OFFLINE inverted-index build — the lexical twin of
-    ``similarity.build_ivfpq_index``: materialize the postings plane
+    """OFFLINE inverted-index build: materialize the postings plane
     (bucket, term, doc_id, tf, dl) as parquet PARTITIONED BY a
     term-hash bucket, plus a 1-row metadata table (n_docs, sum_dl,
     n_buckets).  Tokenization is paid ONCE per corpus snapshot; the
@@ -503,8 +502,7 @@ def text_index_append(new_docs: DataFrame, path: str,
                       id_col: str = "doc_id",
                       text_col: str = "text") -> None:
     """INCREMENTAL inverted-index update — the growing-corpus
-    counterpart of :func:`build_text_index` (same shape as
-    ``similarity.ivfpq_index_append``): tokenize ONLY the new batch,
+    counterpart of :func:`build_text_index`: tokenize ONLY the new batch,
     append its postings to the bucket-partitioned table, and refresh
     the 1-row stats record (n_docs / sum_dl are additive).  At 100 TB
     re-tokenizing the corpus per ingest batch is a corpus scan; this

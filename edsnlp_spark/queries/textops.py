@@ -2851,8 +2851,8 @@ LIMIT 10
 # ---- BPE tokenizer: distributed training + encode -------------------------
 
 # Learned OFFLINE from the corpus by operators/bpe.py bpe_train (the
-# realistic production shape: the merge table is pipeline config, like
-# the IVF centroids).  Re-derive with:
+# realistic production shape: the merge table is pipeline config).
+# Re-derive with:
 #   bpe_train(spark.read.parquet(f"{sf_dir}/documents.parquet"), 16)
 _BPE_MERGES = [
     ("e", "r"), ("e", "</w>"), ("n", "</w>"), ("er", "</w>"),
@@ -4202,7 +4202,7 @@ _TEXT_INDEX_BUILT: set = set()
 def _seed_text_index(spark, sf_dir, variant: str, corpus_fn,
                      id_col: str, text_col: str) -> str:
     """Build-or-reuse a PERSISTED inverted index for ``sf_dir`` (the
-    lexical twin of scaleops._ivfpq_seed_index): postings partitioned
+    seed-index pattern of scaleops._dedup_seed_index): postings partitioned
     by term-hash bucket under the gitignored ``.text_index/<tag>``,
     keyed by data path + documents fingerprint + index config
     (``variant`` encodes the corpus shape — raw docs vs chunked), so a

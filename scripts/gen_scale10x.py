@@ -25,14 +25,11 @@ from edsnlp_spark.session import get_spark  # noqa: E402
 
 SHIFT = 1_000_000_000
 COPIES = 10
-# Every table a driver query reads, with the key to shift per copy.
+# Every table a registry query reads, with the key to shift per copy.
 TABLES = {
     "orders": "o_orderkey",
     "documents": "doc_id",
     "lineitem": "l_orderkey",
-    "customer": "c_custkey",
-    "part": "p_partkey",
-    "embeddings": "vec_id",
 }
 
 

@@ -120,7 +120,6 @@ def test_round9_operators_on_empty_docs(spark):
     from edsnlp_spark.operators.bpe import bpe_train_batched
     from edsnlp_spark.operators.dedup import strip_spans_incremental
     from edsnlp_spark.operators.retrieval import rrf_fuse
-    from edsnlp_spark.operators.similarity import hard_negative_triplets
     from edsnlp_spark.operators.sketches import bloom_build, bloom_probe
     from edsnlp_spark.operators.textstats import bigram_pmi_topk
     from edsnlp_spark.operators.trainable import ner_linear_crf
@@ -145,10 +144,6 @@ def test_round9_operators_on_empty_docs(spark):
     assert bits.count() == 0
     probed = bloom_probe(some.select(F.col("text").alias("s")), "s", bits)
     assert [r["maybe_member"] for r in probed.collect()] == [False]
-    # triplets: no vectors -> no pairs
-    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    assert hard_negative_triplets(
-        emb, [[1.0, 0.0], [0.0, 1.0]]).count() == 0
     # PMI on empty corpus -> empty top-k
     assert bigram_pmi_topk(empty, k=3, min_count=1).count() == 0
     # CRF head on empty notes -> typed empty entities plane
@@ -211,7 +206,6 @@ def test_phrase_search_empty_inputs(spark):
 
 
 def test_unigram_and_mmr_empty_inputs(spark):
-    from edsnlp_spark.operators.similarity import mmr_rerank
     from edsnlp_spark.operators.unigram import (
         unigram_encode_words, unigram_train)
 
@@ -221,14 +215,6 @@ def test_unigram_and_mmr_empty_inputs(spark):
     w = spark.createDataFrame([("ab",)], "word string")
     row = unigram_encode_words(w, vocab, unk).collect()[0]
     assert row.n_pieces == 2 and row.score_q == 2 * unk
-
-    empty_emb = spark.createDataFrame(
-        [], "vec_id long, embedding array<float>")
-    q = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "q_id long, q_vec array<float>")
-    out = mmr_rerank(empty_emb, q, k=5, n_candidates=5)
-    assert out.count() == 0
-    assert out.columns == ["q_id", "doc_id", "mmr_rank", "mmr_score"]
 
 
 def test_r11_operators_empty_inputs(spark):
@@ -270,7 +256,6 @@ def test_r12_operators_empty_inputs(spark, tmp_path):
     batches/corpora degrade to empty results, never errors."""
     from edsnlp_spark.operators.dedup import (minhash_index_candidates,
                                               minhash_postings_index)
-    from edsnlp_spark.queries.scaleops import semantic_clusters_over
 
     # postings index over an empty corpus builds, and probing it with
     # a real batch yields no cross pairs (self pairs still possible)
@@ -284,6 +269,3 @@ def test_r12_operators_empty_inputs(spark, tmp_path):
     # empty batch against a populated index -> no candidates
     minhash_postings_index(batch, path)
     assert minhash_index_candidates(spark, path, empty_docs).count() == 0
-    # semantic clustering over an empty vector table -> empty
-    empty_emb = spark.createDataFrame([], "node long, emb array<long>")
-    assert semantic_clusters_over(empty_emb).count() == 0

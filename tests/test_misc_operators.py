@@ -444,31 +444,6 @@ def test_bloom_filter_membership(spark):
         spark.range(1).select(bloom_positions(F.lit("x"), k=0))
 
 
-def test_hard_negative_triplets_hand_computed(spark):
-    """r9: on a 2-cell embedding set with hand-computable cosines, each
-    anchor's positive is its nearest same-cell neighbor and its
-    negative the farthest; anchors with < 2 distinct neighbors drop."""
-    from edsnlp_spark.operators.similarity import hard_negative_triplets
-
-    # cell 0 ~ x-axis, cell 1 ~ y-axis
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-    rows = [
-        (0, [1.0, 0.1, 0.0]),    # anchor, cell 0
-        (1, [1.0, 0.12, 0.0]),   # very close to 0 -> positive
-        (2, [1.0, 0.9, 0.0]),    # same cell 0? cos vs c0=0.743 vs c1=0.669 -> cell 0, far -> negative
-        (3, [0.0, 1.0, 0.1]),    # cell 1 anchor
-        (4, [0.1, 1.0, 0.0]),    # cell 1 — anchor 3's only neighbor
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    anchors = spark.createDataFrame([(0,), (3,)], "vec_id long")
-    got = {r["anchor_id"]: (r["pos_id"], r["neg_id"])
-           for r in hard_negative_triplets(emb, cents, anchors).collect()}
-    # anchor 0: neighbors {1, 2}; 1 is nearest, 2 farthest
-    assert got[0] == (1, 2)
-    # anchor 3 has ONE same-cell neighbor -> pos == neg -> dropped
-    assert 3 not in got
-
-
 def test_histogram_quantiles_error_bound(spark):
     """The sketch guarantee: est <= exact < 2*est for every group and
     quantile (the estimate is the covering bucket's lower bound)."""

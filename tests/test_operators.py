@@ -1600,39 +1600,6 @@ def test_weighted_reservoir_sample_matches_python_model(spark):
         weighted_reservoir_sample(bad, "w", k=1).collect()
 
 
-def test_knn_label_propagation_hand_case(spark):
-    """r8: two well-separated clusters with labeled seeds — every
-    unlabeled vector must take its own cluster's label unanimously;
-    vote count and config validation pinned."""
-    import pytest
-
-    from edsnlp_spark.operators.similarity import knn_label_propagation
-
-    # cluster A around (1,0,0,0), cluster B around (0,1,0,0)
-    def va(eps):
-        return [1.0, eps, 0.0, 0.0]
-
-    def vb(eps):
-        return [eps, 1.0, 0.0, 0.0]
-
-    rows = ([(i, va(0.01 * i)) for i in range(4)]          # A seeds
-            + [(10 + i, vb(0.01 * i)) for i in range(4)]   # B seeds
-            + [(100, va(0.02)), (101, vb(0.03))])          # unlabeled
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    seeds = spark.createDataFrame(
-        [(i, "A") for i in range(4)] + [(10 + i, "B") for i in range(4)],
-        "vec_id long, label string")
-    cents = [va(0.0), vb(0.0)]
-    out = {r.vec_id: r for r in knn_label_propagation(
-        emb, seeds, cents, k=3, n_probe=1).collect()}
-    assert set(out) == {100, 101}
-    assert (out[100].label, out[100].n_votes) == ("A", 3)
-    assert (out[101].label, out[101].n_votes) == ("B", 3)
-    assert out[100].top_cos > 0.999
-    with pytest.raises(ValueError, match="k >= 1"):
-        knn_label_propagation(emb, seeds, cents, k=0)
-
-
 def test_length_profile_power_of_two_buckets(spark):
     """r8: the corrected floor(log2) bucket must place exact powers of
     two in their own bucket (a bare libm floor(log2) is 1-ulp fragile

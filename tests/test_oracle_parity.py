@@ -15,9 +15,7 @@ import pytest
 
 from edsnlp_spark.queries import all_queries
 
-TABLES = [
-    "customer", "part", "orders", "lineitem", "documents", "embeddings",
-]
+TABLES = ["orders", "lineitem", "documents"]
 
 _QUERIES = all_queries()
 WITH_ORACLE = sorted(n for n, (_, sql) in _QUERIES.items() if sql)
@@ -26,22 +24,18 @@ WITH_ORACLE = sorted(n for n, (_, sql) in _QUERIES.items() if sql)
 # tests keep the old id, so each query's test history stays under one name.
 _FORMERLY_PREFIXED = frozenset("""
     badwords_filter bigram_pmi bloom_decontamination bm25_indexed_search
-    bpe_lifecycle chunk_retrieval clustering_coefficient contrastive_pairs
-    corpus_curation_strip corpus_length_profile crf_distillation
-    cross_minhash_dedup dedup_components_incremental dedup_keeper_election
-    dedup_keeper_incremental dedup_recall_eval distillation_eval
-    document_chunking duplication_profile graph_embeddings graph_walks
-    hybrid_retrieval ivfpq_indexed_search knn_label_propagation langid_trained
-    length_quantiles mmr_diversified_search negation_distillation
-    negation_distillation_eval ner_crf_viterbi note_dates pagerank_copurchase
-    phrase_search quality_auc related_parts_ppr rouge_l rouge_overlap
-    semantic_clusters semdedup_embeddings sentence_boundaries sequence_packing
-    simhash_neardup simhash_neardup_capped source_divergence
-    source_mixture_sample source_vocab_saturation split_assignment
-    strip_duplicated_spans suicide_pollution table_cells temperature_mixture
-    tfidf_keywords tnm_mentions tokenizer_fertility trained_ann_topk
-    umls_scale_match unigram_logppl unigram_tokenizer url_domain_filtering
-    walk_skipgram_pairs weighted_doc_sample weighted_pagerank winnowing_fp
+    bpe_lifecycle chunk_retrieval corpus_curation_strip corpus_length_profile
+    crf_distillation cross_minhash_dedup dedup_components_incremental
+    dedup_keeper_election dedup_keeper_incremental dedup_recall_eval
+    distillation_eval document_chunking duplication_profile langid_trained
+    length_quantiles negation_distillation negation_distillation_eval
+    ner_crf_viterbi note_dates phrase_search quality_auc rouge_l rouge_overlap
+    sentence_boundaries sequence_packing simhash_neardup
+    simhash_neardup_capped source_divergence source_mixture_sample
+    source_vocab_saturation split_assignment strip_duplicated_spans
+    suicide_pollution table_cells temperature_mixture tfidf_keywords
+    tnm_mentions tokenizer_fertility umls_scale_match unigram_logppl
+    unigram_tokenizer url_domain_filtering weighted_doc_sample winnowing_fp
     wordpiece_lifecycle
 """.split())
 
@@ -51,7 +45,7 @@ def _test_id(name: str) -> str:
 
 
 def test_formerly_prefixed_names_are_oracle_queries():
-    assert len(_FORMERLY_PREFIXED) == 64
+    assert len(_FORMERLY_PREFIXED) == 49
     assert _FORMERLY_PREFIXED <= set(WITH_ORACLE)
 
 

@@ -1128,27 +1128,3 @@ def test_wordpiece_encode_invariants(spark):
             for ln in range(len(w) - i, len(body), -1):
                 assert pref + w[i:i + ln] not in vs, (w, got, k)
             i += len(body)
-
-
-def test_train_graph_embeddings_invariants(spark):
-    """Every requantized component is within +-emb_scale, and at least
-    one component per dimension attains the scale (the max defines the
-    quantization)."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from edsnlp_spark.operators.graph import train_graph_embeddings
-
-    rnd = random.Random(13)
-    pairs = spark.createDataFrame(
-        sorted({(rnd.randrange(30), rnd.randrange(30),
-                 rnd.randrange(1, 9)) for _ in range(150)}),
-        "center long, context long, n_pairs long")
-    emb = train_graph_embeddings(pairs, dim=4, iters=1,
-                                 emb_scale=4096).collect()
-    assert emb
-    by_dim = list(zip(*[r.emb for r in emb]))
-    for vals in by_dim:
-        assert all(abs(v) <= 4096 for v in vals)
-        assert max(abs(v) for v in vals) in (0, 4096)
