@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from edsnlp_spark.session import get_spark
@@ -5,16 +7,21 @@ from edsnlp_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # r15 (VERDICT r14 #6): the suite is scheduler-latency-bound, not
-    # compute-bound (32min wall vs <1min cpu) — 32 shuffle partitions
-    # on tiny test data meant 32 reduce tasks per exchange.  8 matches
-    # local[8]; measured: test_ivf.py 172s -> 118s, test_properties.py
-    # ~25% faster.  Query RESULTS are partition-independent by design
-    # (the oracle-parity replica runs under this conf and still
-    # compares every value against DuckDB); operators that need a
-    # specific shard layout pin it explicitly with repartition(n).
-    s = get_spark(app_name="edsnlp-spark-tests", master="local[8]",
-                  extra_conf={"spark.sql.shuffle.partitions": "8"})
+    # The suite is scheduler-latency-bound: tiny inputs, thousands of
+    # short jobs.  Each exchange runs one reduce task per shuffle
+    # partition, and each scan of a createDataFrame(list) input runs one
+    # Python task per slot, so slots and partitions beyond the core
+    # count only queue.  One of each per core (capped at 8): on a 4-core
+    # host the whole suite went 2541s -> 1860s from local[8] with 8
+    # partitions to local[4] with 4.  Query RESULTS are
+    # partition-independent by design (the oracle-parity replica runs
+    # under this conf and still compares every value against DuckDB);
+    # operators that need a specific shard layout pin it explicitly
+    # with repartition(n).
+    n = os.environ.get("SPARK_GRAFT_CPUS", "")
+    cores = min(8, int(n) if n.isdigit() else len(os.sched_getaffinity(0)))
+    s = get_spark(app_name="edsnlp-spark-tests", master=f"local[{cores}]",
+                  extra_conf={"spark.sql.shuffle.partitions": str(cores)})
     yield s
     s.stop()
 
