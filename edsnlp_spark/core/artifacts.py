@@ -1,7 +1,6 @@
 """Central version stamp for persisted seed artifacts (VERDICT r11 #3).
 
-The gitignored seed artifacts (``.text_index`` — including its
-chunk-corpus variant — and ``.dedup_seed``) are keyed by
+The gitignored seed artifact ``.dedup_seed`` is keyed by
 DATA fingerprint + builder CONFIG.  Without a code-version component
 in the tag, a builder behavior change silently leaves consumers
 serving stale artifacts: the oracle hash gate catches the divergence,

@@ -1192,7 +1192,7 @@ def components_index_build(labels: DataFrame, path: str,
     index: parquet PARTITIONED BY bucket = pmod(xxhash64(comp),
     n_buckets), so incremental updates rewrite only the partitions
     whose components a batch touches (the artifact-family shape:
-    window-hash index, MinHash band index, inverted index)."""
+    window-hash index, MinHash band index)."""
     if n_buckets < 1:
         raise ValueError("components_index_build requires n_buckets >= 1")
     out = labels.select(

@@ -307,10 +307,9 @@ def binary_auc_calibration(scored: DataFrame, score_col: str = "score",
     positive / all negative) pin AUC at 0.5.
 
     Scale shape: ONE groupBy on the quantized score (<= 1e6 + 1
-    distinct values — corpus-size-independent, the histogram-quantiles
-    bound), a cumulative window over that bounded plane, and a 1-row
-    totals broadcast; the corpus itself is touched by exactly one
-    partial-aggregated shuffle."""
+    distinct values — corpus-size-independent), a cumulative window
+    over that bounded plane, and a 1-row totals broadcast; the corpus
+    itself is touched by exactly one partial-aggregated shuffle."""
     from pyspark.sql import Window
 
     if n_buckets < 1:

@@ -1316,95 +1316,6 @@ def _pii_count_sql(col: str) -> str:
     return f"({terms})"
 
 
-# ---- Bloom-filter decontamination (approximate membership) --------------
-
-def bloom_decontamination(spark, sf_dir):
-    """Decontamination via a Bloom membership filter (r9): build the
-    filter over the eval split's (doc_id %% 97 == 0) distinct 8-token
-    shingles, probe every corpus doc's shingles, flag docs with any
-    maybe-hit.  Zero false negatives (nothing contaminated slips
-    through); false positives at the configured (1-e^(-kn/m))^k rate —
-    the trade that keeps the reference-set state at <= m bits no matter
-    how the eval corpus grows (vs the exact hash index of
-    decontamination_overlap / cross_corpus_dedup).  One bounded
-    distinct builds the filter; the probe joins k x distinct shingles
-    against it (un-hinted — AQE broadcasts when m is small)."""
-    from ..operators.sketches import bloom_build, bloom_probe
-    d = _t(spark, sf_dir, "documents")
-    tok = r"[^ ]+"
-    rx = "(?=(" + tok + (r" " + tok) * 7 + r"))" + tok + " "
-    # in-data-path guard (ADVICE r9 #2): the lookahead regexp silently
-    # skips empty tokens on non-single-space text while the oracle's
-    # string_split slicing does not — same failure mode
-    # _window_hash_rows / bigram_pmi_topk guard against; fail loudly
-    # instead of silently breaking parity
-    guarded = F.when(
-        ~F.col("text").rlike("^ |  | $"), F.col("text")
-    ).otherwise(F.raise_error(F.concat(
-        F.lit("bloom_decontamination: text is not single-space "
-              "tokenized (shingles would desync) for doc_id="),
-        F.col("doc_id").cast("string"))))
-    sh = F.array_distinct(
-        F.regexp_extract_all(guarded, F.lit(rx), F.lit(1)))
-    ev = d.filter(F.col("doc_id") % 97 == 0).select(
-        F.explode(sh).alias("s"))
-    bits = bloom_build(ev, "s", k=4, m=1 << 18)
-    corpus = d.filter(F.col("doc_id") % 97 != 0).select(
-        "doc_id", F.explode(sh).alias("s"))
-    probed = bloom_probe(corpus, "s", bits, k=4, m=1 << 18)
-    return (
-        probed.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
-             F.sum(F.col("maybe_member").cast("int")).cast("bigint")
-             .alias("n_hits"))
-        .select("doc_id", "n_shingles", "n_hits",
-                (F.col("n_hits") > 0).alias("flagged"))
-    )
-
-
-def _bloom_pos_sql(col: str, k: int = 4, m: int = 1 << 18) -> str:
-    terms = ", ".join(
-        f"('0x' || substr(md5('{j}:' || {col}), 1, 15))::BIGINT % {m}"
-        for j in range(k))
-    return f"list_distinct([{terms}])"
-
-
-BLOOM_DECONTAMINATION_SQL = f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(toks[i+1:i+8], ' ')
-                        for i in range(greatest(len(toks) - 7, 0))])
-           AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-),
-ev AS (
-  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 97 = 0
-),
-bits AS (
-  SELECT DISTINCT unnest({_bloom_pos_sql('s')}) AS bit FROM ev
-),
-probe AS (
-  SELECT doc_id, s, {_bloom_pos_sql('s')} AS ps
-  FROM (SELECT doc_id, unnest(shingles) AS s FROM sh
-        WHERE doc_id % 97 <> 0)
-),
-pr AS (
-  SELECT doc_id, s, len(ps) AS np, unnest(ps) AS bit FROM probe
-),
-hit AS (
-  SELECT p.doc_id, p.s,
-         CASE WHEN COUNT(b.bit) = ANY_VALUE(p.np)
-              THEN 1 ELSE 0 END AS mm
-  FROM pr p
-  LEFT JOIN bits b USING (bit)
-  GROUP BY p.doc_id, p.s
-)
-SELECT doc_id, COUNT(*)::BIGINT AS n_shingles,
-       SUM(mm)::BIGINT AS n_hits, SUM(mm) > 0 AS flagged
-FROM hit GROUP BY doc_id
-"""
-
-
 # ---- test-set decontamination (training-data pipeline) -----------------
 
 _DECON_CANARY = ("the quick spark benchmark canary passage "
@@ -2262,9 +2173,9 @@ def temperature_mixture(spark, sf_dir):
     engines; the weight is then micro-scaled to an INTEGER
     (floor(sqrt(n_s) * 1e6)) so the share normalization and the keep
     threshold (knuth_hash(doc_id) * n_s < quota_s * 2^32) are
-    all-integer — the HLL integer-harmonic-sum recipe applied to
-    mixing.  Same two-pass shape as source_mixture_sample: one tiny
-    per-source count broadcast back, one pure-projection filter."""
+    all-integer, so both engines agree exactly.  Same two-pass shape
+    as source_mixture_sample: one tiny per-source count broadcast
+    back, one pure-projection filter."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     w = F.floor(F.sqrt(F.col("n_docs")) * F.lit(1000000.0)).cast("bigint")
@@ -2802,52 +2713,6 @@ FROM t LEFT JOIN agg a USING (doc_id) LEFT JOIN nrem n USING (doc_id)
 """
 
 
-# ---- BM25 keyword retrieval --------------------------------------------
-
-def bm25_search(spark, sf_dir):
-    """Okapi BM25 top-10 for a 3-term keyword query over documents —
-    lexical retrieval next to the embedding ANN tier (corpus
-    exploration / eval-set mining / targeted decontamination).  Per-doc
-    term frequencies are shuffle-free projections, corpus stats are ONE
-    aggregate row broadcast back, and the top-k plans as
-    TakeOrderedAndProject (per-partition heaps, never a global sort)."""
-    from ..operators.retrieval import bm25_topk
-    d = _t(spark, sf_dir, "documents")
-    return bm25_topk(d, ["spark", "hash", "filter"], k=10)
-
-
-BM25_SEARCH_SQL = """
-WITH base AS (
-  SELECT doc_id, len(toks)::DOUBLE AS dl,
-         len(list_filter(toks, x -> x = 'spark'))::DOUBLE AS tf0,
-         len(list_filter(toks, x -> x = 'hash'))::DOUBLE AS tf1,
-         len(list_filter(toks, x -> x = 'filter'))::DOUBLE AS tf2
-  FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
-        FROM documents)
-),
-stats AS (
-  SELECT COUNT(*)::DOUBLE AS n_docs, SUM(dl) AS sum_dl,
-         SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-         SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-         SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-  FROM base
-)
-SELECT doc_id, ROUND(s, 4) AS score FROM (
-  SELECT doc_id,
-         ln(1.0 + (n_docs - df0 + 0.5) / (df0 + 0.5))
-           * (tf0 * 2.2 / (tf0 + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))
-       + ln(1.0 + (n_docs - df1 + 0.5) / (df1 + 0.5))
-           * (tf1 * 2.2 / (tf1 + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))
-       + ln(1.0 + (n_docs - df2 + 0.5) / (df2 + 0.5))
-           * (tf2 * 2.2 / (tf2 + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))
-         AS s
-  FROM base CROSS JOIN stats
-)
-ORDER BY s DESC, doc_id
-LIMIT 10
-"""
-
-
 # ---- BPE tokenizer: distributed training + encode -------------------------
 
 # Learned OFFLINE from the corpus by operators/bpe.py bpe_train (the
@@ -3224,61 +3089,6 @@ GROUP BY d.source
 """
 
 
-# ---- Blocklist (badwords) filtering --------------------------------------
-
-def badwords_filter(spark, sf_dir):
-    """C4-style word-blocklist filter as a stats-plus-verdict table:
-    whole-token lowercase matches against a config list, keep iff the
-    flagged ratio stays under threshold.  Pure per-row projection — no
-    join, no shuffle (the blocklist is plan-literal config)."""
-    from ..operators.selection import blocklist_filter
-    d = _t(spark, sf_dir, "documents")
-    return blocklist_filter(d, ["slow", "dup"], max_ratio=0.03)
-
-
-BADWORDS_FILTER_SQL = """
-SELECT doc_id,
-       len(toks)::BIGINT AS n_tokens,
-       len(list_filter(toks, x -> x IN ('dup', 'slow')))::BIGINT
-         AS n_flagged,
-       ROUND(len(list_filter(toks, x -> x IN ('dup', 'slow')))
-             / len(toks), 4) AS flag_ratio,
-       len(list_filter(toks, x -> x IN ('dup', 'slow')))
-         <= 0.03::DOUBLE * len(toks) AS keep
-FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
-      FROM documents)
-"""
-
-
-# ---- Weighted reservoir sampling (A-ES) -----------------------------------
-
-def weighted_doc_sample(spark, sf_dir):
-    """Sample 100 docs WITHOUT replacement proportional to token count
-    (Efraimidis-Spirakis A-ES keys from md5(doc_id) — deterministic,
-    no executor RNG): the generic weighted subsampling pass next to
-    DSIR's target-directed resampling.  Top-k plans as
-    TakeOrderedAndProject."""
-    from ..operators.selection import weighted_reservoir_sample
-    d = _t(spark, sf_dir, "documents")
-    dd = d.select(
-        "doc_id",
-        F.size(F.split("text", " ", -1)).cast("bigint").alias("n_tokens"))
-    return weighted_reservoir_sample(dd, "n_tokens", k=100)
-
-
-WEIGHTED_DOC_SAMPLE_SQL = """
-WITH w AS (
-  SELECT doc_id,
-         len(string_split(text, ' '))::BIGINT AS weight,
-         ROUND(ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT
-                   + 0.5) / 1152921504606846976.0)
-               / len(string_split(text, ' ')), 4) + 0.0 AS key
-  FROM documents)
-SELECT doc_id, weight, key FROM w
-ORDER BY key DESC, doc_id LIMIT 100
-"""
-
-
 # ---- Sliding-window document chunking -------------------------------------
 
 def document_chunking(spark, sf_dir):
@@ -3304,145 +3114,6 @@ SELECT doc_id, cid::BIGINT AS chunk_id,
        array_to_string(toks[cid * 48 + 1 : cid * 48 + least(64, n - cid * 48)],
                        ' ') AS chunk_text
 FROM e
-"""
-
-
-# ---- Corpus statistics: PMI collocations + TF-IDF keywords ---------------
-
-def bigram_pmi(spark, sf_dir):
-    """Top-20 collocations by pointwise mutual information (Church &
-    Hanks 1990) over exact corpus counts — collocation mining /
-    tokenizer-merge-candidate analysis.  Two vocabulary-bounded
-    groupBys, un-hinted type-table joins (AQE decides), 1-row totals
-    broadcast, TakeOrderedAndProject top-k."""
-    from ..operators.textstats import bigram_pmi_topk
-    d = _t(spark, sf_dir, "documents")
-    return bigram_pmi_topk(d, k=20, min_count=5)
-
-
-BIGRAM_PMI_SQL = """
-WITH tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-uni AS (SELECT t, COUNT(*) AS c1
-        FROM (SELECT unnest(toks) AS t FROM tok) GROUP BY t),
-bi AS (
-  SELECT bg, COUNT(*) AS c12 FROM (
-    SELECT unnest([toks[i+1] || ' ' || toks[i+2]
-                   for i in range(greatest(len(toks) - 1, 0))]) AS bg
-    FROM tok)
-  GROUP BY bg HAVING COUNT(*) >= 5
-),
-tot AS (SELECT (SELECT SUM(c1) FROM uni) AS n_uni,
-               (SELECT SUM(c1) FROM uni)
-                 - (SELECT COUNT(*) FROM documents) AS n_bi),
-scored AS (
-  SELECT string_split(bg, ' ')[1] AS lft,
-         string_split(bg, ' ')[2] AS rgt, c12,
-         ln((c12 / n_bi)
-            / ((ul.c1 / n_uni) * (ur.c1 / n_uni))) AS pmi
-  FROM bi CROSS JOIN tot
-  JOIN uni ul ON ul.t = string_split(bg, ' ')[1]
-  JOIN uni ur ON ur.t = string_split(bg, ' ')[2]
-)
-SELECT lft AS "left", rgt AS "right", c12::BIGINT AS pair_count,
-       ROUND(pmi, 4) AS pmi
-FROM scored ORDER BY ROUND(pmi, 4) DESC, lft, rgt LIMIT 20
-"""
-
-
-def corpus_length_profile(spark, sf_dir):
-    """Per-source log2-bucketed document-length histogram — the corpus
-    profiling rollup (length distributions drive packing budgets and
-    chunk sizes).  Bucket = power-of-two-CORRECTED floor(log2) so a
-    1-ulp libm difference can't shift a histogram boundary between
-    engines; one projection + one bounded groupBy."""
-    from ..operators.textstats import length_profile
-    d = _t(spark, sf_dir, "documents")
-    return length_profile(d)
-
-
-CORPUS_LENGTH_PROFILE_SQL = """
-WITH n AS (
-  SELECT source, len(string_split(text, ' ')) AS n FROM documents
-),
-b AS (
-  SELECT source, n,
-         CASE WHEN POWER(2.0, l0) > n THEN l0 - 1
-              WHEN POWER(2.0, l0) * 2 <= n THEN l0 + 1
-              ELSE l0 END AS len_bucket
-  FROM (SELECT source, n,
-               FLOOR(log2(GREATEST(n, 1)))::BIGINT AS l0 FROM n)
-)
-SELECT source, len_bucket,
-       COUNT(*)::BIGINT AS n_docs,
-       SUM(n)::BIGINT AS total_tokens
-FROM b GROUP BY source, len_bucket
-"""
-
-
-def tfidf_keyword_extraction(spark, sf_dir):
-    """Top-3 TF-IDF keywords per document — cheap document labels for
-    corpus browsing / cluster naming.  One postings plane (persisted,
-    feeds df + scoring), per-doc window over that doc's distinct terms
-    only."""
-    from ..operators.textstats import tfidf_keywords
-    d = _t(spark, sf_dir, "documents")
-    return tfidf_keywords(d, k=3)
-
-
-TFIDF_KEYWORDS_SQL = """
-WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-             FROM documents),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-scored AS (
-  SELECT doc_id, term, ROUND(tf * ln(n_docs / df), 4) AS score
-  FROM tf JOIN dfq USING (term) CROSS JOIN nd
-),
-r AS (SELECT doc_id, term, score,
-             ROW_NUMBER() OVER (PARTITION BY doc_id
-                                ORDER BY score DESC, term) AS rank
-      FROM scored)
-SELECT doc_id, term, rank::BIGINT AS rank, score FROM r WHERE rank <= 3
-"""
-
-
-# ---- Count-min sketch point estimates ------------------------------------
-
-def cms_token_counts(spark, sf_dir):
-    """Count-min (Cormode & Muthukrishnan 2005) frequency estimates for
-    a probe token list over the corpus token stream: the sketch is one
-    groupBy over (row, cell) — at most d*w = 4096 cells survive, the
-    bounded-memory alternative to an exact full-vocabulary groupBy."""
-    from ..operators.sketches import cms_point_estimates
-    d = _t(spark, sf_dir, "documents")
-    tok = d.select(F.explode(F.split("text", " ")).alias("t"))
-    return cms_point_estimates(
-        tok, "t", ["join", "hash", "spark", "filter", "nosuchtoken"],
-        d=4, w=1024)
-
-
-CMS_TOKEN_COUNTS_SQL = """
-WITH tok AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM documents
-),
-cells AS (
-  SELECT r, ('0x' || substr(md5(r::VARCHAR || ':' || t), 1, 8))::BIGINT
-             % 1024 AS cell
-  FROM tok, unnest([0, 1, 2, 3]) AS u(r)
-),
-sketch AS (SELECT r, cell, COUNT(*) AS c FROM cells GROUP BY r, cell),
-probes AS (
-  SELECT key, r,
-         ('0x' || substr(md5(r::VARCHAR || ':' || key), 1, 8))::BIGINT
-           % 1024 AS cell
-  FROM (VALUES ('join'), ('hash'), ('spark'), ('filter'),
-               ('nosuchtoken')) AS p(key),
-       unnest([0, 1, 2, 3]) AS u(r)
-)
-SELECT key, MIN(COALESCE(c, 0))::BIGINT AS est
-FROM probes LEFT JOIN sketch USING (r, cell)
-GROUP BY key
 """
 
 
@@ -3485,468 +3156,6 @@ f AS (
 SELECT DISTINCT doc_id, fp
 FROM (SELECT doc_id, unnest(fps) AS fp FROM f)
 """
-
-
-# ---- Source distribution divergence (drift monitor) ----------------------
-
-def source_vocab_saturation_q(spark, sf_dir):
-    """Per-source vocabulary saturation (HLL distinct tokens / total
-    occurrences) — the sketch tier composed INTO the source-monitoring
-    pipeline (VERDICT r7 #8): the register groupBy carries a count per
-    register, so the cardinality estimate AND the totals come out of
-    one corpus scan and one sources x 512-row exchange."""
-    from ..operators.selection import source_vocab_saturation
-    d = _t(spark, sf_dir, "documents")
-    return source_vocab_saturation(d, p=9)
-
-
-SOURCE_VOCAB_SATURATION_SQL = """
-WITH tok AS (
-  SELECT source AS src, unnest(string_split(text, ' ')) AS tok
-  FROM documents
-),
-s AS (
-  SELECT src, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS hh FROM tok
-),
-rr AS (SELECT src, hh >> 51 AS idx, hh % 2251799813685248 AS suffix
-       FROM s),
-lc AS (
-  SELECT src, idx, suffix,
-         CASE WHEN POWER(2.0, l0) > suffix THEN l0 - 1
-              WHEN POWER(2.0, l0) * 2 <= suffix THEN l0 + 1
-              ELSE l0 END AS lx
-  FROM (SELECT src, idx, suffix,
-               FLOOR(log2(GREATEST(suffix, 1)))::BIGINT AS l0 FROM rr)
-),
-rho AS (
-  SELECT src, idx, CASE WHEN suffix = 0 THEN 52 ELSE 51 - lx END AS rho
-  FROM lc
-),
-regs AS (SELECT src, idx, MAX(rho) AS mr, COUNT(*) AS cnt
-         FROM rho GROUP BY src, idx),
-agg AS (
-  SELECT src, COUNT(*) AS npresent,
-         SUM(POWER(2.0, 52 - mr)::BIGINT) AS sm,
-         SUM(cnt) AS total
-  FROM regs GROUP BY src
-),
-fin AS (
-  SELECT src, total, (512 - npresent) AS v,
-         (512 - npresent) * 4503599627370496 + sm AS z
-  FROM agg
-),
-est AS (
-  SELECT src, total,
-         ROUND(CASE WHEN (0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
-                         * 4503599627370496.0 / z <= 1280.0 AND v > 0
-                    THEN 512.0 * ln(512.0 / v)
-                    ELSE (0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
-                         * 4503599627370496.0 / z END, 4) AS approx_distinct
-  FROM fin
-)
-SELECT src AS source, total::BIGINT AS n_tokens, approx_distinct,
-       ROUND(approx_distinct / total, 4) AS saturation
-FROM est
-"""
-
-
-def source_divergence_q(spark, sf_dir):
-    """Pairwise Jensen-Shannon divergence between each source's
-    hashed-ngram distribution — the drift monitor that flags a new
-    source that doesn't look like the rest of the corpus.  One feature
-    pass + one groupBy(source, bucket); all pairwise math happens on
-    the <= |sources| * b row count table, with a closed-form term for
-    untouched buckets."""
-    from ..operators.selection import source_divergence
-    d = _t(spark, sf_dir, "documents")
-    return source_divergence(d, b=4096)
-
-
-SOURCE_DIVERGENCE_SQL = """
-WITH feats AS (
-  SELECT src, ('0x' || substr(md5(f), 1, 8))::BIGINT % 4096 AS bkt
-  FROM (
-    SELECT source AS src, unnest(string_split(text, ' ')) AS f
-    FROM documents
-    UNION ALL
-    SELECT source, unnest([toks[i+1] || ' ' || toks[i+2]
-                           for i in range(greatest(len(toks) - 1, 0))])
-    FROM (SELECT source, string_split(text, ' ') AS toks FROM documents))
-),
-counts AS (SELECT src, bkt, COUNT(*) AS c FROM feats GROUP BY src, bkt),
-totals AS (SELECT src, SUM(c) AS tot FROM counts GROUP BY src),
-spairs AS (
-  SELECT a.src AS sa, a.tot AS ta, b.src AS sb, b.tot AS tb
-  FROM totals a CROSS JOIN totals b WHERE a.src < b.src
-),
-ub AS (
-  SELECT DISTINCT sa, sb, ta, tb, bkt FROM (
-    SELECT p.sa, p.sb, p.ta, p.tb, c.bkt
-    FROM spairs p JOIN counts c ON c.src = p.sa
-    UNION ALL
-    SELECT p.sa, p.sb, p.ta, p.tb, c.bkt
-    FROM spairs p JOIN counts c ON c.src = p.sb)
-),
-j AS (
-  SELECT ub.sa, ub.sb, ub.ta, ub.tb,
-         COALESCE(ca.c, 0) AS ca, COALESCE(cb.c, 0) AS cb
-  FROM ub
-  LEFT JOIN counts ca ON ca.src = ub.sa AND ca.bkt = ub.bkt
-  LEFT JOIN counts cb ON cb.src = ub.sb AND cb.bkt = ub.bkt
-),
-t AS (
-  SELECT sa, sb, ta, tb,
-         SUM((((ca + 1.0) / (ta + 4096.0))
-              * ln(((ca + 1.0) / (ta + 4096.0))
-                   / ((((ca + 1.0) / (ta + 4096.0))
-                       + ((cb + 1.0) / (tb + 4096.0))) / 2.0))
-              + ((cb + 1.0) / (tb + 4096.0))
-              * ln(((cb + 1.0) / (tb + 4096.0))
-                   / ((((ca + 1.0) / (ta + 4096.0))
-                       + ((cb + 1.0) / (tb + 4096.0))) / 2.0))) / 2.0)
-           AS js_touched,
-         COUNT(*) AS n_touched
-  FROM j GROUP BY sa, sb, ta, tb
-)
-SELECT sa AS source_a, sb AS source_b,
-       ROUND(js_touched + (4096 - n_touched) *
-             (((1.0 / (ta + 4096.0))
-               * ln((1.0 / (ta + 4096.0))
-                    / (((1.0 / (ta + 4096.0))
-                        + (1.0 / (tb + 4096.0))) / 2.0))
-               + (1.0 / (tb + 4096.0))
-               * ln((1.0 / (tb + 4096.0))
-                    / (((1.0 / (ta + 4096.0))
-                        + (1.0 / (tb + 4096.0))) / 2.0))) / 2.0),
-             4) AS js_divergence
-FROM t
-"""
-
-
-# ---- HyperLogLog distinct sketch ----------------------------------------
-
-def hll_distinct_windows(spark, sf_dir):
-    """Deterministic HyperLogLog (p=9, ~4.6% error) estimating the
-    number of DISTINCT 13-token windows corpus-wide — the sketch-tier
-    answer to "how much unique text is in here" that needs no global
-    distinct shuffle: per-partition partial max per register, one
-    <=512-row exchange, engine-portable md5 hashing so the DuckDB
-    oracle reproduces the estimate bit-for-bit."""
-    from ..operators.dedup import _window_hash_rows
-    from ..operators.sketches import hll_distinct
-    d = _t(spark, sf_dir, "documents")
-    wins = _window_hash_rows(d, 13, "doc_id", "text")
-    return hll_distinct(
-        wins.select(F.col("h").cast("string").alias("hs")), "hs", p=9)
-
-
-HLL_DISTINCT_WINDOWS_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-),
-w AS (
-  SELECT unnest([array_to_string(toks[i+1:i+13], ' ')
-                 for i in range(greatest(len(toks) - 12, 0))]) AS win
-  FROM t
-),
-s AS (
-  SELECT ('0x' || substr(md5(
-           (('0x' || substr(md5(win), 1, 15))::BIGINT)::VARCHAR
-         ), 1, 15))::BIGINT AS hh
-  FROM w
-),
-rr AS (SELECT hh >> 51 AS idx, hh % 2251799813685248 AS suffix FROM s),
-lc AS (
-  SELECT idx, suffix,
-         CASE WHEN POWER(2.0, l0) > suffix THEN l0 - 1
-              WHEN POWER(2.0, l0) * 2 <= suffix THEN l0 + 1
-              ELSE l0 END AS lx
-  FROM (SELECT idx, suffix,
-               FLOOR(log2(GREATEST(suffix, 1)))::BIGINT AS l0 FROM rr)
-),
-rho AS (
-  SELECT idx, CASE WHEN suffix = 0 THEN 52 ELSE 51 - lx END AS rho
-  FROM lc
-),
-regs AS (SELECT idx, MAX(rho) AS mr FROM rho GROUP BY idx),
-agg AS (
-  SELECT COUNT(*) AS npresent,
-         SUM(POWER(2.0, 52 - mr)::BIGINT) AS sm
-  FROM regs
-),
-fin AS (
-  SELECT (512 - npresent) AS v,
-         (512 - npresent) * 4503599627370496 + sm AS z
-  FROM agg
-)
-SELECT 512::BIGINT AS m, v::BIGINT AS v_empty,
-       ROUND(CASE WHEN (0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
-                       * 4503599627370496.0 / z <= 1280.0 AND v > 0
-                  THEN 512.0 * ln(512.0 / v)
-                  ELSE (0.7213 / (1.0 + 1.079 / 512.0)) * 512.0 * 512.0
-                       * 4503599627370496.0 / z END, 4) AS approx_distinct
-FROM fin
-"""
-
-
-# ---- Retrieval evaluation metrics ----------------------------------------
-
-def bm25_eval_metrics(spark, sf_dir):
-    """recall@10 / MRR / nDCG@10 for the batch-BM25 rankings against
-    deterministic relevance judgments (a doc is relevant to a query iff
-    it contains ALL the query's terms) — the eval harness a retrieval
-    pipeline runs after every index change.  Metrics fold SORTED rank
-    arrays, so the floating sums are order-deterministic."""
-    from ..operators.retrieval import bm25_topk_batch, ranking_metrics
-    d = _t(spark, sf_dir, "documents")
-    q = spark.createDataFrame(
-        [(0, ["spark", "hash"]), (1, ["filter", "merge", "vector"]),
-         (2, ["window", "stream"])],
-        "query_id long, terms array<string>")
-    ranked = bm25_topk_batch(d, q, k=10)
-    toks = F.split(F.lower("text"), " ", -1)
-    qrels = (
-        d.select("doc_id", toks.alias("tk"))
-        .crossJoin(q)
-        .filter(F.size(F.array_except(F.col("terms"), F.col("tk"))) == 0)
-        .select("query_id", "doc_id")
-    )
-    return ranking_metrics(ranked, qrels, k=10)
-
-
-BM25_EVAL_METRICS_SQL = """
-WITH q(query_id, term) AS (
-  VALUES (0, 'spark'), (0, 'hash'),
-         (1, 'filter'), (1, 'merge'), (1, 'vector'),
-         (2, 'window'), (2, 'stream')
-),
-qsets AS (SELECT query_id, list(term) AS terms FROM q GROUP BY query_id),
-tokd AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
-),
-p AS (
-  SELECT doc_id, dl, term, COUNT(*)::DOUBLE AS tf FROM (
-    SELECT doc_id, len(toks)::DOUBLE AS dl, unnest(toks) AS term
-    FROM tokd)
-  GROUP BY doc_id, dl, term
-),
-stats AS (
-  SELECT COUNT(*)::DOUBLE AS n_docs, SUM(dl) AS sum_dl
-  FROM (SELECT doc_id, any_value(dl) AS dl FROM p GROUP BY doc_id)
-),
-tdf AS (SELECT term, COUNT(*)::DOUBLE AS df FROM p GROUP BY term),
-scored AS (
-  SELECT q.query_id, p.doc_id,
-         SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-             * (tf * 2.2
-                / (tf + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))) AS s
-  FROM q JOIN tdf USING (term) JOIN p USING (term) CROSS JOIN stats
-  GROUP BY q.query_id, p.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(s, 4) DESC, doc_id) AS rank
-  FROM scored
-),
-qrels AS (
-  SELECT s.query_id, t.doc_id
-  FROM tokd t CROSS JOIN qsets s
-  WHERE len(list_filter(s.terms,
-                        x -> NOT list_contains(t.toks, x))) = 0
-),
-nrel AS (SELECT query_id, COUNT(*) AS n_rel FROM qrels GROUP BY query_id),
-hits AS (
-  SELECT r.query_id, list_sort(list(r.rank)) AS rs
-  FROM ranked r JOIN qrels USING (query_id, doc_id)
-  WHERE r.rank <= 10
-  GROUP BY r.query_id
-),
-m AS (
-  SELECT n.query_id, n.n_rel,
-         COALESCE(len(h.rs), 0) AS n_hits,
-         COALESCE(list_sum(list_transform(
-           h.rs, r -> 0.6931471805599453 / ln(r + 1.0))), 0.0) AS dcg,
-         list_sum(list_transform(
-           range(1, least(10, n.n_rel) + 1),
-           r -> 0.6931471805599453 / ln(r + 1.0))) AS idcg,
-         h.rs[1] AS first_rel
-  FROM nrel n LEFT JOIN hits h USING (query_id)
-)
-SELECT query_id, n_rel::BIGINT AS n_rel,
-       ROUND(n_hits / n_rel, 4) AS recall_at_k,
-       ROUND(CASE WHEN first_rel IS NULL THEN 0.0
-                  ELSE 1.0 / first_rel END, 4) AS mrr,
-       ROUND(dcg / idcg, 4) AS ndcg
-FROM m
-"""
-
-
-# ---- DSIR importance resampling (data selection) ------------------------
-
-def dsir_selection(spark, sf_dir):
-    """DSIR (Xie et al. 2023): resample 200 raw docs toward a target
-    distribution (here: the doc_id % 17 == 0 subset) via hashed-ngram
-    bag models + Gumbel top-k over the log likelihood ratio.  Both LMs
-    are one groupBy (<= b rows); the ratio table broadcasts; the top-k
-    plans as TakeOrderedAndProject."""
-    from ..operators.selection import dsir_sample_topk
-    d = _t(spark, sf_dir, "documents")
-    target = d.filter(F.col("doc_id") % 17 == 0)
-    raw = d.filter(F.col("doc_id") % 17 != 0)
-    return dsir_sample_topk(raw, target, k=200, b=4096)
-
-
-DSIR_SELECTION_SQL = """
-WITH rawd AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 <> 0),
-tgtd AS (SELECT doc_id, text FROM documents WHERE doc_id % 17 = 0),
-rawf AS (
-  SELECT doc_id, ('0x' || substr(md5(f), 1, 8))::BIGINT % 4096 AS bkt
-  FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS f FROM rawd
-    UNION ALL
-    SELECT doc_id, unnest([toks[i+1] || ' ' || toks[i+2]
-                           for i in range(greatest(len(toks) - 1, 0))]) AS f
-    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM rawd))
-),
-tgtf AS (
-  SELECT doc_id, ('0x' || substr(md5(f), 1, 8))::BIGINT % 4096 AS bkt
-  FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS f FROM tgtd
-    UNION ALL
-    SELECT doc_id, unnest([toks[i+1] || ' ' || toks[i+2]
-                           for i in range(greatest(len(toks) - 1, 0))]) AS f
-    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM tgtd))
-),
-tcnt AS (SELECT bkt, COUNT(*) AS ct FROM tgtf GROUP BY bkt),
-rcnt AS (SELECT bkt, COUNT(*) AS cr FROM rawf GROUP BY bkt),
-j AS (
-  SELECT bkt, COALESCE(ct, 0) AS ct, COALESCE(cr, 0) AS cr
-  FROM tcnt FULL JOIN rcnt USING (bkt)
-),
-tot AS (SELECT SUM(ct) AS tt, SUM(cr) AS tr FROM j),
-lr AS (
-  SELECT bkt, ln((ct + 1.0) / (tt + 4096.0))
-              - ln((cr + 1.0) / (tr + 4096.0)) AS lr
-  FROM j CROSS JOIN tot
-),
-pd AS (SELECT doc_id, bkt, COUNT(*) AS n FROM rawf GROUP BY doc_id, bkt),
-w AS (
-  SELECT doc_id, SUM(n * lr) AS logw
-  FROM pd JOIN lr USING (bkt) GROUP BY doc_id
-),
-g AS (
-  SELECT doc_id, logw,
-         logw + (-ln(-ln(
-           ((('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT + 0.5)
-            / 1152921504606846976.0)))) AS s
-  FROM w
-)
-SELECT doc_id, ROUND(logw, 4) AS logw, ROUND(s, 4) AS score
-FROM g ORDER BY s DESC, doc_id LIMIT 200
-"""
-
-
-# ---- BM25 batch retrieval (queries as a DataFrame) ---------------------
-
-def bm25_search_batch(spark, sf_dir):
-    """BM25 top-5 per query for a DATAFRAME of queries — the
-    eval-mining shape (thousands of queries in one pass).  One
-    tokenize+explode pass builds the postings plane; the df-enriched
-    query-term table is broadcast into the postings join; per-query
-    top-k is a window over matched (query, doc) pairs only."""
-    from ..operators.retrieval import bm25_topk_batch
-    d = _t(spark, sf_dir, "documents")
-    q = spark.createDataFrame(
-        [(0, ["spark", "hash"]), (1, ["filter", "merge", "vector"]),
-         (2, ["window", "stream"])],
-        "query_id long, terms array<string>")
-    return bm25_topk_batch(d, q, k=5)
-
-
-BM25_SEARCH_BATCH_SQL = """
-WITH q(query_id, term) AS (
-  VALUES (0, 'spark'), (0, 'hash'),
-         (1, 'filter'), (1, 'merge'), (1, 'vector'),
-         (2, 'window'), (2, 'stream')
-),
-tokd AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
-),
-p AS (
-  SELECT doc_id, dl, term, COUNT(*)::DOUBLE AS tf FROM (
-    SELECT doc_id, len(toks)::DOUBLE AS dl, unnest(toks) AS term
-    FROM tokd)
-  GROUP BY doc_id, dl, term
-),
-stats AS (
-  SELECT COUNT(*)::DOUBLE AS n_docs, SUM(dl) AS sum_dl
-  FROM (SELECT doc_id, any_value(dl) AS dl FROM p GROUP BY doc_id)
-),
-tdf AS (SELECT term, COUNT(*)::DOUBLE AS df FROM p GROUP BY term),
-scored AS (
-  SELECT q.query_id, p.doc_id,
-         SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-             * (tf * 2.2
-                / (tf + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))) AS s
-  FROM q JOIN tdf USING (term) JOIN p USING (term) CROSS JOIN stats
-  GROUP BY q.query_id, p.doc_id
-),
-r AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(s, 4) DESC, doc_id) AS rank, s
-  FROM scored
-)
-SELECT query_id, doc_id, rank::BIGINT AS rank, ROUND(s, 4) AS score
-FROM r WHERE rank <= 5
-"""
-
-
-
-def phrase_search(spark, sf_dir):
-    """Exact multi-token phrase queries over the corpus via the
-    positional-postings intersection (retrieval.phrase_search_batch):
-    one posexplode pass semi-joined by the broadcast phrase-term set,
-    anchor = pos - j, coverage certified by countDistinct(j) == m.
-    Includes a repeated-token phrase ('table table') to exercise the
-    distinct-j coverage logic."""
-    from ..operators.retrieval import phrase_search_batch
-    d = _t(spark, sf_dir, "documents")
-    q = spark.createDataFrame(
-        [(0, "table table"), (1, "fast merge batch"),
-         (2, "scan query big"), (3, "window stream sort")],
-        "query_id long, phrase string")
-    return phrase_search_batch(d, q)
-
-
-PHRASE_SEARCH_SQL = """
-WITH q(query_id, phrase) AS (
-  VALUES (0, 'table table'), (1, 'fast merge batch'),
-         (2, 'scan query big'), (3, 'window stream sort')
-),
-qt AS (
-  SELECT query_id, m, unnest(range(0, m)) AS j, unnest(pt) AS term
-  FROM (SELECT query_id, string_split(lower(phrase), ' ') AS pt,
-               len(string_split(lower(phrase), ' ')) AS m FROM q)
-),
-p AS (
-  SELECT doc_id, unnest(range(0, len(toks))) AS pos, unnest(toks) AS term
-  FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
-        FROM documents)
-),
-f AS (
-  SELECT query_id, doc_id, anchor
-  FROM (SELECT query_id, doc_id, m, j, pos - j AS anchor
-        FROM p JOIN qt USING (term) WHERE pos - j >= 0)
-  GROUP BY query_id, doc_id, m, anchor
-  HAVING COUNT(DISTINCT j) = m
-)
-SELECT query_id::BIGINT AS query_id, doc_id,
-       COUNT(*)::BIGINT AS n_matches, MIN(anchor)::BIGINT AS first_pos
-FROM f GROUP BY query_id, doc_id
-"""
-
 
 
 def _load_unigram_pin():
@@ -4056,7 +3265,6 @@ FROM tok JOIN enc USING (word) GROUP BY doc_id
 
 
 UNIGRAM_TOKENIZER_SQL = _unigram_tokenizer_sql()
-
 
 
 def rouge_overlap(spark, sf_dir):
@@ -4195,261 +3403,6 @@ r AS (
 ROUGE_OVERLAP_SQL = _rouge_overlap_sql()
 
 
-
-_TEXT_INDEX_BUILT: set = set()
-
-
-def _seed_text_index(spark, sf_dir, variant: str, corpus_fn,
-                     id_col: str, text_col: str) -> str:
-    """Build-or-reuse a PERSISTED inverted index for ``sf_dir`` (the
-    seed-index pattern of scaleops._dedup_seed_index): postings partitioned
-    by term-hash bucket under the gitignored ``.text_index/<tag>``,
-    keyed by data path + documents fingerprint + index config
-    (``variant`` encodes the corpus shape — raw docs vs chunked), so a
-    regenerated corpus or a changed chunking rebuilds instead of
-    serving stale postings.  Tokenization cost is paid once per corpus
-    snapshot; every search after that reads only the query terms'
-    bucket partitions."""
-    import os as _os
-
-    from ..core import artifacts as _art
-    from ..operators.retrieval import build_text_index
-
-    src_path = _os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = _os.stat(src_path)
-        fp = f"{st.st_size}:{int(st.st_mtime)}"
-    except OSError:
-        fp = "unknown"
-    # ARTIFACT_VERSION folds into the tag (VERDICT r11 #3): a builder
-    # behavior change = one central bump = every consumer rebuilds.
-    tag = _art.artifact_tag(
-        _os.path.abspath(sf_dir), variant, "buckets64", fp)
-    repo = _os.path.dirname(_os.path.dirname(
-        _os.path.dirname(_os.path.abspath(__file__))))
-    path = _os.path.join(repo, ".text_index", tag)
-    if tag not in _TEXT_INDEX_BUILT:
-        done = all(
-            _os.path.exists(_os.path.join(path, part, "_SUCCESS"))
-            for part in ("postings", "meta")) and _art.version_ok(path)
-        if not done:
-            build_text_index(corpus_fn(), path, n_buckets=64,
-                             id_col=id_col, text_col=text_col)
-            _art.stamp_version(path)
-        _TEXT_INDEX_BUILT.add(tag)
-    return path
-
-
-def _text_seed_index(spark, sf_dir) -> str:
-    """Raw-document inverted index (see :func:`_seed_text_index`)."""
-    return _seed_text_index(
-        spark, sf_dir, "docs",
-        lambda: _t(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-def bm25_indexed_search(spark, sf_dir):
-    """BM25 top-5 per query served from the PERSISTED inverted index
-    (retrieval.bm25_topk_indexed): the corpus is never re-tokenized —
-    the scan is pruned to the query terms' bucket partitions and df/tf
-    come from the stored postings.  Bit-identical to recomputing from
-    text (the oracle recomputes), so a hash mismatch catches builder
-    OR reader drift."""
-    from ..operators.retrieval import bm25_topk_indexed
-    path = _text_seed_index(spark, sf_dir)
-    q = spark.createDataFrame(
-        [(0, ["table", "merge"]), (1, ["vector", "scan", "slow"]),
-         (2, ["agg", "stream"])],
-        "query_id long, terms array<string>")
-    return bm25_topk_indexed(spark, path, q, k=5)
-
-
-BM25_INDEXED_SEARCH_SQL = """
-WITH q(query_id, term) AS (
-  VALUES (0, 'table'), (0, 'merge'),
-         (1, 'vector'), (1, 'scan'), (1, 'slow'),
-         (2, 'agg'), (2, 'stream')
-),
-tokd AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
-),
-p AS (
-  SELECT doc_id, dl, term, COUNT(*)::DOUBLE AS tf FROM (
-    SELECT doc_id, len(toks)::DOUBLE AS dl, unnest(toks) AS term
-    FROM tokd)
-  GROUP BY doc_id, dl, term
-),
-stats AS (
-  SELECT COUNT(*)::DOUBLE AS n_docs, SUM(dl) AS sum_dl
-  FROM (SELECT doc_id, any_value(dl) AS dl FROM p GROUP BY doc_id)
-),
-tdf AS (
-  SELECT term, COUNT(*)::DOUBLE AS df FROM p
-  WHERE term IN (SELECT term FROM q) GROUP BY term
-),
-scored AS (
-  SELECT q.query_id, p.doc_id,
-         SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-             * (tf * 2.2
-                / (tf + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))) AS s
-  FROM q JOIN tdf USING (term) JOIN p USING (term) CROSS JOIN stats
-  GROUP BY q.query_id, p.doc_id
-),
-r AS (
-  SELECT query_id, doc_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(s, 4) DESC, doc_id) AS rank, s
-  FROM scored
-)
-SELECT query_id, doc_id, rank::BIGINT AS rank, ROUND(s, 4) AS score
-FROM r WHERE rank <= 5
-"""
-
-
-
-def length_quantiles(spark, sf_dir):
-    """Per-source p50/p90/p99 document-length ESTIMATES from the
-    mergeable log2-histogram sketch (sketches.histogram_quantiles
-    composed over textstats.length_profile — the same
-    sketch-into-monitor composition as source_vocab_saturation):
-    integer rank targets, 2^bucket estimates, est <= exact < 2*est by
-    construction."""
-    from ..operators.sketches import histogram_quantiles
-    from ..operators.textstats import length_profile
-    d = _t(spark, sf_dir, "documents")
-    return histogram_quantiles(length_profile(d))
-
-
-LENGTH_QUANTILES_SQL = """
-WITH n AS (
-  SELECT source, len(string_split(text, ' ')) AS n FROM documents
-),
-b AS (
-  SELECT source,
-         CASE WHEN POWER(2.0, l0) > n THEN l0 - 1
-              WHEN POWER(2.0, l0) * 2 <= n THEN l0 + 1
-              ELSE l0 END AS len_bucket
-  FROM (SELECT source, n,
-               FLOOR(log2(GREATEST(n, 1)))::BIGINT AS l0 FROM n)
-),
-h AS (
-  SELECT source, len_bucket, COUNT(*)::BIGINT AS c
-  FROM b GROUP BY source, len_bucket
-),
-cum AS (
-  SELECT source, len_bucket,
-         SUM(c) OVER (PARTITION BY source ORDER BY len_bucket) AS cum,
-         SUM(c) OVER (PARTITION BY source) AS nn
-  FROM h
-),
-q(q_num, q_den, q_label) AS (
-  VALUES (1, 2, 'p50'), (9, 10, 'p90'), (99, 100, 'p99')
-)
-SELECT source, q_label, nn::BIGINT AS n,
-       POWER(2.0, MIN(len_bucket))::BIGINT AS est
-FROM cum CROSS JOIN q
-WHERE cum >= (q_num * nn + q_den - 1) // q_den
-GROUP BY source, q_label, nn
-"""
-
-
-
-def _chunk_seed_index(spark, sf_dir) -> str:
-    """Chunk-level inverted index: sliding 64/16 token chunking with
-    packed (doc_id*1000 + chunk_id) keys, indexed ONCE per corpus
-    snapshot (see :func:`_seed_text_index`).  The key-packing guard
-    lives in the data path of the indexed plane, so a >=1000-chunk
-    document fails the BUILD loudly instead of silently colliding."""
-    from ..operators.packing import chunk_documents
-
-    def corpus():
-        d = _t(spark, sf_dir, "documents")
-        ck = F.when(
-            F.col("chunk_id") < 1000,
-            F.col("doc_id") * 1000 + F.col("chunk_id"),
-        ).otherwise(F.raise_error(F.lit(
-            "chunk_retrieval: chunk_id >= 1000 breaks key packing")))
-        return chunk_documents(d, chunk_size=64, overlap=16).select(
-            ck.alias("ck"), F.col("chunk_text"))
-
-    return _seed_text_index(spark, sf_dir, "chunks64-16", corpus,
-                            "ck", "chunk_text")
-
-
-def chunk_retrieval(spark, sf_dir):
-    """RAG-prep retrieval served from the PERSISTED chunk-level
-    inverted index (VERDICT r10 #2 — the last search plan that
-    re-scanned the corpus per run): sliding 64/16 token chunking +
-    tokenization are paid ONCE at index build (_chunk_seed_index);
-    every search after that is the bm25_topk_indexed read path — query
-    -term hash buckets pushed as a literal partition filter, postings
-    pruned to the query terms.  Chunk keys are doc_id*1000 + chunk_id
-    (guarded at build), split back into (doc_id, chunk_id) here.
-    Results are bit-identical to the former inline
-    chunk->bm25_topk_batch plan (the oracle still recomputes from
-    text), so a hash mismatch catches builder OR reader drift."""
-    from ..operators.retrieval import bm25_topk_indexed
-    path = _chunk_seed_index(spark, sf_dir)
-    q = spark.createDataFrame(
-        [(0, ["table", "merge"]), (1, ["vector", "scan"]),
-         (2, ["stream", "window", "agg"])],
-        "query_id long, terms array<string>")
-    hits = bm25_topk_indexed(spark, path, q, k=5).withColumnRenamed(
-        "doc_id", "ck")
-    return hits.select(
-        "query_id",
-        F.expr("ck DIV 1000").alias("doc_id"),
-        F.pmod(F.col("ck"), F.lit(1000)).cast("bigint").alias("chunk_id"),
-        "rank", "score")
-
-
-CHUNK_RETRIEVAL_SQL = """
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-c AS (SELECT doc_id, toks, len(toks) AS n,
-             CASE WHEN len(toks) <= 64 THEN 1
-                  ELSE (len(toks) - 64 + 47) // 48 + 1 END AS n_chunks
-      FROM t),
-ch AS (
-  SELECT doc_id * 1000 + cid AS ck,
-         array_to_string(
-           toks[cid * 48 + 1 : cid * 48 + least(64, n - cid * 48)],
-           ' ') AS chunk_text
-  FROM (SELECT doc_id, toks, n, unnest(range(n_chunks)) AS cid FROM c)
-),
-q(query_id, term) AS (
-  VALUES (0, 'table'), (0, 'merge'), (1, 'vector'), (1, 'scan'),
-         (2, 'stream'), (2, 'window'), (2, 'agg')
-),
-tokd AS (SELECT ck, string_split(lower(chunk_text), ' ') AS toks FROM ch),
-p AS (
-  SELECT ck, dl, term, COUNT(*)::DOUBLE AS tf FROM (
-    SELECT ck, len(toks)::DOUBLE AS dl, unnest(toks) AS term FROM tokd)
-  GROUP BY ck, dl, term
-),
-stats AS (
-  SELECT COUNT(*)::DOUBLE AS n_docs, SUM(dl) AS sum_dl
-  FROM (SELECT ck, any_value(dl) AS dl FROM p GROUP BY ck)
-),
-tdf AS (SELECT term, COUNT(*)::DOUBLE AS df FROM p GROUP BY term),
-scored AS (
-  SELECT q.query_id, p.ck,
-         SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-             * (tf * 2.2
-                / (tf + 1.2 * (0.25 + 0.75 * dl * n_docs / sum_dl)))) AS s
-  FROM q JOIN tdf USING (term) JOIN p USING (term) CROSS JOIN stats
-  GROUP BY q.query_id, p.ck
-),
-r AS (
-  SELECT query_id, ck,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(s, 4) DESC, ck) AS rank, s
-  FROM scored
-)
-SELECT query_id, ck // 1000 AS doc_id, ck % 1000 AS chunk_id,
-       rank::BIGINT AS rank, ROUND(s, 4) AS score
-FROM r WHERE rank <= 5
-"""
-
-
 QUERIES = {
     "bigram_logppl": (bigram_logppl, BIGRAM_LOGPPL_SQL),
     "bpe_encoding": (bpe_encoding, BPE_ENCODING_SQL),
@@ -4462,43 +3415,15 @@ QUERIES = {
     # NEW r10 session-2: unigram-LM tokenizer lifecycle (train + encode)
     "unigram_tokenizer": (unigram_tokenizer, UNIGRAM_TOKENIZER_SQL),
     "ccnet_buckets": (ccnet_buckets, CCNET_BUCKETS_SQL),
-    "cms_token_counts": (cms_token_counts, CMS_TOKEN_COUNTS_SQL),
     "cross_corpus_dedup": (cross_corpus_dedup, CROSS_CORPUS_DEDUP_SQL),
-    "source_divergence": (source_divergence_q, SOURCE_DIVERGENCE_SQL),
-    # NEW r8 (VERDICT r7 #8): sketch composed into the source monitor
-    "source_vocab_saturation": (source_vocab_saturation_q,
-                                SOURCE_VOCAB_SATURATION_SQL),
-    # NEW r8 breadth: blocklist filter, A-ES weighted sampling,
-    # sliding-window chunking, per-source tokenizer fertility
-    "badwords_filter": (badwords_filter, BADWORDS_FILTER_SQL),
-    "weighted_doc_sample": (weighted_doc_sample,
-                            WEIGHTED_DOC_SAMPLE_SQL),
     "document_chunking": (document_chunking, DOCUMENT_CHUNKING_SQL),
     "tokenizer_fertility": (tokenizer_fertility,
                             _tokenizer_fertility_sql()),
-    "bigram_pmi": (bigram_pmi, BIGRAM_PMI_SQL),
-    "tfidf_keywords": (tfidf_keyword_extraction, TFIDF_KEYWORDS_SQL),
-    "corpus_length_profile": (corpus_length_profile,
-                              CORPUS_LENGTH_PROFILE_SQL),
-    "bm25_search": (bm25_search, BM25_SEARCH_SQL),
-    "bm25_search_batch": (bm25_search_batch, BM25_SEARCH_BATCH_SQL),
-    # NEW r10 session-2: composed chunk->index->retrieve pipeline
-    "chunk_retrieval": (chunk_retrieval, CHUNK_RETRIEVAL_SQL),
-    # NEW r10 session-2: histogram-sketch quantile estimates
-    "length_quantiles": (length_quantiles, LENGTH_QUANTILES_SQL),
     # NEW r10 session-2: ROUGE-N generation-eval overlap
     "rouge_overlap": (rouge_overlap, ROUGE_OVERLAP_SQL),
     # NEW r11: ROUGE-L — order-sensitive LCS eval, doubling-pass
     # recursive-CTE dp oracle
     "rouge_l": (rouge_l_overlap, ROUGE_L_SQL),
-    # NEW r10 session-2: positional phrase search
-    "phrase_search": (phrase_search, PHRASE_SEARCH_SQL),
-    # NEW r10 session-2: BM25 served from the persisted inverted index
-    "bm25_indexed_search": (bm25_indexed_search, BM25_INDEXED_SEARCH_SQL),
-    "bm25_eval_metrics": (bm25_eval_metrics, BM25_EVAL_METRICS_SQL),
-    "dsir_selection": (dsir_selection, DSIR_SELECTION_SQL),
-    "hll_distinct_windows": (hll_distinct_windows,
-                             HLL_DISTINCT_WINDOWS_SQL),
     "winnowing_fp": (winnowing_fp, WINNOWING_FP_SQL),
     "exact_substring_dedup": (exact_substring_dedup, EXACT_SUBSTRING_SQL),
     "strip_duplicated_spans": (strip_duplicated_spans_q,
@@ -4537,7 +3462,6 @@ QUERIES = {
     "pii_redaction": (pii_redaction, PII_REDACTION_SQL),
     "decontamination_overlap": (decontamination_overlap,
                                 DECONTAMINATION_SQL),
-    "bloom_decontamination": (bloom_decontamination, BLOOM_DECONTAMINATION_SQL),
     "duplication_profile": (duplication_profile, DUPLICATION_PROFILE_SQL),
     "temperature_mixture": (temperature_mixture, TEMPERATURE_MIXTURE_SQL),
     "sequence_packing": (sequence_packing, SEQUENCE_PACKING_SQL),

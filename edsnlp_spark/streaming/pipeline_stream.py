@@ -71,6 +71,23 @@ def annotate_stream(stream_df: DataFrame,
     return writer.start()
 
 
+def streaming_dedup(docs: DataFrame, text_col: str = "text",
+                    ts_col: str = "ts",
+                    watermark: str = "10 minutes") -> DataFrame:
+    """Streaming exact dedup: md5-of-text dedup keys with a bounded
+    state window (``dropDuplicatesWithinWatermark``) — the streaming
+    half of the dedup family.  State holds one hash per distinct text
+    inside the watermark horizon, so memory is bounded by throughput x
+    horizon, not corpus size (the batch dedup handles the full-corpus
+    pass; this handles the ingest stream)."""
+    hashed = docs.withColumn("__h", F.md5(F.col(text_col)))
+    return (
+        hashed.withWatermark(ts_col, watermark)
+        .dropDuplicatesWithinWatermark(["__h"])
+        .drop("__h")
+    )
+
+
 def curation_stream(stream_docs: DataFrame, out_path: str, checkpoint: str,
                     watermark: str = "10 minutes",
                     available_now: bool = True) -> StreamingQuery:
@@ -106,7 +123,6 @@ def curation_stream(stream_docs: DataFrame, out_path: str, checkpoint: str,
     increments cheap).
     """
     from ..queries.textops import curation_finalize, curation_quality_gate
-    from .windows import streaming_dedup
 
     kept = curation_quality_gate(stream_docs)
     deduped = streaming_dedup(kept, watermark=watermark)
@@ -299,58 +315,6 @@ def fuzzy_dedup_stream(stream_docs: DataFrame, out_path: str,
 
     writer = (
         stream_docs.writeStream.foreachBatch(_leased_batches(handle))
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def text_index_stream(stream_docs: DataFrame, index_path: str,
-                      checkpoint: str, n_buckets: int = 64,
-                      available_now: bool = True) -> StreamingQuery:
-    """Streaming ingest into the persisted inverted index
-    (:func:`~edsnlp_spark.operators.retrieval.build_text_index`'s
-    growing-corpus counterpart under Structured Streaming): each
-    micro-batch tokenizes ONLY its own docs, writes its postings under
-    an idempotent ``batch=<id>`` partition (partitioned by term-hash
-    bucket within it, so :func:`bm25_topk_indexed`'s literal bucket
-    filter still prunes the scan across every batch directory), and
-    records its ADDITIVE stats row under ``meta/batch=<id>`` — the
-    reader folds the per-batch rows into the one logical stats record,
-    so searches are identical to a full offline rebuild over the union
-    (test_text_index_stream_with_restart).
-
-    Durability: ``foreachBatch`` may replay a failed batch on restart
-    (at-least-once); both sinks overwrite their own ``batch=<id>``
-    directory, so replays are idempotent — the same recipe as
-    :func:`curation_stream_strip`.  Contract: feed an index through
-    EITHER this stream OR :func:`text_index_append`, not both (append
-    collapses the stats records).
-    """
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        toks = F.split(F.lower(F.col("text")), " ", -1)
-        postings = (
-            batch.select(F.col("doc_id"),
-                         F.size(toks).cast("long").alias("dl"),
-                         F.explode(toks).alias("term"))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .withColumn("bucket",
-                        F.pmod(F.xxhash64("term"), F.lit(int(n_buckets))))
-        )
-        postings.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{index_path}/postings/batch={batch_id}")
-        stats = batch.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.coalesce(F.sum(F.size(toks)), F.lit(0)).cast("long")
-             .alias("sum_dl"),
-            F.lit(int(n_buckets)).cast("long").alias("n_buckets"))
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            f"{index_path}/meta/batch={batch_id}")
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint)
     )
     if available_now:

@@ -1,9 +1,8 @@
 """ARTIFACT_VERSION central stamp (VERDICT r11 #3).
 
-Persisted seed artifacts (.text_index / chunk variant / .dedup_seed)
-key on data fingerprint + config; the r11 footgun was that
-a builder behavior change without a manual tag bump leaves consumers
-serving stale artifacts.  One central ARTIFACT_VERSION now folds into
+The persisted seed artifact (.dedup_seed) keys on data fingerprint +
+config; the r11 footgun was that a builder behavior change without a
+manual tag bump leaves consumers serving stale artifacts.  One central ARTIFACT_VERSION now folds into
 every tag (build-or-reuse path changes => rebuild) AND is stamped into
 the artifact dir (read-time assert catches artifacts copied across
 versions, which tag keying alone cannot).

@@ -41,24 +41,6 @@ ALLOWED = {
         "span-linker concept KB (model artifact, not corpus)",
     ("operators/matcher.py", "F.broadcast(terms_df)"):
         "phrase-matcher pattern terms (pipeline config)",
-    ("operators/retrieval.py", "F.broadcast(stats)"):
-        "1-row corpus-statistics aggregate (BM25 N/avgdl/df)",
-    ("operators/selection.py", "F.broadcast(cuts)"):
-        "one row per group; groups = language inventory (config-scale)",
-    ("operators/textstats.py", "F.broadcast(n_docs)"):
-        "1-row corpus-count aggregate (PMI totals / TF-IDF idf)",
-    ("operators/textstats.py", "F.broadcast(totals)"):
-        "1-row unigram/bigram totals aggregate",
-    ("operators/selection.py", "F.broadcast(totals)"):
-        "1-row LM totals aggregate (DSIR tt/tr)",
-    ("operators/selection.py", "F.broadcast(ratio)"):
-        "DSIR log-ratio table, <= b rows (config-bounded, never corpus)",
-    ("operators/retrieval.py", "F.broadcast(uterms)"):
-        "distinct query terms (batch-BM25 contract: queries << corpus)",
-    ("operators/sketches.py", "F.broadcast(qdf)"):
-        "quantile spec rows: fixed by the quantiles argument (3 rows)",
-    ("operators/retrieval.py", "F.broadcast(qterms)"):
-        "query terms x df+stats (bounded by the query set, not corpus)",
     ("operators/scores.py", "F.broadcast(adicap_dim)"):
         "ADICAP dimension dictionary (checked-in resource)",
     ("operators/terminology.py", "F.broadcast(terms)"):

@@ -51,14 +51,6 @@ ALLOWED = {
     ("operators/unigram.py", ".limit(int(seed_size)).collect()"):
         "unigram multi-char seeds: top-seed_size rows (config-bounded)"
         " via TakeOrderedAndProject",
-    ("operators/retrieval.py", '.alias("n_buckets")).first()'):
-        "saved inverted-index stats: 1-row aggregate over the additive"
-        " per-batch stats records (bounded by ingest batch count)",
-    ("operators/retrieval.py", '.alias("sum_dl")).first()'):
-        "1-row additive stats aggregate for the index meta refresh",
-    ("operators/retrieval.py", '.alias("bucket")).distinct().collect()'):
-        "query-term hash buckets: bounded by the n_buckets index config"
-        " (<= 64), pushed as a literal partition filter",
     ("operators/unigram.py", "used_rows.collect()"):
         "unigram E-step piece usage: groupBy over the current "
         "vocabulary — at most vocab_size+charset rows per iteration",

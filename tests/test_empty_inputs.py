@@ -76,9 +76,6 @@ def test_round7_operators_on_empty_docs(spark):
     from edsnlp_spark.operators.dedup import (
         cross_duplicated_windows, duplicated_windows, simhash_neardup_pairs,
         strip_duplicated_spans, winnowing_fingerprints)
-    from edsnlp_spark.operators.retrieval import bm25_topk_batch
-    from edsnlp_spark.operators.selection import dsir_weights
-    from edsnlp_spark.operators.sketches import cms_point_estimates
 
     empty = spark.createDataFrame([], "doc_id long, text string")
     some = spark.createDataFrame([(1, "a b c d e f")],
@@ -93,25 +90,9 @@ def test_round7_operators_on_empty_docs(spark):
     # cross dedup: empty on either side -> empty
     assert cross_duplicated_windows(empty, some, n=3).count() == 0
     assert cross_duplicated_windows(some, empty, n=3).count() == 0
-    # batch BM25 with no matching docs -> zero rows, typed
-    q = spark.createDataFrame([(0, ["zz"])],
-                              "query_id long, terms array<string>")
-    assert bm25_topk_batch(empty, q).count() == 0
-    assert bm25_topk_batch(some, q).count() == 0  # term absent
-    # DSIR over an empty raw pool
-    assert dsir_weights(empty, some, b=64).count() == 0
-    # CMS probes over an empty stream estimate 0
-    est = {r["key"]: r["est"]
-           for r in cms_point_estimates(empty.select(
-               F.col("text").alias("t")), "t", ["a"], d=2, w=32).collect()}
-    assert est == {"a": 0}
     # BPE: nothing to merge -> empty merge list; encode of empty -> empty
     assert bpe_train(empty, n_merges=3) == []
     assert bpe_encode(empty, [("a", "b")]).count() == 0
-    # HLL: all registers empty -> linear counting gives estimate 0
-    from edsnlp_spark.operators.sketches import hll_distinct
-    row = hll_distinct(empty.select(F.col("text").alias("v")), "v").first()
-    assert row["v_empty"] == 512 and row["approx_distinct"] == 0.0
 
 
 def test_round9_operators_on_empty_docs(spark):
@@ -119,9 +100,6 @@ def test_round9_operators_on_empty_docs(spark):
     raises, schemas stay stable."""
     from edsnlp_spark.operators.bpe import bpe_train_batched
     from edsnlp_spark.operators.dedup import strip_spans_incremental
-    from edsnlp_spark.operators.retrieval import rrf_fuse
-    from edsnlp_spark.operators.sketches import bloom_build, bloom_probe
-    from edsnlp_spark.operators.textstats import bigram_pmi_topk
     from edsnlp_spark.operators.trainable import ner_linear_crf
 
     empty = spark.createDataFrame([], "doc_id long, text string")
@@ -136,16 +114,6 @@ def test_round9_operators_on_empty_docs(spark):
     assert strip_spans_incremental(empty, None, n=3).count() == 0
     row = strip_spans_incremental(some, empty_idx, n=3).collect()[0]
     assert row["text_clean"] == "a b c d e f" and row["n_removed"] == 0
-    # RRF over empty tiers -> empty fused table
-    t = spark.createDataFrame([], "query_id long, doc_id long, rank long")
-    assert rrf_fuse([t, t], k=5).count() == 0
-    # bloom: empty build -> no bits; probing anything -> all False
-    bits = bloom_build(empty.select(F.col("text").alias("s")), "s")
-    assert bits.count() == 0
-    probed = bloom_probe(some.select(F.col("text").alias("s")), "s", bits)
-    assert [r["maybe_member"] for r in probed.collect()] == [False]
-    # PMI on empty corpus -> empty top-k
-    assert bigram_pmi_topk(empty, k=3, min_count=1).count() == 0
     # CRF head on empty notes -> typed empty entities plane
     notes = spark.createDataFrame([], "note_id long, note_text string")
     out = ner_linear_crf(notes)
@@ -190,19 +158,6 @@ def test_round10_operators_on_empty_docs(spark):
     row = classify_docs(short, Wq, bq, class_names=["en", "xx"]).first()
     assert row["pred"] == 0 and row["score_0"] == 0 and row["score_1"] == 0
     assert row["pred_name"] == "en"
-
-
-def test_phrase_search_empty_inputs(spark):
-    from edsnlp_spark.operators.retrieval import phrase_search_batch
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    some = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    q = spark.createDataFrame([(0, "a b")], "query_id long, phrase string")
-    qe = spark.createDataFrame([], "query_id long, phrase string")
-    out = phrase_search_batch(empty, q)
-    assert out.count() == 0
-    assert out.columns == ["query_id", "doc_id", "n_matches", "first_pos"]
-    assert phrase_search_batch(some, qe).count() == 0
 
 
 def test_unigram_and_mmr_empty_inputs(spark):

@@ -401,84 +401,3 @@ def test_regex_ignore_space_tokens(spark):
     assert len(out) == 1
     assert out[0]["lexical_variant"] == text
     assert out[0]["clean_variant"] == "pneumopathie à coronavirus"
-
-
-def test_bloom_filter_membership(spark):
-    """r9: Bloom membership has ZERO false negatives, a low empirical
-    false-positive rate at the configured k/m, a bit-set bounded by m,
-    and the filter merges by plain union-distinct (build(a ∪ b) ==
-    build(a) ∪ build(b))."""
-    from edsnlp_spark.operators.sketches import (
-        bloom_build, bloom_positions, bloom_probe)
-
-    members = spark.createDataFrame(
-        [(f"member-{i}",) for i in range(300)], "s string")
-    bits = bloom_build(members, "s", k=4, m=1 << 16)
-    n_bits = bits.count()
-    assert n_bits <= 4 * 300           # <= k * n distinct positions
-
-    got = {r["s"]: r["maybe_member"]
-           for r in bloom_probe(members, "s", bits, k=4, m=1 << 16)
-           .collect()}
-    assert all(got.values())           # no false negatives, ever
-
-    absent = spark.createDataFrame(
-        [(f"absent-{i}",) for i in range(400)], "s string")
-    fp = [r["maybe_member"] for r in
-          bloom_probe(absent, "s", bits, k=4, m=1 << 16).collect()]
-    # theory: (1 - e^(-kn/m))^4 with k=4, n=300, m=65536 is ~1e-7;
-    # allow generous slack — the point is "approximate, not broken"
-    assert sum(fp) <= 4
-
-    # mergeable: union-distinct of two builds == build of the union
-    a = spark.createDataFrame([("x1",), ("x2",)], "s string")
-    b = spark.createDataFrame([("x2",), ("x3",)], "s string")
-    merged = bloom_build(a, "s").unionByName(bloom_build(b, "s")) \
-        .distinct()
-    both = bloom_build(a.unionByName(b), "s")
-    assert sorted(r["bit"] for r in merged.collect()) \
-        == sorted(r["bit"] for r in both.collect())
-
-    import pytest
-    with pytest.raises(ValueError, match="k >= 1"):
-        spark.range(1).select(bloom_positions(F.lit("x"), k=0))
-
-
-def test_histogram_quantiles_error_bound(spark):
-    """The sketch guarantee: est <= exact < 2*est for every group and
-    quantile (the estimate is the covering bucket's lower bound)."""
-    import random
-
-    from edsnlp_spark.operators.sketches import histogram_quantiles
-    from edsnlp_spark.operators.textstats import length_profile
-
-    rnd = random.Random(7)
-    rows = [(i, " ".join("w" for _ in range(rnd.randint(1, 900))),
-             f"s{i % 3}") for i in range(300)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, "
-                                       "source string")
-    est = {(r.source, r.q_label): (r.n, r.est)
-           for r in histogram_quantiles(length_profile(docs)).collect()}
-    lens = {}
-    for _, text, src in rows:
-        lens.setdefault(src, []).append(len(text.split(" ")))
-    for src, vals in lens.items():
-        vals.sort()
-        n = len(vals)
-        for num, den, lbl in [(1, 2, "p50"), (9, 10, "p90"),
-                              (99, 100, "p99")]:
-            exact = vals[(num * n + den - 1) // den - 1]  # rank ceil(qn)
-            got_n, got_est = est[(src, lbl)]
-            assert got_n == n
-            assert got_est <= exact < 2 * got_est, (
-                src, lbl, got_est, exact)
-
-
-def test_histogram_quantiles_single_bucket_group(spark):
-    from edsnlp_spark.operators.sketches import histogram_quantiles
-
-    hist = spark.createDataFrame(
-        [("a", 5, 10)], "source string, len_bucket long, n_docs long")
-    rows = {r.q_label: r.est
-            for r in histogram_quantiles(hist).collect()}
-    assert rows == {"p50": 32, "p90": 32, "p99": 32}

@@ -1204,28 +1204,6 @@ def test_duplicated_windows_guards(spark):
     assert got == {(10, 0): 2, (11, 0): 2}
 
 
-def test_approx_quality_buckets_match_exact_tertiles(spark, sf_dir):
-    """r7: the documented corpus-scale swap for ccnet_buckets (approx-
-    percentile cutoffs + threshold projection, no per-group sort) must
-    agree with the exact ntile(3) on >= 95% of docs at
-    accuracy=10000 — disagreement is confined to cutoff-tied /
-    sketch-error rows."""
-    from edsnlp_spark.operators.selection import approx_quality_buckets
-    from edsnlp_spark.queries.textops import ccnet_buckets
-
-    exact = ccnet_buckets(spark, sf_dir)
-    nll = exact.select("doc_id", "lang", "nll")
-    approx = approx_quality_buckets(nll, accuracy=10000)
-    joined = exact.select("doc_id", F.col("bucket").alias("e")).join(
-        approx.select("doc_id", F.col("bucket").alias("a")), "doc_id")
-    total = joined.count()
-    agree = joined.filter(F.col("e") == F.col("a")).count()
-    assert total > 0 and agree / total >= 0.95, (agree, total)
-    # the plan has no per-group sort window
-    plan = approx._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-
-
 def test_bpe_train_matches_reference_algorithm(spark):
     """r7 (Sennrich et al. 2016): the distributed BPE trainer must
     produce the EXACT merge sequence of the paper's algorithm (pure
@@ -1385,108 +1363,6 @@ def test_bpe_train_holds_bounded_planes(spark):
         caching.tracked_scopes()
 
 
-def test_cms_point_estimates_bounds(spark):
-    """r7 (Cormode & Muthukrishnan 2005): count-min never
-    underestimates, overestimates by at most eps*N (eps = e/w) here
-    checked deterministically, returns 0 for absent keys when no
-    collision lands in all d rows, and rejects empty probes."""
-    import math
-
-    import pytest
-    from pyspark.sql import functions as SF
-
-    from edsnlp_spark.operators.sketches import cms_point_estimates
-
-    vals = (["alpha"] * 50 + ["beta"] * 20 + ["gamma"] * 5
-            + [f"noise{i}" for i in range(200)])
-    df = spark.createDataFrame([(v,) for v in vals], "t string")
-    probes = ["alpha", "beta", "gamma", "absent"]
-    exact = {"alpha": 50, "beta": 20, "gamma": 5, "absent": 0}
-    got = {r["key"]: r["est"]
-           for r in cms_point_estimates(df, "t", probes,
-                                        d=4, w=256).collect()}
-    n = len(vals)
-    bound = math.ceil(math.e / 256 * n) + 1
-    for k in probes:
-        assert got[k] >= exact[k], (k, got[k])
-        assert got[k] <= exact[k] + bound, (k, got[k])
-    with pytest.raises(ValueError, match="at least one"):
-        cms_point_estimates(df, "t", [])
-    # duplicates across partitions merge additively
-    repart = {r["key"]: r["est"]
-              for r in cms_point_estimates(df.repartition(13), "t",
-                                           probes, d=4, w=256).collect()}
-    assert repart == got
-
-
-def test_hll_distinct_accuracy_and_partition_invariance(spark):
-    """r7 (Flajolet et al. 2007): the deterministic HLL estimate stays
-    within 3 standard errors (3 * 1.04/sqrt(512) ~ 14%) of the exact
-    cardinality across the linear-counting and HLL regimes, ignores
-    duplicates entirely, is invariant to partitioning (mergeable
-    partial max), and rejects out-of-range precision."""
-    import pytest
-    from pyspark.sql import functions as SF
-
-    from edsnlp_spark.operators.sketches import hll_distinct
-
-    for n in (50, 700, 20000):
-        df = spark.range(n).select(
-            SF.concat(SF.lit("k-"), SF.col("id")).alias("v"))
-        # duplicate every value 3x — cardinality must not move
-        dup = df.unionAll(df).unionAll(df)
-        got = hll_distinct(dup, "v", p=9).first()["approx_distinct"]
-        assert abs(got - n) / n < 0.14, (n, got)
-        repart = hll_distinct(dup.repartition(17), "v", p=9) \
-            .first()["approx_distinct"]
-        assert repart == got  # register max is merge-order-free
-    with pytest.raises(ValueError, match="7 <= p <= 14"):
-        hll_distinct(spark.range(1).select(
-            SF.col("id").cast("string").alias("v")), "v", p=4)
-
-
-def test_hll_distinct_by_groups_and_saturation(spark):
-    """r8 (VERDICT r7 #8): the grouped HLL must estimate each group
-    independently (identical to running the global sketch on each
-    group's subset), and source_vocab_saturation must agree with the
-    exact distinct/total ratio within HLL error."""
-    from pyspark.sql import functions as SF
-
-    from edsnlp_spark.operators.selection import source_vocab_saturation
-    from edsnlp_spark.operators.sketches import hll_distinct, hll_distinct_by
-
-    df = spark.range(3000).select(
-        SF.concat(SF.lit("g"), (SF.col("id") % 3)).alias("g"),
-        SF.concat(SF.lit("v-"), SF.col("id") % (SF.col("id") % 3 * 200 + 100))
-        .alias("v"))
-    by = {r["g"]: r["approx_distinct"]
-          for r in hll_distinct_by(df, ["g"], "v", p=9).collect()}
-    for g in ("g0", "g1", "g2"):
-        solo = hll_distinct(df.filter(SF.col("g") == g), "v", p=9) \
-            .first()["approx_distinct"]
-        assert by[g] == solo  # grouped == per-subset global sketch
-
-    docs = spark.createDataFrame(
-        [(i, f"s{i % 2}", " ".join(f"w{(i * 13 + j) % (40 + 60 * (i % 2))}"
-                                   for j in range(50)))
-         for i in range(60)],
-        "doc_id long, source string, text string")
-    out = {r["source"]: r for r in source_vocab_saturation(docs).collect()}
-    import collections
-    exact = collections.defaultdict(set)
-    totals = collections.defaultdict(int)
-    for r in docs.collect():
-        toks = r["text"].split(" ")
-        exact[r["source"]].update(toks)
-        totals[r["source"]] += len(toks)
-    for s_name, row in out.items():
-        n_ex = len(exact[s_name])
-        assert row["n_tokens"] == totals[s_name]
-        assert abs(row["approx_distinct"] - n_ex) / n_ex < 0.14
-        assert abs(row["saturation"]
-                   - row["approx_distinct"] / row["n_tokens"]) < 1e-3
-
-
 def test_chunk_documents_semantics(spark):
     """r8: sliding-window chunking — full coverage, stride overlap,
     short-doc single chunk, tail chunk shorter, reassembly property
@@ -1518,156 +1394,6 @@ def test_chunk_documents_semantics(spark):
     assert d2 == [(2, 0, 0, 3, "a b c")]
     with pytest.raises(ValueError, match="overlap"):
         chunk_documents(docs, chunk_size=4, overlap=4)
-
-
-def test_blocklist_filter_semantics(spark):
-    """r8 (C4 badwords): whole-token lowercase matching, ratio
-    threshold inclusive, default any-hit drop, empty-list raise."""
-    import pytest
-
-    from edsnlp_spark.operators.selection import blocklist_filter
-
-    docs = spark.createDataFrame(
-        [(1, "Bad word here"), (2, "all clean text here"),
-         (3, "bad bad bad good"), (4, "badge is not bad-word")],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           blocklist_filter(docs, ["bad"], max_ratio=0.5).collect()}
-    assert (out[1].n_flagged, out[1].keep) == (1, True)   # 1/3 <= 0.5
-    assert (out[2].n_flagged, out[2].keep) == (0, True)
-    assert (out[3].n_flagged, out[3].keep) == (3, False)  # 0.75 > 0.5
-    # whole-token: 'badge' and 'bad-word' never match 'bad'
-    assert (out[4].n_flagged, out[4].keep) == (0, True)
-    strict = {r.doc_id: r.keep
-              for r in blocklist_filter(docs, ["bad"]).collect()}
-    assert strict == {1: False, 2: True, 3: False, 4: True}
-    with pytest.raises(ValueError, match="at least one word"):
-        blocklist_filter(docs, [])
-
-
-def test_blocklist_filter_threshold_uses_unrounded_ratio(spark):
-    """ADVICE r8 #4: keep must be decided on the UNROUNDED counts — a
-    true ratio of 300/9987 = 0.030039 rounds to 0.0300 at 4dp, and the
-    old round-then-compare let it slip under max_ratio=0.03."""
-    from edsnlp_spark.operators.selection import blocklist_filter
-
-    text = " ".join(["bad"] * 300 + ["ok"] * 9687)
-    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    row = blocklist_filter(docs, ["bad"], max_ratio=0.03).collect()[0]
-    assert (row.n_tokens, row.n_flagged) == (9987, 300)
-    assert row.flag_ratio == 0.03          # reported ratio IS rounded
-    assert row.keep is False               # verdict is not
-    # boundary stays inclusive: exactly 3% keeps
-    text_eq = " ".join(["bad"] * 3 + ["ok"] * 97)
-    docs_eq = spark.createDataFrame(
-        [(1, text_eq)], "doc_id long, text string")
-    assert blocklist_filter(
-        docs_eq, ["bad"], max_ratio=0.03).collect()[0].keep is True
-
-
-def test_weighted_reservoir_sample_matches_python_model(spark):
-    """r8 (Efraimidis-Spirakis): the Spark A-ES top-k must equal a
-    pure-Python computation of the same md5-derived keys, and weighted
-    selection must favor heavy rows; non-positive weights raise."""
-    import hashlib
-    import math
-
-    import pytest
-
-    from edsnlp_spark.operators.selection import weighted_reservoir_sample
-
-    rows = [(i, (i % 7) + 1) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, w long")
-    got = [(r.doc_id, r.weight, r.key)
-           for r in weighted_reservoir_sample(df, "w", k=25).collect()]
-
-    def key(i, w):
-        h = int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16)
-        u = (h + 0.5) / float(1 << 60)
-        return round(math.log(u) / w, 4) + 0.0
-
-    want = sorted(((i, w, key(i, w)) for i, w in rows),
-                  key=lambda t: (-t[2], t[0]))[:25]
-    assert got == want
-    # heavier rows are sampled more often than light ones
-    heavy = sum(1 for _, w, _ in got if w >= 6)
-    light = sum(1 for _, w, _ in got if w <= 2)
-    assert heavy > light
-    with pytest.raises(ValueError, match="k >= 1"):
-        weighted_reservoir_sample(df, "w", k=0)
-    bad = spark.createDataFrame([(1, 0)], "doc_id long, w long")
-    with pytest.raises(Exception, match="weight must be > 0"):
-        weighted_reservoir_sample(bad, "w", k=1).collect()
-
-
-def test_length_profile_power_of_two_buckets(spark):
-    """r8: the corrected floor(log2) bucket must place exact powers of
-    two in their own bucket (a bare libm floor(log2) is 1-ulp fragile
-    exactly there) and aggregate per source."""
-    from edsnlp_spark.operators.textstats import length_profile
-
-    rows = [(f"s{i % 2}", " ".join(["w"] * n))
-            for i, n in enumerate([1, 2, 3, 4, 7, 8, 9, 16, 31, 32])]
-    docs = spark.createDataFrame(
-        [(i, s, t) for i, (s, t) in enumerate(rows)],
-        "doc_id long, source string, text string")
-    got = {(r.source, r.len_bucket): (r.n_docs, r.total_tokens)
-           for r in length_profile(docs).collect()}
-    import math
-    want = {}
-    for s, t in rows:
-        n = len(t.split(" "))
-        b = int(math.floor(math.log2(n)))
-        d, tt = want.get((s, b), (0, 0))
-        want[(s, b)] = (d + 1, tt + n)
-    assert got == want
-
-
-def test_bigram_pmi_and_tfidf_keywords_hand_computed(spark):
-    """r8: PMI and TF-IDF against hand-computed values on a tiny
-    corpus, plus config validation."""
-    import math
-
-    import pytest
-
-    from edsnlp_spark.operators.textstats import (
-        bigram_pmi_topk, tfidf_keywords)
-
-    docs = spark.createDataFrame(
-        [(1, "a b a b c"), (2, "a b d"), (3, "c d d")],
-        "doc_id long, text string")
-    # unigrams: a=3 b=3 c=2 d=3, n_uni=11; bigrams total = 11-3 = 8
-    # 'a b' occurs 3x
-    top = bigram_pmi_topk(docs, k=5, min_count=3).collect()
-    assert len(top) == 1 and (top[0]["left"], top[0]["right"]) == ("a", "b")
-    want = round(math.log((3 / 8) / ((3 / 11) * (3 / 11))), 4)
-    assert top[0]["pmi"] == want and top[0]["pair_count"] == 3
-
-    kw = {(r["doc_id"], r["rank"]): (r["term"], r["score"])
-          for r in tfidf_keywords(docs, k=2).collect()}
-    # doc 1: c has tf=1, df=2 -> ln(3/2); a/b have df>=2 too (a: df=2,
-    # tf=2 -> 2*ln(3/2) wins)
-    assert kw[(1, 1)][0] in ("a", "b")  # tf=2 * ln(3/2), tie -> 'a'
-    assert kw[(1, 1)] == ("a", round(2 * math.log(3 / 2), 4))
-    assert kw[(1, 2)] == ("b", round(2 * math.log(3 / 2), 4))
-    with pytest.raises(ValueError, match="min_count"):
-        bigram_pmi_topk(docs, min_count=0)
-    with pytest.raises(ValueError, match="k >= 1"):
-        tfidf_keywords(docs, k=0)
-
-
-def test_bigram_pmi_rejects_non_single_space_text(spark):
-    """ADVICE r8 #1: on runs of spaces the bigram lookahead regexp
-    skips empty tokens while the n_uni - n_docs total counts them —
-    non-conforming text must fail LOUDLY, not silently skew PMI."""
-    import pytest
-
-    from edsnlp_spark.operators.textstats import bigram_pmi_topk
-
-    bad = spark.createDataFrame(
-        [(1, "a b a b c"), (2, "a  b d")], "doc_id long, text string")
-    with pytest.raises(Exception, match="single-space"):
-        bigram_pmi_topk(bad, k=5, min_count=1).collect()
 
 
 def test_strip_duplicated_spans_semantics(spark):

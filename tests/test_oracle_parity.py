@@ -23,20 +23,16 @@ WITH_ORACLE = sorted(n for n, (_, sql) in _QUERIES.items() if sql)
 # Queries whose registry key used to carry an ``a0_`` prefix. Their parity
 # tests keep the old id, so each query's test history stays under one name.
 _FORMERLY_PREFIXED = frozenset("""
-    badwords_filter bigram_pmi bloom_decontamination bm25_indexed_search
-    bpe_lifecycle chunk_retrieval corpus_curation_strip corpus_length_profile
-    crf_distillation cross_minhash_dedup dedup_components_incremental
-    dedup_keeper_election dedup_keeper_incremental dedup_recall_eval
-    distillation_eval document_chunking duplication_profile langid_trained
-    length_quantiles negation_distillation negation_distillation_eval
-    ner_crf_viterbi note_dates phrase_search quality_auc rouge_l rouge_overlap
-    sentence_boundaries sequence_packing simhash_neardup
-    simhash_neardup_capped source_divergence source_mixture_sample
-    source_vocab_saturation split_assignment strip_duplicated_spans
-    suicide_pollution table_cells temperature_mixture tfidf_keywords
+    bpe_lifecycle corpus_curation_strip crf_distillation cross_minhash_dedup
+    dedup_components_incremental dedup_keeper_election
+    dedup_keeper_incremental dedup_recall_eval distillation_eval
+    document_chunking duplication_profile langid_trained negation_distillation
+    negation_distillation_eval ner_crf_viterbi note_dates quality_auc rouge_l
+    rouge_overlap sentence_boundaries sequence_packing simhash_neardup
+    simhash_neardup_capped source_mixture_sample split_assignment
+    strip_duplicated_spans suicide_pollution table_cells temperature_mixture
     tnm_mentions tokenizer_fertility umls_scale_match unigram_logppl
-    unigram_tokenizer url_domain_filtering weighted_doc_sample winnowing_fp
-    wordpiece_lifecycle
+    unigram_tokenizer url_domain_filtering winnowing_fp wordpiece_lifecycle
 """.split())
 
 
@@ -45,7 +41,7 @@ def _test_id(name: str) -> str:
 
 
 def test_formerly_prefixed_names_are_oracle_queries():
-    assert len(_FORMERLY_PREFIXED) == 49
+    assert len(_FORMERLY_PREFIXED) == 37
     assert _FORMERLY_PREFIXED <= set(WITH_ORACLE)
 
 

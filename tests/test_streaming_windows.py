@@ -1,4 +1,4 @@
-"""Streaming window/stateful tests: file-source micro-batches with
+"""Structured Streaming tests: file-source micro-batches with
 availableNow triggers; results checked against batch equivalents."""
 
 from __future__ import annotations
@@ -7,35 +7,11 @@ import json
 
 from pyspark.sql import functions as F
 
-from edsnlp_spark.streaming.windows import (
-    running_user_stats, session_counts, tumbling_counts,
-)
-
-EVENTS_DDL = ("event_id long, ts timestamp, user_id long, event_type string, "
-              "value double")
-
 
 def write_events_jsonl(path, rows):
     with open(path, "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
-
-
-ROWS1 = [
-    {"event_id": 1, "ts": "2024-01-01 10:05:00", "user_id": 1,
-     "event_type": "click", "value": 1.0},
-    {"event_id": 2, "ts": "2024-01-01 10:20:00", "user_id": 1,
-     "event_type": "click", "value": 2.0},
-    {"event_id": 3, "ts": "2024-01-01 11:10:00", "user_id": 2,
-     "event_type": "buy", "value": 5.0},
-]
-
-
-def stream_events(spark, src):
-    from pyspark.sql.types import StructType
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    return spark.readStream.schema(schema).json(str(src))
 
 
 def run_to_memory(df, name, mode="update"):
@@ -45,66 +21,10 @@ def run_to_memory(df, name, mode="update"):
     return q
 
 
-def test_tumbling_counts_stream(spark, tmp_path):
-    src = tmp_path / "ev"
-    src.mkdir()
-    write_events_jsonl(src / "a.jsonl", ROWS1)
-    q = run_to_memory(tumbling_counts(stream_events(spark, src)),
-                      "tumbling", mode="update")
-    out = {(str(r["window_start"]), r["event_type"]): (r["n"], r["total_value"])
-           for r in spark.sql("select * from tumbling").collect()}
-    assert out[("2024-01-01 10:00:00", "click")] == (2, 3.0)
-    assert out[("2024-01-01 11:00:00", "buy")] == (1, 5.0)
-
-
-def test_session_counts_stream(spark, tmp_path):
-    src = tmp_path / "ev2"
-    src.mkdir()
-    write_events_jsonl(src / "a.jsonl", ROWS1)
-    q = run_to_memory(session_counts(stream_events(spark, src), gap="30 minutes"),
-                      "sessions", mode="complete")
-    rows = spark.sql("select * from sessions").collect()
-    by_user = {r["user_id"]: r["n_events"] for r in rows}
-    # user 1: events 15min apart -> one session of 2; user 2: one of 1
-    assert by_user == {1: 2, 2: 1}
-
-
-def test_running_user_stats_state_across_batches(spark, tmp_path):
-    src = tmp_path / "ev3"
-    src.mkdir()
-    ck = str(tmp_path / "ck3")
-    write_events_jsonl(src / "a.jsonl", ROWS1)
-
-    out = str(tmp_path / "out3")
-
-    def run(tag):
-        df = running_user_stats(stream_events(spark, src))
-        q = (df.writeStream.outputMode("update")
-             .option("checkpointLocation", ck)
-             .foreachBatch(lambda b, bid, tag=tag: b.withColumn(
-                 "run", F.lit(tag)).write.mode("append").parquet(out))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
-
-    run("r1")
-    first = {r["user_id"]: (r["n"], r["total"])
-             for r in spark.read.parquet(out).filter("run = 'r1'").collect()}
-    assert first[1] == (2, 3.0) and first[2] == (1, 5.0)
-
-    # second batch: state must carry over (user 1 grows to 3 events)
-    write_events_jsonl(src / "b.jsonl", [
-        {"event_id": 4, "ts": "2024-01-01 12:00:00", "user_id": 1,
-         "event_type": "click", "value": 4.0}])
-    run("r2")
-    second = {r["user_id"]: (r["n"], r["total"])
-              for r in spark.read.parquet(out).filter("run = 'r2'").collect()}
-    assert second[1] == (3, 7.0)
-
-
 def test_streaming_dedup(spark, tmp_path):
     """dropDuplicatesWithinWatermark dedup: repeated texts inside the
     watermark horizon are emitted once; distinct texts all pass."""
-    from edsnlp_spark.streaming.windows import streaming_dedup
+    from edsnlp_spark.streaming.pipeline_stream import streaming_dedup
     src = tmp_path / "docs"
     src.mkdir()
     rows = [
@@ -175,79 +95,6 @@ def test_streaming_decontamination(spark, tmp_path):
     out = {r["doc_id"] for r in
            spark.sql("select * from decon_stream").collect()}
     assert out == {2}
-
-
-def test_streaming_hll_registers_match_batch(spark, tmp_path):
-    """r7: the HLL sketch is a mergeable max-per-register aggregate, so
-    it runs UNCHANGED under Structured Streaming (complete mode) — the
-    register table accumulated over 2 micro-batches equals the batch
-    registers over the union of the data, hence the same estimate."""
-    from pyspark.sql import functions as SF
-
-    from edsnlp_spark.operators.sketches import hll_register_rows
-
-    src = tmp_path / "vals"
-    src.mkdir()
-    for b in range(2):
-        with open(src / f"b{b}.jsonl", "w") as f:
-            for i in range(400):
-                f.write(json.dumps({"v": f"key-{b * 400 + i}"}) + "\n")
-
-    stream = spark.readStream.schema("v string").json(str(src))
-    idx, rho = hll_register_rows(SF.col("v"), p=9)
-    regs = stream.select(idx.alias("idx"), rho.alias("rho")) \
-        .groupBy("idx").agg(SF.max("rho").alias("mr"))
-    q = (regs.writeStream.format("memory").queryName("hll_stream")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["idx"]: r["mr"]
-           for r in spark.sql("select * from hll_stream").collect()}
-
-    batch = spark.createDataFrame(
-        [(f"key-{i}",) for i in range(800)], "v string")
-    bidx, brho = hll_register_rows(SF.col("v"), p=9)
-    want = {r["idx"]: r["mr"] for r in
-            batch.select(bidx.alias("idx"), brho.alias("rho"))
-            .groupBy("idx").agg(SF.max("rho").alias("mr")).collect()}
-    assert got == want and len(got) > 256
-
-
-def test_streaming_cms_cells_match_batch(spark, tmp_path):
-    """r7: count-min cells are ADDITIVE, so the sketch accumulates
-    under streaming (complete-mode groupBy-sum) to exactly the batch
-    sketch over the unioned micro-batches — the ingest-time frequency
-    monitor shape."""
-    from pyspark.sql import functions as SF
-
-    from edsnlp_spark.operators.sketches import cms_cells
-
-    src = tmp_path / "cmsvals"
-    src.mkdir()
-    for b in range(2):
-        with open(src / f"b{b}.jsonl", "w") as f:
-            for i in range(300):
-                f.write(json.dumps({"v": f"k-{i % 40}"}) + "\n")
-
-    stream = spark.readStream.schema("v string").json(str(src))
-    cells = stream.select(SF.explode(
-        cms_cells(SF.col("v"), 4, 256)).alias("rc")) \
-        .groupBy(SF.col("rc.r").alias("r"), SF.col("rc.cell").alias("cell")) \
-        .agg(SF.count(SF.lit(1)).alias("c"))
-    q = (cells.writeStream.format("memory").queryName("cms_stream")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r["r"], r["cell"]): r["c"]
-           for r in spark.sql("select * from cms_stream").collect()}
-
-    batch = spark.createDataFrame(
-        [(f"k-{i % 40}",) for i in range(300)] * 2, "v string")
-    want = {(r["r"], r["cell"]): r["c"] for r in
-            batch.select(SF.explode(
-                cms_cells(SF.col("v"), 4, 256)).alias("rc"))
-            .groupBy(SF.col("rc.r").alias("r"),
-                     SF.col("rc.cell").alias("cell"))
-            .agg(SF.count(SF.lit(1)).alias("c")).collect()}
-    assert got == want
 
 
 def test_streaming_curation_parity_and_restart(spark, tmp_path):
@@ -453,105 +300,6 @@ def test_streaming_fuzzy_dedup_with_restart(spark, tmp_path):
     idx = spark.read.parquet(index_path)
     assert set(r["batch"] for r in idx.select("batch").distinct()
                .collect()) == {0, 1}
-
-
-def test_streaming_bloom_decontamination(spark, tmp_path):
-    """r9: the Bloom filter is the BOUNDED-state streaming membership
-    shape (vs curation_stream_strip's unbounded hash index): build the
-    bits once from the static eval set, persist as parquet, and probe
-    every micro-batch against it through annotate_stream's batch_fn —
-    zero false negatives across batches, state size capped at m."""
-    from pyspark.sql import functions as SF
-
-    from edsnlp_spark.operators.sketches import bloom_build, bloom_probe
-    from edsnlp_spark.streaming.pipeline_stream import annotate_stream
-
-    canary = "alpha beta gamma delta epsilon zeta eta theta"
-    ev = spark.createDataFrame(
-        [(0, f"eval doc with {canary} inside")], "doc_id long, text string")
-    tok = r"[^ ]+"
-    rx = "(?=(" + tok + (r" " + tok) * 7 + r"))" + tok + " "
-    sh = SF.explode(SF.array_distinct(
-        SF.regexp_extract_all("text", SF.lit(rx), SF.lit(1)))).alias("s")
-    bits_path = str(tmp_path / "bloom_bits")
-    bloom_build(ev.select(sh), "s", k=4, m=1 << 16) \
-        .write.parquet(bits_path)
-
-    src = tmp_path / "in"
-    src.mkdir()
-    write_events_jsonl(src / "b1.jsonl", [
-        {"doc_id": 1, "ts": "2024-01-01 10:00:00",
-         "text": f"contaminated {canary} page"},
-        {"doc_id": 2, "ts": "2024-01-01 10:00:00",
-         "text": "one two three four five six seven eight nine ten"},
-    ])
-
-    def probe_batch(batch):
-        bits = batch.sparkSession.read.parquet(bits_path)
-        shingled = batch.select(
-            "doc_id",
-            SF.explode(SF.array_distinct(SF.regexp_extract_all(
-                "text", SF.lit(rx), SF.lit(1)))).alias("s"))
-        return (
-            bloom_probe(shingled, "s", bits, k=4, m=1 << 16)
-            .groupBy("doc_id")
-            .agg(SF.max(SF.col("maybe_member")).alias("flagged"))
-        )
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    docs = spark.readStream.schema(
-        "doc_id long, ts timestamp, text string").json(str(src))
-    annotate_stream(docs, probe_batch, out, ckpt).awaitTermination(120)
-    got = {r["doc_id"]: r["flagged"]
-           for r in spark.read.parquet(out).collect()}
-    assert got == {1: True, 2: False}
-
-
-def test_text_index_stream_with_restart(spark, tmp_path):
-    """r10 session 2: text_index_stream builds the inverted index
-    incrementally under Structured Streaming — per-batch idempotent
-    postings partitions + additive stats rows.  After a checkpoint
-    RESTART adds batch 2, searches over the streamed index must be
-    bit-identical to an offline build_text_index over the union."""
-    from edsnlp_spark.operators.retrieval import (
-        bm25_topk_indexed, build_text_index)
-    from edsnlp_spark.streaming.pipeline_stream import text_index_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    ts = "2024-01-01 10:00:00"
-    b1 = [{"doc_id": 1, "ts": ts, "text": "spark fast spark"},
-          {"doc_id": 2, "ts": ts, "text": "slow table scan"}]
-    b2 = [{"doc_id": 3, "ts": ts, "text": "spark table"},
-          {"doc_id": 4, "ts": ts, "text": "merge sort merge"}]
-    write_events_jsonl(src / "batch1.jsonl", b1)
-    idx = str(tmp_path / "tix")
-    ckpt = str(tmp_path / "ckpt")
-
-    def stream():
-        docs = spark.readStream.schema(
-            "doc_id long, ts timestamp, text string").json(str(src))
-        return text_index_stream(docs, idx, ckpt, n_buckets=8)
-
-    stream().awaitTermination(120)
-    write_events_jsonl(src / "batch2.jsonl", b2)
-    stream().awaitTermination(120)
-
-    all_docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in b1 + b2],
-        "doc_id long, text string")
-    full = str(tmp_path / "full")
-    build_text_index(all_docs, full, n_buckets=8)
-    q = spark.createDataFrame(
-        [(0, ["spark", "table"]), (1, ["merge"])],
-        "query_id long, terms array<string>")
-
-    def rows(path):
-        return sorted((r.query_id, r.doc_id, r.rank, r.score)
-                      for r in bm25_topk_indexed(spark, path, q,
-                                                 k=4).collect())
-
-    assert rows(idx) == rows(full) and len(rows(idx)) > 0
 
 
 def test_components_stream_with_restart(spark, tmp_path):
