@@ -379,3 +379,46 @@ def binary_auc_calibration(scored: DataFrame, score_col: str = "score",
         .alias("pos_rate"),
     )
     return b.crossJoin(F.broadcast(auc))
+
+
+def ranking_metrics(ranked: DataFrame, qrels: DataFrame, k: int = 10,
+                    query_id_col: str = "query_id",
+                    id_col: str = "doc_id",
+                    rank_col: str = "rank") -> DataFrame:
+    """Retrieval-eval metrics per query over a ranking table and a
+    relevance-judgment table -> (query_id, n_rel, recall_at_k, mrr,
+    ndcg), all 4dp.  nDCG@k uses binary gains 1/log2(rank+1)
+    (Jarvelin & Kekalainen 2002) with an IDCG over the min(k, n_rel)
+    ideal prefix.  Sums fold a SORTED rank array, so they are
+    order-deterministic.  One join and one groupBy, both bounded by
+    queries * k.
+    """
+    if k < 1:
+        raise ValueError("ranking_metrics requires k >= 1")
+    ln2 = F.lit(0.6931471805599453)
+
+    topk = ranked.filter(F.col(rank_col) <= k).select(
+        F.col(query_id_col).alias("qid"), F.col(id_col).alias("did"),
+        F.col(rank_col).alias("r"))
+    rel = qrels.select(F.col(query_id_col).alias("qid"),
+                       F.col(id_col).alias("did"))
+    nrel = rel.groupBy("qid").agg(F.count(F.lit(1)).alias("n_rel"))
+    hits = (topk.join(rel, ["qid", "did"]).groupBy("qid")
+            .agg(F.sort_array(F.collect_list("r")).alias("rs")))
+
+    def dcg_fold(acc, r):
+        return acc + ln2 / F.log(r.cast("double") + F.lit(1.0))
+
+    dcg = F.aggregate(F.col("rs"), F.lit(0.0), dcg_fold)
+    ideal_n = F.least(F.lit(k), F.col("n_rel"))
+    idcg = F.aggregate(F.sequence(F.lit(1), ideal_n), F.lit(0.0), dcg_fold)
+    first = F.element_at("rs", 1)
+    return nrel.join(hits, "qid", "left").select(
+        F.col("qid").alias(query_id_col),
+        F.col("n_rel").cast("bigint"),
+        F.round(F.coalesce(F.size("rs"), F.lit(0)) / F.col("n_rel"), 4)
+        .alias("recall_at_k"),
+        F.round(F.when(first.isNull(), F.lit(0.0))
+                .otherwise(F.lit(1.0) / first), 4).alias("mrr"),
+        F.round(F.coalesce(dcg, F.lit(0.0)) / idcg, 4).alias("ndcg"),
+    )

@@ -815,6 +815,37 @@ def test_simhash_neardup_fuzz(spark, docs_tokens):
         simhash_neardup_pairs(df, max_hamming=2, bands=7)
 
 
+def test_ranking_metrics_hand_computed(spark):
+    """r7 (Jarvelin & Kekalainen 2002): recall@k / MRR / nDCG@k match a
+    hand-derived example, including a query with zero hits in the
+    top-k (all-zero metrics) and an IDCG prefix capped at n_rel."""
+    import math
+
+    from edsnlp_spark.operators.metrics import ranking_metrics
+
+    # q0: relevant docs {1, 2, 9}; hits at ranks 1 and 3
+    # q1: relevant {5}; never retrieved
+    # q2: relevant {7}; hit at rank 2
+    ranked = spark.createDataFrame(
+        [(0, 1, 1), (0, 4, 2), (0, 2, 3),
+         (1, 8, 1), (1, 6, 2),
+         (2, 3, 1), (2, 7, 2)],
+        "query_id long, doc_id long, rank long")
+    qrels = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 9), (1, 5), (2, 7)],
+        "query_id long, doc_id long")
+    got = {r["query_id"]: (r["n_rel"], r["recall_at_k"], r["mrr"],
+                           r["ndcg"])
+           for r in ranking_metrics(ranked, qrels, k=3).collect()}
+
+    def g(r):
+        return math.log(2) / math.log(r + 1)
+    ndcg0 = (g(1) + g(3)) / (g(1) + g(2) + g(3))
+    assert got[0] == (3, round(2 / 3, 4), 1.0, round(ndcg0, 4))
+    assert got[1] == (1, 0.0, 0.0, 0.0)
+    assert got[2] == (1, 1.0, 0.5, round(g(2) / g(1), 4))
+
+
 # ---- r8: sliding-window chunking vs Python model -------------------------
 
 @settings(max_examples=15, deadline=None)
