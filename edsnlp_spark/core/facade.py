@@ -15,8 +15,10 @@ Under the hood every pipe is a Transformer on the notes/entities planes;
 ``pipe`` wires matcher-style pipes (entity emitters) and qualifier-style
 pipes (entity annotators) in add order.  All ``QualifierEngine`` pipes
 are ONE plan (``operators/qualifiers.py`` ``qualify_all``): one labelled
-cue-dictionary scan, one boundary table per termination set, one join
-and one aggregate; other qualifier pipes (``eds.history_full``) follow.
+cue-dictionary scan, cached so it runs once per pass, one boundary table
+per termination set, one join and one aggregate; other qualifier pipes
+(``eds.history_full``) follow.  A pass persists three planes: the
+prepared notes, the raw cue scan and the boundaries.
 """
 
 from __future__ import annotations

@@ -31,7 +31,10 @@ Spark design (SURVEY.md §2.7): this is sessionization + an interval join,
 planned ONCE for all of a pipeline's engines (:func:`qualify_all`).
 - cue scan = ONE PhraseMatcher broadcast join over a labelled dictionary
   of (qualifier, cue_class, ngram) rows (+ one RegexMatcher per engine
-  for the regex classes, char spans re-aligned to token indices);
+  for the regex classes, char spans re-aligned to token indices).  The
+  raw scan is the cached plane, so it runs once per plan; its three
+  readers are the terminations (boundary cuts), the pseudo cues and the
+  real cues;
 - boundary ids = cut points -> intervals per note, in ONE table keyed by
   a set id per distinct (attr, termination terms);
 - entity -> boundary assignment = equi-join on note_id + OVERLAP
@@ -147,11 +150,11 @@ def _regex_cues(rx: DataFrame, notes: DataFrame) -> DataFrame:
 
 def _cue_table(engines: list[QualifierEngine], set_of: list[int],
                notes: DataFrame) -> DataFrame:
-    """(note_id, q, b_set, tok_start, tok_end, cue_class) pseudo-resolved
-    cue rows: ``q`` is the engine's index, ``b_set`` its boundary set.
-    Per attr, ONE PhraseMatcher scans every engine's phrase classes,
-    labelled ``q:b_set:cue_class``; a set's terminations enter once,
-    with a null ``q``."""
+    """(note_id, q, b_set, tok_start, tok_end, cue_class) raw cue rows,
+    pseudo cues and terminations included: ``q`` is the engine's index,
+    ``b_set`` its boundary set.  Per attr, ONE PhraseMatcher scans every
+    engine's phrase classes, labelled ``q:b_set:cue_class``; a set's
+    terminations enter once, with a null ``q``."""
     parts = []
     for attr in dict.fromkeys(e.attr for e in engines):
         terms = {}
@@ -181,9 +184,17 @@ def _cue_table(engines: list[QualifierEngine], set_of: list[int],
             rx = RegexMatcher(pats, attr=e.attr, span_type="cue", native=True)
             parts.append(_regex_cues(rx.entities(notes), notes)
                          .withColumns({"q": F.lit(q), "b_set": F.lit(s)}))
-    cues = functools.reduce(DataFrame.unionByName, parts)
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def _real_cues(cues: DataFrame,
+               engines: list[QualifierEngine]) -> DataFrame:
+    """The rows of a raw :func:`_cue_table` scan that qualify entities:
+    neither pseudo nor termination, and not shadowed by a pseudo cue of
+    their own qualifier."""
+    real = cues.filter(~F.col("cue_class").isin("pseudo", "termination"))
     if not any("pseudo" in e.cues for e in engines):
-        return cues
+        return real
     # filter_spans(label_to_remove="pseudo") semantics
     # (utils/filter.py:106-128), per (note, qualifier): one qualifier's
     # pseudo never shadows another's cue.  Spans sort by (length, -start)
@@ -196,7 +207,7 @@ def _cue_table(engines: list[QualifierEngine], set_of: list[int],
     # non-termination cue is then discarded iff it overlaps a KEPT
     # pseudo of its qualifier that sorts strictly before it.
     # Terminations were consumed earlier (negation.py:305) and never
-    # suppressed.
+    # suppressed, so they are not rows of this table.
     # Exact (length, start) ties between a pseudo and a real cue
     # (identical extents): the reference's stable sort falls back to
     # EDSPhraseMatcher emission order, and for one span carrying
@@ -212,28 +223,24 @@ def _cue_table(engines: list[QualifierEngine], set_of: list[int],
         pseudo.select(F.struct("note_id", "q").alias("note_id"),
                       "tok_start", "tok_end", "cue_class"),
         start_col="tok_start", end_col="tok_end", label_col="cue_class")
-    real = cues.filter(F.col("cue_class") != "pseudo")
-    term = real.filter(F.col("cue_class") == "termination")
-    nonterm = real.filter(F.col("cue_class") != "termination")
     p = kept_pseudo.select(
         F.col("note_id.note_id").alias("p_note"),
         F.col("note_id.q").alias("p_q"),
         F.col("tok_start").alias("p_s"), F.col("tok_end").alias("p_e"),
     )
-    r_len = nonterm["tok_end"] - nonterm["tok_start"]
+    r_len = real["tok_end"] - real["tok_start"]
     p_len = p["p_e"] - p["p_s"]
     wins = (p_len > r_len) | (
-        (p_len == r_len) & (p["p_s"] < nonterm["tok_start"]))
-    nonterm = nonterm.join(
+        (p_len == r_len) & (p["p_s"] < real["tok_start"]))
+    return real.join(
         p,
-        (nonterm["note_id"] == p["p_note"])
-        & (nonterm["q"] == p["p_q"])
-        & (nonterm["tok_start"] < p["p_e"])
-        & (p["p_s"] < nonterm["tok_end"])
+        (real["note_id"] == p["p_note"])
+        & (real["q"] == p["p_q"])
+        & (real["tok_start"] < p["p_e"])
+        & (p["p_s"] < real["tok_end"])
         & wins,
         "left_anti",
     )
-    return nonterm.unionByName(term)
 
 
 def _boundaries(notes: DataFrame, cues: DataFrame, n_sets: int) -> DataFrame:
@@ -338,19 +345,23 @@ def qualify_all(engines: list[QualifierEngine], notes: DataFrame,
     """entities (flat plane, with tok_start/tok_end) + one boolean column
     per engine, named after its qualifier, in ``engines`` order.
 
-    Plan shape matters at scale: each derived table (cues, boundaries)
-    is referenced more than once downstream, so we persist them —
-    otherwise the lazy subtree (tokenize -> scan -> window) is
+    Plan shape matters at scale: Spark shares no subplan between
+    references, so a derived table read more than once is persisted —
+    otherwise its lazy subtree (tokenize -> scan -> window) is
     re-planned and re-executed per reference, which blows up both
-    optimizer time and runtime (observed 100x on 500 docs).  Duplicate
-    entity rows (identical on all columns) collapse.
+    optimizer time and runtime (observed 100x on 500 docs).  Two planes
+    are persisted: the RAW cue scan (before pseudo resolution), whose
+    three readers are the terminations (:func:`_boundaries`), the
+    pseudo cues and the real cues (:func:`_real_cues`); and the
+    boundaries, read by the entity and the cue joins.  Duplicate entity
+    rows (identical on all columns) collapse.
     """
     # engines with the same attr and termination terms share one set
     ids: dict = {}
     set_of = [ids.setdefault((e.attr, tuple(sorted(
         e.cues.get("termination", ())))), len(ids)) for e in engines]
-    cues = caching.persist(_cue_table(engines, set_of, notes))
-    bounds = caching.persist(_boundaries(notes, cues, max(set_of) + 1))
+    scan = caching.persist(_cue_table(engines, set_of, notes))
+    bounds = caching.persist(_boundaries(notes, scan, max(set_of) + 1))
     # entity -> EVERY boundary it overlaps, in every set
     # (check_inclusion, utils/inclusion.py:4-25) — the grouped max
     # implements the reference's OR across boundaries
@@ -365,7 +376,7 @@ def qualify_all(engines: list[QualifierEngine], notes: DataFrame,
     ).drop("b_note", "b_start", "b_end")
     # cue -> the boundary of its engine's set containing its START (the
     # reference consumes matches by ``start <= s.start < end``)
-    cues_b = cues.filter(F.col("cue_class") != "termination") \
+    cues_b = _real_cues(scan, engines) \
         .join(bounds, ["note_id", "b_set"]) \
         .filter((F.col("tok_start") >= F.col("b_start"))
                 & (F.col("tok_start") < F.col("b_end"))) \

@@ -27,6 +27,9 @@ from ..operators.qualifiers import QualifierEngine
 from ..operators.sections import SectionSegmenter
 from ..operators.dates import FR_MONTHS, parse_verbose_date
 from ..operators.quantities import extract_quantity
+from ..operators.curation import (
+    _SPLIT_MOD, _SPLIT_MULT, _knuth32, curation_finalize,
+    curation_quality_gate)
 from ..functions import text as X
 
 # DuckDB token CTE: 1-based positions via zipped unnest.
@@ -1672,27 +1675,6 @@ FROM per GROUP BY doc_id
 
 # ---- deterministic split assignment (training-data pipeline) -----------
 
-_SPLIT_MULT = 2654435761  # Knuth multiplicative hash constant
-_SPLIT_MOD = 4294967296   # 2^32
-
-
-def _knuth32(col):
-    """``(doc_id * 2654435761) mod 2^32`` WITHOUT int64 overflow.
-
-    The naive product overflows int64 for doc_id above ~3.47e9 — Spark
-    (non-ANSI) wraps silently while DuckDB widens to int128, so the
-    "any engine derives the SAME split" determinism claim would break
-    exactly at 100 TB scale (ADVICE r3).  Splitting the 32-bit residue
-    into 16-bit halves keeps every intermediate < 2^49:
-    ``a*b mod 2^32 == ((a_hi*b mod 2^16)*2^16 + a_lo*b) mod 2^32``.
-    Identical to the plain product whenever it does not overflow, so
-    existing small-id hashes are unchanged."""
-    a = F.pmod(col, F.lit(_SPLIT_MOD))
-    hi = F.shiftright(a, 16) * F.lit(_SPLIT_MULT) % F.lit(65536)
-    lo = (a % F.lit(65536)) * F.lit(_SPLIT_MULT)
-    return (hi * F.lit(65536) + lo) % F.lit(_SPLIT_MOD)
-
-
 def _knuth32_sql(expr: str) -> str:
     """DuckDB rendering of :func:`_knuth32` (same 16-bit-split modmul,
     `//` integer division) so both engines agree for ANY int64 id."""
@@ -1736,52 +1718,6 @@ FROM assigned GROUP BY lang, split
 
 
 # ---- end-to-end corpus curation (composed pipeline) --------------------
-
-def curation_quality_gate(docs):
-    """Per-row curation stage 1 (pure projection + filter — streams
-    unchanged): Gopher-ish quality gate, length + lexical diversity.
-    Factored out of :func:`corpus_curation` so the EXACT same stage
-    runs in the streaming curation pipeline
-    (streaming/pipeline_stream.py curation_stream, VERDICT r6 #7)."""
-    toks = F.split("text", " ")
-    return docs.select(
-        "doc_id", "text", F.size(toks).alias("n_tokens"),
-        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("__dr"),
-        *[c for c in docs.columns if c not in ("doc_id", "text")],
-    ).filter((F.col("n_tokens") >= 30) & (F.col("__dr") >= 0.3)) \
-     .drop("__dr")
-
-
-def curation_finalize(kept, extra_cols=()):
-    """Per-row curation stage 3 (pure projection — streams unchanged):
-    deterministic split assignment + PII redaction.  Shared by
-    :func:`corpus_curation` (batch), :func:`corpus_curation_strip`
-    (batch, span-granular dedup) and curation_stream (streaming); the
-    dedup stage BETWEEN gate and finalize is the only part whose
-    mechanism differs (batch: min-doc_id per content hash OR Lee et al.
-    span removal; streaming: first-arrival
-    dropDuplicatesWithinWatermark).  ``extra_cols`` pass through
-    untouched (e.g. the strip variant's n_removed — carrying it here
-    keeps the upstream plan referenced ONCE instead of re-executing its
-    subtree for a metadata join).
-
-    Emits ``n_redactions`` alongside ``text_redacted`` so a consumer
-    whose final projection is metadata-only still EXECUTES the PII
-    scan (ADVICE r8 #3: with text_redacted alone, Catalyst pruned the
-    scrubber out of both curation queries' plans and bench timings)."""
-    from ..operators.pii import PIIScrubber
-    scrub = PIIScrubber(text_col="text")
-    u = _knuth32(F.col("doc_id"))
-    split = (
-        F.when(u < F.lit(int(0.95 * _SPLIT_MOD)), F.lit("train"))
-        .when(u < F.lit(int(0.975 * _SPLIT_MOD)), F.lit("val"))
-        .otherwise(F.lit("test")))
-    return scrub.transform(
-        kept.select("doc_id", "text", "n_tokens", split.alias("split"),
-                    scrub.match_count(F.col("text"))
-                    .cast("bigint").alias("n_redactions"),
-                    *extra_cols))
-
 
 def corpus_curation(spark, sf_dir):
     """A full FineWeb-style curation pass as ONE composed DataFrame

@@ -568,8 +568,9 @@ def test_knuth32_matches_bigint_reference(spark, doc_id):
     """The 16-bit-split modmul must equal true big-integer
     (id * 2654435761) mod 2^32 for ANY int64 id — including ids above
     ~3.47e9 where the naive product overflows int64 (ADVICE r3)."""
-    from edsnlp_spark.queries.textops import (_knuth32, _knuth32_sql,
-                                              _SPLIT_MULT, _SPLIT_MOD)
+    from edsnlp_spark.operators.curation import (_knuth32, _SPLIT_MULT,
+                                                 _SPLIT_MOD)
+    from edsnlp_spark.queries.textops import _knuth32_sql
     import duckdb
     expected = (doc_id * _SPLIT_MULT) % _SPLIT_MOD  # Python bigint
     got_spark = spark.createDataFrame(
@@ -689,40 +690,6 @@ def test_strip_duplicated_spans_fuzz(spark, docs_tokens, n):
     got = {r["doc_id"]: (r["text_clean"], r["n_removed"])
            for r in strip_duplicated_spans(df, n=n).collect()}
     assert got == want
-
-
-# ---- single-space token count in one regex pass --------------------------
-
-
-def test_bm25_dl_regexp_count_equivalence(spark, sf_dir):
-    """regexp_count(text, ' ') + 1 counts the tokens of a single-space
-    split without re-tokenizing the corpus with
-    size(split(lower(text), ' ', -1)).
-    Pin the per-row equality of the two expressions over the real
-    corpus AND a hostile edge set (empties, space runs, tabs/newlines,
-    trailing spaces, Unicode chars with expanding lowercase mappings
-    like U+0130, nulls)."""
-    import pyspark.sql.functions as F
-
-    edge = spark.createDataFrame(
-        [(0, ""), (1, " "), (2, "  "), (3, "a b"), (4, "a  b "),
-         (5, "\ta\nb "), (6, "İ STRASSE ß"), (7, None),
-         (8, "x" * 500 + " " + "y" * 500)],
-        "doc_id long, text string")
-    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    for df in (edge, corpus):
-        bad = df.select(
-            (F.size(F.split(F.lower("text"), " ", -1))
-             != F.regexp_count(F.col("text"), F.lit(" ")) + F.lit(1))
-            .alias("neq")).filter(F.coalesce(F.col("neq"), F.lit(False)))
-        assert bad.count() == 0
-        # NULL text: both sides must be NULL (excluded from the sum)
-    nulls = edge.filter(F.col("text").isNull()).select(
-        F.size(F.split(F.lower("text"), " ", -1)).alias("a"),
-        (F.regexp_count(F.col("text"), F.lit(" ")) + F.lit(1)).alias("b"))
-    row = nulls.collect()[0]
-    assert row["a"] is None and row["b"] is None
 
 
 @settings(max_examples=12, deadline=None)

@@ -43,6 +43,15 @@ HOSTILE = [
     "Absence d'œdème. Le patient ne présente ni œdème ni cirrhose.",
     'Le patient dit "je n\'ai pas de covid" et signale une tuberculose.',
     "Sa mère a eu un cancer. Tuberculose, le patient ne",
+    # hypothesis' pseudo "même si" is also a default termination: the
+    # cut stays (terminations are exempt from pseudo suppression), so
+    # negation stops there and hypothesis' "si" is shadowed
+    "Pas de cancer même si covid.",
+    # the same with an apostrophe and no closing period
+    "Le patient n'a pas de cancer même si covid",
+    # a note that ends right after the pseudo/termination cue
+    "Tuberculose, pas de cancer même si",
+    "même si",
 ]
 
 
@@ -83,3 +92,75 @@ def test_shared_plan_matches_chained_qualifiers(spark):
     # "Patient sans risque de pneumonie."
     (r,) = [r for r in got if r.note_id == 10_002]
     assert r.negation is True
+
+    # the pseudo/termination overlap notes, by hand: the entity before
+    # "même si" is negated, the one after it is neither negated (the
+    # cut holds) nor hypothetical (the pseudo shadows "si")
+    by_note = collections.defaultdict(dict)
+    for r in got:
+        by_note[r.note_id][r.lexical_variant] = (r.negation, r.hypothesis)
+    base = 10_000 + HOSTILE.index("Pas de cancer même si covid.")
+    assert by_note[base] == {"cancer": (True, False),
+                             "covid": (False, False)}
+    assert by_note[base + 1] == {"cancer": (True, False),
+                                 "covid": (False, False)}
+    assert by_note[base + 2] == {"Tuberculose": (False, False),
+                                 "cancer": (True, False)}
+    assert base + 3 not in by_note
+
+
+def _plan_nodes(df):
+    """Physical nodes of ``df``'s plan, each cached plane's plan counted
+    once however often it is read: what one action over ``df`` runs."""
+    jvm = df.sparkSession._jvm
+    nodes, seen = [], set()
+
+    def walk(plan):
+        kind = plan.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return walk(plan.inputPlan())
+        if kind == "InMemoryTableScanExec":
+            cache = plan.relation().cacheBuilder()
+            if jvm.System.identityHashCode(cache) not in seen:
+                seen.add(jvm.System.identityHashCode(cache))
+                walk(cache.cachedPlan())
+            return
+        nodes.append(plan)
+        children = plan.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return nodes
+
+
+def _ngram_explodes(df):
+    # PhraseMatcher's n-gram explode is the Generate that outputs ``g``
+    return sum(
+        1 for n in _plan_nodes(df)
+        if n.getClass().getSimpleName() == "GenerateExec"
+        and [n.generatorOutput().apply(i).name()
+             for i in range(n.generatorOutput().size())] == ["g"])
+
+
+def test_one_pass_scans_the_cues_once(spark):
+    """The raw cue scan is the cached plane, so over one facade pass the
+    labelled cue n-gram explode and negation's mapInPandas regex each
+    appear once, although the terminations, the pseudo cues and the
+    real cues all read the scan."""
+    notes = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(HOSTILE)],
+        "note_id long, note_text string")
+    nlp = es.blank()
+    nlp.add_pipe("eds.matcher", terms=TERMS)
+    for q in ("eds.negation", "eds.hypothesis", "eds.family"):
+        nlp.add_pipe(q)
+    fused = nlp.pipe(notes)
+    explodes = _ngram_explodes(fused)
+    regexes = [n.getClass().getSimpleName() for n in _plan_nodes(fused)] \
+        .count("MapInPandasExec")
+    # the entity matcher's own explode, on the same prepared plane
+    emitter = registry.create("eds.matcher", terms=TERMS) \
+        .entities(nlp.prepare(notes))
+    assert explodes - _ngram_explodes(emitter) == 1
+    assert regexes == 1

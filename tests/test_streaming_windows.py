@@ -106,7 +106,7 @@ def test_streaming_curation_parity_and_restart(spark, tmp_path):
     text is dropped).  The accumulated output equals the batch path
     (gate -> min-id dedup -> finalize) on the same data — arrival order
     is id order here, where first-arrival == min-id."""
-    from edsnlp_spark.queries.textops import (
+    from edsnlp_spark.operators.curation import (
         curation_finalize, curation_quality_gate)
     from edsnlp_spark.streaming.pipeline_stream import curation_stream
 
